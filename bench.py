@@ -8,10 +8,12 @@ footer caches, whole-stage-codegen compilation), then a timed pass taking
 the best of 2 runs per query — steady-state wall time, robust to transient
 machine load.  Compilation cost is a per-plan constant that amortizes to
 zero in the long-running-job regime this engine targets; the cold pass is
-still reported on stderr for transparency.
+still reported on stderr for transparency.  Every frame an operator held
+(``caches.hold``) is released after each query's runs: the best-of runs
+of one query share them, no other query or pass reuses them.
 
 Drift attribution: any headline query moving >15% vs the prior round's
-recorded BENCH_r*.json triggers a same-session A/B — the prior round's
+recorded BENCH_r*.json on the same core count triggers a same-session A/B — the prior round's
 commit is checked out into a worktree and re-timed NOW (tools/ab_bench.py,
 same protocol), so box drift (prior-code-now ≈ current-code-now) is
 separable from real regressions (prior code still fast, current slow).
@@ -20,6 +22,7 @@ Verdicts land in BENCH_DETAIL.json["ab_check"].
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import re
@@ -31,36 +34,43 @@ _REPO = str(Path(__file__).resolve().parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
+from ironbeam_spark.caches import release_all_caches  # noqa: E402
 from ironbeam_spark.session import get_spark  # noqa: E402
 from ironbeam_spark.suite import QUERIES  # noqa: E402
 
 
-def _release_checkpoint_registries() -> None:
-    """Drop references to the graph/scan-family localCheckpoint tables
-    BETWEEN headline queries.  localCheckpoints are not in CacheManager,
-    so a fresh fn() invocation never reuses them — releasing them cannot
-    change timings, but NOT releasing them lets _PERSISTED_RANK_TABLES
-    grow by 2 per pagerank invocation x 3 invocations (and likewise for
-    triangles' edge sets), pinning executor storage the next query needs
-    (round-7 verdict ask #5; blocks free on GC of the Python reference).
-    CacheManager-persisted tables (shingles, codecs) deliberately stay:
-    the timed pass's plan-matched reuse of them IS the warm protocol."""
-    import gc
+def _prior_bench(cpus: int) -> tuple[Path, str] | None:
+    """The newest committed BENCH_r*.json recorded on ``cpus`` cores, with
+    the commit that last touched it; None when there is none.
 
-    from ironbeam_spark.operators.pagerank import release_rank_caches
-    from ironbeam_spark.operators.scan import release_scan_caches
-    from ironbeam_spark.operators.triangles import release_edge_caches
+    A run on another core count is no baseline: BENCH_r13_c8.json (8
+    cores) ties BENCH_r13.json (32 cores) on round number.  Only committed
+    files count: the current round's own BENCH file is often untracked
+    when bench re-runs mid-round, and comparing against it would find no
+    drift (round-10 ADVICE)."""
+    import subprocess
 
-    release_scan_caches()
-    release_rank_caches()
-    release_edge_caches()
-    gc.collect()
+    def _round_no(p: Path) -> int:
+        m = re.search(r"r(\d+)", p.name)
+        return int(m.group(1)) if m else -1
+
+    for cand in sorted(Path(_REPO).glob("BENCH_r*.json"), key=_round_no, reverse=True):
+        if json.loads(cand.read_text()).get("cpus") != cpus:
+            continue
+        commit = subprocess.run(
+            ["git", "log", "-n", "1", "--format=%H", "--", cand.name],
+            cwd=_REPO, capture_output=True, text=True,
+        ).stdout.strip()
+        if commit:
+            return cand, commit
+    return None
 
 
 def _ab_drift_check(
-    names: list[str], times: dict[str, float], sf_dir: str
+    names: list[str], times: dict[str, float], sf_dir: str, cpus: int
 ) -> dict:
-    """Compare ``times`` against the newest BENCH_r*.json; for queries
+    """Compare ``times`` against the newest BENCH_r*.json run on the same
+    core count (:func:`_prior_bench`); for queries
     drifting >15% either way, time the prior round's commit AND the
     current tree in two identical back-to-back subprocesses
     (``tools/ab_bench.py``, same timing protocol) and attribute each
@@ -75,26 +85,10 @@ def _ab_drift_check(
     import shutil
     import subprocess
 
-    def _round_no(p: Path) -> int:
-        m = re.search(r"r(\d+)", p.name)
-        return int(m.group(1)) if m else -1
-
-    # newest COMMITTED bench: the current round's own BENCH file is often
-    # untracked when bench re-runs mid-round — comparing against it would
-    # find no drift (same numbers) or, worse, `git log` would return no
-    # commit and hard-skip the whole check (round-10 ADVICE).  Walk newest
-    # round first and take the first file git knows a commit for.
-    prior_file = commit = None
-    for cand in sorted(Path(_REPO).glob("BENCH_r*.json"), key=_round_no, reverse=True):
-        c = subprocess.run(
-            ["git", "log", "-n", "1", "--format=%H", "--", cand.name],
-            cwd=_REPO, capture_output=True, text=True,
-        ).stdout.strip()
-        if c:
-            prior_file, commit = cand, c
-            break
-    if prior_file is None:
-        return {"skipped": "no committed BENCH_r*.json"}
+    found = _prior_bench(cpus)
+    if found is None:
+        return {"skipped": f"no committed BENCH_r*.json run on {cpus} cpus"}
+    prior_file, commit = found
     prior = json.loads(prior_file.read_text())
     # the driver wraps bench.py's stdout payload under "parsed"
     prev_q = (prior.get("queries") or (prior.get("parsed") or {}).get("queries")) or {}
@@ -271,7 +265,8 @@ def main() -> None:
         QUERIES[name].fn(spark, sf_dir).count()
         cold[name] = round(time.perf_counter() - t0, 3)
         print(f"# cold {name}: {cold[name]:.3f}s", file=sys.stderr)
-        _release_checkpoint_registries()
+        release_all_caches()
+        gc.collect()
 
     # pre-calibration sits AFTER the cold pass (JVM fully warmed) so the
     # pre/post pair brackets exactly the timed window it normalizes —
@@ -304,7 +299,8 @@ def main() -> None:
         times[name] = round(best, 3)
         total += best
         print(f"# {name}: {best:.3f}s ({n} rows, {runs} runs)", file=sys.stderr)
-        _release_checkpoint_registries()
+        release_all_caches()
+        gc.collect()
 
     cal_post = _calibration_sec(spark, sf_dir)
     print(f"# calibration (post): {cal_post:.4f}s", file=sys.stderr)
@@ -323,7 +319,9 @@ def main() -> None:
     ab_check = None
     if os.environ.get("SPARK_GRAFT_AB", "1") != "0":
         try:
-            ab_check = _ab_drift_check(names, times, sf_dir)
+            ab_check = _ab_drift_check(
+                names, times, sf_dir, spark.sparkContext.defaultParallelism
+            )
         except Exception as e:  # the A/B is diagnostics, never a bench failure
             print(f"# ab_check failed: {e}", file=sys.stderr)
             ab_check = {"error": str(e)}
@@ -369,13 +367,6 @@ def main() -> None:
     if os.environ.get("SPARK_GRAFT_SF1", "1") != "0" and sf == 0.1:
         from tools.scale_corpus import ensure_scaled
 
-        # drop the sf0.1 block's persisted operator intermediates first:
-        # the 10x ladder should measure the sf1 corpus, not compete with
-        # pinned sf0.1 shingle/posting/scan caches for executor memory
-        from ironbeam_spark.caches import release_all_caches
-
-        release_all_caches()
-
         factor = 10
         # full bench set (round-4 verdict ask #5): super-linear drift in
         # ANY headline query is visible, not just the 8 heaviest
@@ -387,7 +378,8 @@ def main() -> None:
         ratios: dict[str, float] = {}
         for name in ladder:  # warm-up pass
             QUERIES[name].fn(spark, sf1_dir).count()
-            _release_checkpoint_registries()
+            release_all_caches()
+            gc.collect()
         for name in ladder:
             best, n = None, 0
             for _ in range(2):
@@ -395,7 +387,8 @@ def main() -> None:
                 n = QUERIES[name].fn(spark, sf1_dir).count()
                 dt = time.perf_counter() - t0
                 best = dt if best is None else min(best, dt)
-            _release_checkpoint_registries()
+            release_all_caches()
+            gc.collect()
             times1[name] = round(best, 3)
             ratios[name] = round(best / (factor * times[name]), 3)
             print(
@@ -424,14 +417,6 @@ def main() -> None:
         payload["queries"] = {"see": "BENCH_DETAIL.json"}
         line = json.dumps(payload)
     print(line)
-
-    # hygiene: the dedup/similarity operators persist intermediate tables
-    # (shingles, posting lists) that CacheManager reuses across the timed
-    # passes; release them at exit so a long-lived driver process doesn't
-    # keep sf0.1 + sf1 cache copies pinned in storage
-    from ironbeam_spark.caches import release_all_caches
-
-    release_all_caches()
 
 
 if __name__ == "__main__":

@@ -1,35 +1,51 @@
-"""One release point for every operator family's checkpoint registry.
+"""The one owner of operator-materialized state.
 
-Several operator families lazily ``localCheckpoint`` a table that many
-plan subtrees reread (scan stats, shingle postings, pagerank edge/node
-frames, the graph family's canonical edge sets) and track it in a
-module-level registry so a long-lived process can release the blocks
-between queries — ``unpersist`` is a no-op for localCheckpoints, the
-blocks free on GC once the last reference drops.  Every gate/bench
-process used to import and call the five ``release_*`` helpers by hand;
-each new registry then had to be threaded into every call site, and a
-missed site silently reintroduced the unbounded-storage leak.  This is
-the single canonical release: add new registries HERE, nowhere else.
+Who calls :func:`hold`: every operator or suite query that ``persist``s,
+``cache``s or ``localCheckpoint``s an intermediate which several plan
+subtrees reread (shingle tables, posting lists, scan slices, pagerank
+edge/node frames, canonical edge sets, decoded codec lines, a reused CTE,
+a dead-letter classification).  It wraps the frame where it is made —
+``df = caches.hold(df.persist(...))`` — and keeps no list of its own.
+The returned plan is lazy, so the code that built it cannot release it.
+
+When release happens: :func:`release_all_caches` unpersists and drops
+every held frame.  The process that runs a query calls it once the result
+is materialized (collected, counted or written): ``bench.py`` and
+``perfbench`` between queries, ``tools/check.py`` and
+``tools/arrow_check.py`` after each compare.  Results stay correct after
+release because every consumer replays lineage
+(``tests/test_recompute.py``).
+
+Why an unreleased frame is a bug: Spark's CacheManager matches persisted
+plans structurally, so an entry that outlives its query is reused by the
+next structurally equal plan — in this run or a later one in the same
+session.  That is a result cache across invocations, which
+``plancache``'s contract forbids, and it pins executor storage the next
+query needs.  ``tests/test_oracle_dtypes.py`` asserts that every oracle
+query leaves CacheManager empty after release.  localCheckpoint blocks
+are not in CacheManager (``unpersist`` is a no-op for them); they free
+once the last reference is garbage-collected, which dropping them here
+allows.
 """
 
 from __future__ import annotations
 
-__all__ = ["release_all_caches"]
+from pyspark.sql import DataFrame
+
+__all__ = ["hold", "release_all_caches"]
+
+_HELD: list[DataFrame] = []
+
+
+def hold(df: DataFrame) -> DataFrame:
+    """Register a persisted or checkpointed frame for release; returns it."""
+    _HELD.append(df)
+    return df
 
 
 def release_all_caches() -> int:
-    """Release every tracked checkpoint/persist registry; returns the
-    number of frames released (diagnostic)."""
-    from ironbeam_spark.operators.dedup import release_shingle_caches
-    from ironbeam_spark.operators.pagerank import release_rank_caches
-    from ironbeam_spark.operators.scan import release_scan_caches
-    from ironbeam_spark.operators.triangles import release_edge_caches
-    from ironbeam_spark.sources.compression import release_codec_caches
-
-    return (
-        release_shingle_caches()
-        + release_scan_caches()
-        + release_rank_caches()
-        + release_edge_caches()
-        + release_codec_caches()
-    )
+    """Unpersist and drop every held frame; returns how many there were."""
+    n = len(_HELD)
+    while _HELD:
+        _HELD.pop().unpersist()
+    return n

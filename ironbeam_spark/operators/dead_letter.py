@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
+from ironbeam_spark import caches
+
 __all__ = [
     "map_catching",
     "partition_tags",
@@ -54,12 +56,13 @@ def map_catching(
     otherwise (the declarative analogue of a closure returning ``Result``).
     Returns ``(good, dead)``; ``dead`` keeps the original element plus the
     ``error`` column, exactly the reference's ``DeadLetter<T>`` shape.
-    ``cache=True`` evaluates the classification once for both consumers; at
-    larger scale callers persist to storage instead.
+    ``cache=True`` evaluates the classification once for both consumers
+    (held until ``caches.release_all_caches()``); at larger scale callers
+    persist to storage instead.
     """
     classified = df.withColumn("_error", error)
     if cache:
-        classified = classified.cache()
+        classified = caches.hold(classified.cache())
     good = classified.where(F.col("_error").isNull()).drop("_error")
     for name, expr in out_cols.items():
         good = good.withColumn(name, expr)
@@ -80,7 +83,7 @@ def partition_tags(
     classify / N-filter shape the reference builds via dominator CSE."""
     tagged = df.withColumn("_tag", tag)
     if cache:
-        tagged = tagged.cache()
+        tagged = caches.hold(tagged.cache())
     return {t: tagged.where(F.col("_tag") == t).drop("_tag") for t in tags}
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ironbeam_spark import caches
 from ironbeam_spark.functions.text import token_int, tokens
 from ironbeam_spark.plancache import memo_expr
 from ironbeam_spark.scale import ensure_min_parallelism
@@ -49,7 +50,6 @@ __all__ = [
     "minhash_candidates",
     "minhash_dedup_pairs",
     "minhash_pairs_from_shingles",
-    "release_shingle_caches",
     "simhash",
     "simhash_pairs",
     "jaccard",
@@ -405,20 +405,6 @@ def minhash_candidates(
     return pairs
 
 
-# shingle tables persisted by minhash_dedup_pairs, awaiting caller release
-_PERSISTED_SHINGLE_TABLES: list[DataFrame] = []
-
-
-def release_shingle_caches() -> int:
-    """Unpersist every shingle table cached by :func:`minhash_dedup_pairs`.
-    Call after materializing dedup results in a long-lived session, else
-    repeated runs accumulate cached blocks until eviction pressure."""
-    n = len(_PERSISTED_SHINGLE_TABLES)
-    while _PERSISTED_SHINGLE_TABLES:
-        _PERSISTED_SHINGLE_TABLES.pop().unpersist()
-    return n
-
-
 def jaccard(set_a: Column, set_b: Column, assume_distinct: bool = True) -> Column:
     """Exact Jaccard similarity of two arrays.
 
@@ -463,7 +449,7 @@ def minhash_dedup_pairs(
         raise ValueError(f"k={k} must be divisible by bands={bands}")
     rows_per_band = k // bands
     docs = ensure_min_parallelism(docs)
-    base = (
+    base = caches.hold(
         docs.select(
             F.col(id_col),
             hashed_word_shingles(text_col, shingle_words).alias("shingles"),
@@ -472,16 +458,12 @@ def minhash_dedup_pairs(
         # once instead of re-shingling — the analog of the reference's
         # dominator-CSE cache (src/runner.rs:257-337).  MEMORY_AND_DISK spills
         # rather than OOMs when the shingle table outgrows executor memory.
-        # The returned plan is lazy, so this function cannot unpersist itself.
-        # NOTE: Spark's CacheManager matches persisted plans STRUCTURALLY, so
-        # repeated calls with identical inputs reuse the first call's cached
-        # table (measured: releasing between bench passes cost ~2x on the
-        # minhash query) — the accumulated entries are live cache, not leaks.
-        # Sessions cycling many DIFFERENT inputs should still call
-        # release_shingle_caches() after materializing each result.
+        # The returned plan is lazy, so this function cannot unpersist itself;
+        # an entry left after the result is materialized is a leak, not warm
+        # cache: CacheManager matches persisted plans STRUCTURALLY, so the next
+        # call with identical inputs would reuse this call's table.
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _PERSISTED_SHINGLE_TABLES.append(base)
     # The empty-set filter sits ABOVE the persist on purpose: shingling is an
     # interpreted higher-order expression (transform/array_distinct lambdas
     # never enter whole-stage codegen), and a size() filter placed below the
@@ -939,7 +921,7 @@ def prefix_filter_candidates(
     # The 1e-9 nudge guards FP error in t·n the SAFE way: it can only LOWER
     # α (longer prefix → extra candidates), never raise it (missed pairs).
     alpha = F.ceil(F.lit(float(threshold)) * F.col("_n") - F.lit(1e-9)).cast("long")
-    pref = (
+    pref = caches.hold(
         ranked.withColumn("_rk", F.row_number().over(w))
         .where(F.col("_rk") <= F.col("_n") - alpha + F.lit(1))
         .select(*blocks, id_col, "_n", "_tok")
@@ -949,7 +931,6 @@ def prefix_filter_candidates(
         # reuse does not unify them (measured: 2× the window passes)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _PERSISTED_SHINGLE_TABLES.append(pref)
     a = pref.alias("a")
     b = pref.alias("b")
     na, nb = F.col("a._n"), F.col("b._n")
@@ -1000,10 +981,10 @@ def set_similarity_join(
         sets = sets.withColumn("_blk", F.lit(1))
         blocks = ["_blk"]
         block_cols = ("_blk",)
-    base = sets.select(
-        *blocks, F.col(id_col), F.col(set_col).alias("_set")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED_SHINGLE_TABLES.append(base)
+    base = caches.hold(
+        sets.select(*blocks, F.col(id_col), F.col(set_col).alias("_set"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     # empty sets can never reach a positive threshold, and J(∅,∅) is 0/0 —
     # which ANSI mode (Spark 4 default) raises on.  The filter sits ABOVE
     # the persist so it tests the materialized array; below the cache it
@@ -1020,17 +1001,16 @@ def set_similarity_join(
     # so combined storage ≈ one more copy of base) because AQE does not
     # reuse the cache-scan→broadcast-join→filter pipeline across those
     # consumers — each was re-planned and re-executed (measured 5×).
-    small = (
+    small = caches.hold(
         tagged.where(F.col("_bn") <= small_block_cap)
         .drop("_bn")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    large = (
+    large = caches.hold(
         tagged.where(F.col("_bn") > small_block_cap)
         .drop("_bn")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _PERSISTED_SHINGLE_TABLES.extend((small, large))
 
     # small blocks: direct all-pairs verify (equi-join on block cols)
     a = small.alias("a")
@@ -1142,9 +1122,11 @@ def set_similarity_search(
         # filter through a non-deterministic projection), so the
         # interpreted set-building lambdas still evaluate exactly once per
         # row in the parallel post-Exchange stage, with zero bytes cached.
-        qbase = queries.select(
-            *blocks, F.col(id_col).alias("query_id"), F.col(set_col).alias("_set")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        qbase = caches.hold(
+            queries.select(
+                *blocks, F.col(id_col).alias("query_id"), F.col(set_col).alias("_set")
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+        )
         cset_guarded = (
             F.when(F.monotonically_increasing_id() < F.lit(-1), F.lit(None))
             .otherwise(F.col(set_col))
@@ -1152,7 +1134,6 @@ def set_similarity_search(
         cbase = corpus.select(
             *blocks, F.col(id_col).alias("corpus_id"), cset_guarded.alias("_set")
         )
-        _PERSISTED_SHINGLE_TABLES.append(qbase)
         # no explicit empty-set filter: explode() of an empty array emits no
         # rows, so empty sets can never reach the aggregate
         qtok = qbase.select(
@@ -1193,10 +1174,10 @@ def set_similarity_search(
         *blocks, F.col(id_col).alias("_qid"), F.col(set_col).alias("_set"),
         F.lit(1).alias("_side"),
     )
-    both = q.unionByName(c).withColumn("_n", F.size("_set")).persist(
-        StorageLevel.MEMORY_AND_DISK
+    both = caches.hold(
+        q.unionByName(c).withColumn("_n", F.size("_set"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _PERSISTED_SHINGLE_TABLES.append(both)
     # empty-set filter above the persist: below the cache it would be
     # predicate-pushed beneath the parallelizing Exchange, serially
     # re-evaluating the interpreted set expression (see minhash_dedup_pairs)
@@ -1211,7 +1192,7 @@ def set_similarity_search(
     )
     w = W.partitionBy(*blocks, "_side", "_qid").orderBy("_df", "_tok")
     alpha = F.ceil(F.lit(float(threshold)) * F.col("_n") - F.lit(1e-9)).cast("long")
-    pref = (
+    pref = caches.hold(
         ranked.withColumn("_rk", F.row_number().over(w))
         .where(F.col("_rk") <= F.col("_n") - alpha + F.lit(1))
         .select(*blocks, "_qid", "_side", "_n", "_tok")
@@ -1219,7 +1200,6 @@ def set_similarity_search(
         # shared explode→df-window→rank pipeline would otherwise run twice)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _PERSISTED_SHINGLE_TABLES.append(pref)
     a = pref.where(F.col("_side") == 0).alias("a")
     b = pref.where(F.col("_side") == 1).alias("b")
     na, nb = F.col("a._n"), F.col("b._n")
@@ -1282,12 +1262,11 @@ def winnow_match_pairs(
     ranked = fps.withColumn("_df", F.count(F.lit(1)).over(W.partitionBy("fp")))
     # persisted: both self-join sides consume the rare-fingerprint postings
     # (pushdown barrier + single evaluation, see prefix_filter_candidates)
-    rare = (
+    rare = caches.hold(
         ranked.where(F.col("_df") <= max_df)
         .select(id_col, "fp")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _PERSISTED_SHINGLE_TABLES.append(rare)
     a, b = rare.alias("a"), rare.alias("b")
     return (
         a.join(b, on="fp")

@@ -52,9 +52,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ironbeam_spark import caches
 from ironbeam_spark.operators.dedup import (
     MINHASH_FAMILY,
-    _PERSISTED_SHINGLE_TABLES,
     guard_band_buckets,
     hashed_word_shingles,
     jaccard,
@@ -246,16 +246,15 @@ def minhash_dedup_incremental(
     # the delta's shingle table feeds FOUR subtrees (signature pass, its own
     # verify side twice — vs-corpus and vs-batch — and the vs-batch "first"
     # side): persist once instead of re-running the interpreted shingle
-    # expression per subtree, same rationale and registry as
-    # minhash_dedup_pairs (release via caches.release_all_caches).
+    # expression per subtree, same rationale as minhash_dedup_pairs.
     # Parallelism is raised on the RAW docs so the parallelizing exchange
     # sits BELOW the interpreted shingle projection — a single-file delta
     # must not shingle on one core (the measured ordering from
     # minhash_dedup_pairs).
-    new_base = _shingled(
-        ensure_min_parallelism(new_docs), id_col, text_col, shingle_words
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED_SHINGLE_TABLES.append(new_base)
+    new_base = caches.hold(
+        _shingled(ensure_min_parallelism(new_docs), id_col, text_col, shingle_words)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     signed = new_base.select(
         F.col(id_col), minhash_signature_from_ints(F.col("shingles"), k).alias("sig")
     )
@@ -269,14 +268,13 @@ def minhash_dedup_incremental(
     # read twice (the semi-prune of corpus_docs AND the verify join) — persist
     # so the delta-vs-index band join runs once, not per subtree; candidate
     # volume is the LSH-bounded pair set, orders smaller than either input
-    cand_corpus = (
+    cand_corpus = caches.hold(
         new_keys.withColumnRenamed(id_col, "_new_id")
         .join(index.withColumnRenamed(id_col, "_old_id"), on="band_key")
         .select("_new_id", "_old_id")
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _PERSISTED_SHINGLE_TABLES.append(cand_corpus)
     # new-vs-new: self-join within the delta, keep-first orientation
     a = new_keys.withColumnRenamed(id_col, "_first_id").alias("a")
     b = new_keys.withColumnRenamed(id_col, "_new_id").alias("b")

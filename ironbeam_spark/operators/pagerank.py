@@ -37,21 +37,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ironbeam_spark import caches
 from ironbeam_spark.operators.checkpoint import CheckpointPolicy
 
-__all__ = ["pagerank", "release_rank_caches"]
-
-# checkpointed edge/node tables awaiting caller release (same contract as
-# operators.scan._PERSISTED_SCAN_TABLES: dropping the reference lets the
-# ContextCleaner reclaim the blocks; gates call release_* between queries)
-_PERSISTED_RANK_TABLES: list[DataFrame] = []
-
-
-def release_rank_caches() -> int:
-    n = len(_PERSISTED_RANK_TABLES)
-    while _PERSISTED_RANK_TABLES:
-        _PERSISTED_RANK_TABLES.pop().unpersist()
-    return n
+__all__ = ["pagerank"]
 
 
 def pagerank(
@@ -135,8 +124,7 @@ def pagerank(
     # wins locally; on a real cluster with billions of nodes (no
     # broadcast), flip e/nodes to .repartition(key).persist() so
     # co-partitioning reaches the planner — the loop is agnostic to which.
-    e = e.localCheckpoint(eager=False)
-    _PERSISTED_RANK_TABLES.append(e)
+    e = caches.hold(e.localCheckpoint(eager=False))
 
     outdeg = e.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("outdeg")
@@ -157,7 +145,7 @@ def pagerank(
             .join(outdeg, on="node", how="left")
             .localCheckpoint(eager=False)
         )
-    _PERSISTED_RANK_TABLES.append(nodes)
+    caches.hold(nodes)
     n_nodes = nodes.count()  # bounded scalar: drives the base-rank literal
     if n_nodes == 0:
         return nodes.select("node", F.lit(0).cast("long").alias("rank"))

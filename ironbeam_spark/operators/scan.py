@@ -83,22 +83,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from ironbeam_spark import caches
+
 __all__ = ["global_running_sum", "pack_layout"]
 
 _INTEGRAL = ("bigint", "int", "smallint", "tinyint")
-
-# checkpointed intermediates awaiting caller release (same contract as
-# operators.dedup._PERSISTED_SHINGLE_TABLES; dropping the reference lets
-# Spark's ContextCleaner reclaim the checkpoint blocks).  Only the
-# stamped fallback path checkpoints; the bucketed path never caches.
-_PERSISTED_SCAN_TABLES: list[DataFrame] = []
-
-
-def release_scan_caches() -> int:
-    n = len(_PERSISTED_SCAN_TABLES)
-    while _PERSISTED_SCAN_TABLES:
-        _PERSISTED_SCAN_TABLES.pop().unpersist()
-    return n
 
 
 def global_running_sum(
@@ -424,10 +413,10 @@ def _running_sum_stamped(
     # nondeterminism-flagged, so Catalyst cannot push it below the range
     # exchange; it is evaluated once, during the checkpoint's
     # materialization job, and is frozen thereafter.)
-    stamped = parted.withColumn(
-        "__scan_pid", F.spark_partition_id()
-    ).localCheckpoint(eager=True)
-    _PERSISTED_SCAN_TABLES.append(stamped)
+    stamped = caches.hold(
+        parted.withColumn("__scan_pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
+    )
 
     # Exclusive prefix offsets over the per-slice totals; the same pass
     # carries the join-back uniqueness check when payload columns exist

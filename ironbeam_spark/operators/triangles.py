@@ -35,29 +35,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ironbeam_spark import caches
+
 __all__ = [
     "triangle_count",
     "node_clustering",
     "canonical_edges",
     "materialized_edges",
-    "release_edge_caches",
 ]
-
-# checkpointed canonical-edge frames awaiting caller release (same contract
-# as operators.scan._PERSISTED_SCAN_TABLES / pagerank's rank caches: a
-# long-lived gate or bench process calls release_edge_caches() between
-# queries so repeated triangle/clustering/link-prediction invocations don't
-# accumulate lazy-localCheckpoint blocks until garbage collection — block
-# loss after eviction fails jobs loudly, and pinned blocks crowd executor
-# storage the next query needs)
-_PERSISTED_EDGE_TABLES: list[DataFrame] = []
-
-
-def release_edge_caches() -> int:
-    n = len(_PERSISTED_EDGE_TABLES)
-    while _PERSISTED_EDGE_TABLES:
-        _PERSISTED_EDGE_TABLES.pop().unpersist()
-    return n
 
 
 def canonical_edges(
@@ -93,15 +78,14 @@ def materialized_edges(
     """Canonical edge set, lineage-truncated per policy (default =
     AfterEveryBarrier, the :func:`dedup_components` convention).  Lazy
     checkpoint: the first action over the wedge plan materializes it.
-    The checkpointed frame is tracked in ``_PERSISTED_EDGE_TABLES`` for
-    explicit release via :func:`release_edge_caches`."""
+    A checkpointed frame is held by :func:`ironbeam_spark.caches.hold`."""
     from ironbeam_spark.operators.checkpoint import CheckpointPolicy
 
     policy = checkpoint_policy or CheckpointPolicy.after_every_barrier()
     canonical = canonical_edges(df, src_col, dst_col, input_canonical)
     edges = policy.checkpoint(canonical, eager=False)
     if edges is not canonical:  # the policy fired -> checkpoint blocks exist
-        _PERSISTED_EDGE_TABLES.append(edges)
+        caches.hold(edges)
     return edges
 
 

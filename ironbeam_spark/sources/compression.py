@@ -33,13 +33,14 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ironbeam_spark import caches
+
 __all__ = [
     "Codec",
     "register_codec",
     "codec_for",
     "registered_codecs",
     "read_lines",
-    "release_codec_caches",
     "write_lines",
     "read_jsonl_compressed",
     "write_jsonl_compressed",
@@ -99,21 +100,6 @@ register_codec("gzip", "gz", _gzip.compress, _gzip.decompress)
 register_codec("bz2", "bz2", _bz2.compress, _bz2.decompress)
 register_codec("xz", "xz", _lzma.compress, _lzma.decompress)
 register_codec("none", "txt", lambda b: b, lambda b: b)
-
-
-# decoded-line frames persisted by the schema-inference path; drained by
-# release_codec_caches() (same pattern as dedup's shingle-table registry)
-_PERSISTED_LINE_TABLES: list[DataFrame] = []
-
-
-def release_codec_caches() -> int:
-    """Unpersist every decoded-line cache created by the inference readers;
-    returns how many were released.  Call from long-lived drivers after the
-    inferred frames are no longer needed."""
-    n = len(_PERSISTED_LINE_TABLES)
-    while _PERSISTED_LINE_TABLES:
-        _PERSISTED_LINE_TABLES.pop().unpersist()
-    return n
 
 
 def _split_lines(text: str) -> list[str]:
@@ -360,10 +346,11 @@ def read_csv_compressed(
         return lines.select(F.from_csv("value", ddl).alias("c")).select("c.*")
     # inference path needs the decoded lines THREE times (header probe,
     # inference scan, final parse) — persist so non-splittable shards
-    # decompress once, not per pass.  The cache lives as long as the
-    # returned frame's lineage (inference at scale should pass a schema).
-    lines = files.mapInPandas(make_decode(True), "value string, header string").persist()
-    _PERSISTED_LINE_TABLES.append(lines)
+    # decompress once, not per pass.  The cache lives until
+    # caches.release_all_caches() (inference at scale should pass a schema).
+    lines = caches.hold(
+        files.mapInPandas(make_decode(True), "value string, header string").persist()
+    )
     first_header = lines.select("header").first()
     rdd = lines.select("value").rdd.map(lambda r: r.value)
     if has_headers and first_header is not None:

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ironbeam_spark import caches
 from ironbeam_spark.functions.exact import cents, sum_money
 from ironbeam_spark.functions.time import ts_lit
 from ironbeam_spark.operators.dead_letter import partition_tags, try_map
@@ -784,7 +785,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= ts_lit("1996-01-01")) & (F.col("l_shipdate") < ts_lit("1996-04-01"))
     )
     supp = read_table(spark, sf_dir, "supplier")
-    revenue = (
+    revenue = caches.hold(
         li.groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(F.sum(cents("l_extendedprice") * (100 - cents("l_discount"))).alias("rev_scaled"))
         .persist()
@@ -1007,7 +1008,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
     supp = read_table(spark, sf_dir, "supplier").where(F.col("s_nationkey") == 3)
-    val = (
+    val = caches.hold(
         li.join(F.broadcast(supp.select("s_suppkey")), li.l_suppkey == F.col("s_suppkey"))
         .groupBy("l_partkey")
         .agg(F.sum(cents("l_extendedprice")).alias("value_cents"))
@@ -1083,7 +1084,7 @@ def q20_excess_stock_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     red = read_table(spark, sf_dir, "part").where(F.col("p_name").like("red %")).select("p_partkey")
     supp = read_table(spark, sf_dir, "supplier")
-    shipped = (
+    shipped = caches.hold(
         li.join(F.broadcast(red), li.l_partkey == F.col("p_partkey"))
         .groupBy("l_suppkey", "l_partkey")
         .agg(F.sum(F.round("l_quantity").cast("long")).alias("qty"))

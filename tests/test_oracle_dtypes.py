@@ -11,9 +11,10 @@ query's result schema, column by column (tools/oracle_dtypes.py).
 The Spark side needs only ``.schema`` and the DuckDB side a ``LIMIT 0``
 type-check, so the registry-wide sweep is cheap.  (Not strictly job-free:
 iterative queries run bounded setup jobs — a node ``count()``, eager
-policy checkpoints — during DataFrame CONSTRUCTION, and several track
-frames in checkpoint registries; each case releases them so the sweep's
-storage stays bounded by one query's working set.)
+policy checkpoints — during DataFrame CONSTRUCTION, and several hold
+frames through ``caches.hold``; each case releases them so the sweep's
+storage stays bounded by one query's working set, and asserts that the
+release left no CacheManager entry behind.)
 """
 
 from __future__ import annotations
@@ -40,6 +41,8 @@ def _oracle_names():
 def test_oracle_dtypes_match_spark(name, spark, duck):
     from ironbeam_spark.caches import release_all_caches
 
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # entries left by other tests are not this query's
     q = QUERIES[name]
     try:
         sschema = q.fn(spark, SF_SMOKE).schema
@@ -47,6 +50,10 @@ def test_oracle_dtypes_match_spark(name, spark, duck):
         assert not mm, f"{name}: oracle output dtype drift: {mm}"
     finally:
         release_all_caches()
+    # a persist that caches.hold does not own outlives its query, and since
+    # CacheManager matches plans structurally, the next run of the same
+    # query would reuse its result
+    assert cache_manager.isEmpty(), f"{name}: CacheManager entry left after release"
 
 
 def test_lint_fires_on_uncast_hugeint(spark, duck):

@@ -17,18 +17,15 @@ import lzma
 
 from pyspark.sql import functions as F
 
+from ironbeam_spark.caches import release_all_caches
 from ironbeam_spark.operators.dedup import (
     char_ngrams,
     dedup_components,
     minhash_dedup_pairs,
-    release_shingle_caches,
     set_similarity_join,
     set_similarity_search,
 )
-from ironbeam_spark.sources.compression import (
-    read_csv_compressed,
-    release_codec_caches,
-)
+from ironbeam_spark.sources.compression import read_csv_compressed
 
 TEXTS = [
     (i, f"the quick brown fox {i % 7} jumps over the lazy dog {i % 3} again")
@@ -46,14 +43,15 @@ def test_minhash_pairs_survive_cache_release(spark):
         (r.id_a, r.id_b, round(r.jaccard_sim, 12))
         for r in minhash_dedup_pairs(docs, "doc_id", "body", threshold=0.1).collect()
     )
-    release_shingle_caches()
+    release_all_caches()
     out = minhash_dedup_pairs(docs, "doc_id", "body", threshold=0.1)
-    release_shingle_caches()  # force: every consumer replays lineage
+    release_all_caches()  # force: every consumer replays lineage
     got = sorted(
         (r.id_a, r.id_b, round(r.jaccard_sim, 12)) for r in out.collect()
     )
     assert got == ref and len(ref) > 0
-    release_shingle_caches()
+    release_all_caches()
+    assert release_all_caches() == 0  # the registry really drains
 
 
 def test_set_similarity_join_survives_cache_release(spark):
@@ -62,14 +60,14 @@ def test_set_similarity_join_survives_cache_release(spark):
         (r.id_a, r.id_b, round(r.jaccard_sim, 12))
         for r in set_similarity_join(g, "doc_id", "grams", 0.3).collect()
     )
-    release_shingle_caches()
+    release_all_caches()
     out = set_similarity_join(g, "doc_id", "grams", 0.3)
-    release_shingle_caches()
+    release_all_caches()
     got = sorted(
         (r.id_a, r.id_b, round(r.jaccard_sim, 12)) for r in out.collect()
     )
     assert got == ref and len(ref) > 0
-    release_shingle_caches()
+    release_all_caches()
 
 
 def test_set_similarity_search_survives_cache_release(spark):
@@ -82,15 +80,15 @@ def test_set_similarity_search_survives_cache_release(spark):
                 q, g, 0.3, "doc_id", "grams", strategy=strategy
             ).collect()
         )
-        release_shingle_caches()
+        release_all_caches()
         out = set_similarity_search(q, g, 0.3, "doc_id", "grams", strategy=strategy)
-        release_shingle_caches()
+        release_all_caches()
         got = sorted(
             (r.query_id, r.corpus_id, round(r.jaccard_sim, 12))
             for r in out.collect()
         )
         assert got == ref and len(ref) > 0, strategy
-        release_shingle_caches()
+        release_all_caches()
 
 
 def test_dedup_components_survive_cache_release(spark):
@@ -102,7 +100,7 @@ def test_dedup_components_survive_cache_release(spark):
         (r.node, r.component) for r in dedup_components(pairs).collect()
     )
     out = dedup_components(pairs)
-    release_shingle_caches()
+    release_all_caches()
     got = sorted((r.node, r.component) for r in out.collect())
     assert got == ref and len(ref) > 0
 
@@ -113,12 +111,12 @@ def test_csv_inference_survives_cache_release(spark, tmp_path):
     with open(d / "part.xz", "wb") as f:
         f.write(lzma.compress(b"a,b\n1,x\n2,y\n3,z\n"))
     ref = sorted((r.a, r.b) for r in read_csv_compressed(spark, str(d), codec="xz").collect())
-    release_codec_caches()
+    release_all_caches()
     out = read_csv_compressed(spark, str(d), codec="xz")
-    release_codec_caches()  # inference path re-decodes per pass — must agree
+    release_all_caches()  # inference path re-decodes per pass — must agree
     got = sorted((r.a, r.b) for r in out.collect())
     assert got == ref == [(1, "x"), (2, "y"), (3, "z")]
-    release_codec_caches()
+    release_all_caches()
 
 
 def test_dsir_weights_model(spark):
@@ -184,12 +182,12 @@ def test_pretrain_pipeline_survives_cache_release(spark):
     sf = "/root/testdata/sf0.001"
     fn = QUERIES["q_pretrain_pipeline"].fn
     ref = sorted(map(tuple, fn(spark, sf).collect()))
-    release_shingle_caches()
+    release_all_caches()
     out = fn(spark, sf)
-    release_shingle_caches()
+    release_all_caches()
     got = sorted(map(tuple, out.collect()))
     assert got == ref and len(ref) > 0
-    release_shingle_caches()
+    release_all_caches()
 
 
 def test_dsir_empty_target_and_empty_corpus(spark):
@@ -276,9 +274,9 @@ def test_incremental_dedup_survives_cache_release(spark):
          None if r.jaccard_sim is None else round(r.jaccard_sim, 12))
         for r in run().collect()
     )
-    release_shingle_caches()
+    release_all_caches()
     out = run()
-    release_shingle_caches()  # force: classification replays lineage
+    release_all_caches()  # force: classification replays lineage
     got = sorted(
         (r.doc_id, r.status, r.dup_of,
          None if r.jaccard_sim is None else round(r.jaccard_sim, 12))
@@ -286,4 +284,4 @@ def test_incremental_dedup_survives_cache_release(spark):
     )
     assert got == ref and len(ref) > 0
     assert any(s != "unique" for _, s, _, _ in ref)  # non-vacuous fixture
-    release_shingle_caches()
+    release_all_caches()

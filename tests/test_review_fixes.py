@@ -27,9 +27,9 @@ def test_scan_rejects_null_order_keys_with_payload(spark):
     assert global_running_sum(narrow, ["k"], "v", "cum").count() == 2
     # the stamped calls above checkpointed slices — honor the release
     # contract so blocks don't bleed into later tests
-    from ironbeam_spark.operators.scan import release_scan_caches
+    from ironbeam_spark.caches import release_all_caches
 
-    release_scan_caches()
+    release_all_caches()
     # string keys route to the bucketed path since round 7: no rejoin, so
     # NULL keys + payload are legal — NULLS FIRST, payload intact
     sdf = spark.createDataFrame(

@@ -263,7 +263,8 @@ def test_asof_forward_equals_backward_on_negated_time(spark):
 def test_global_running_sum_matches_single_partition(spark):
     """Two-pass distributed scan == the single-partition reference answer,
     regardless of input partitioning (prefix sums are boundary-invariant)."""
-    from ironbeam_spark.operators.scan import global_running_sum, release_scan_caches
+    from ironbeam_spark.caches import release_all_caches
+    from ironbeam_spark.operators.scan import global_running_sum
 
     rows = [(i, (i * 37) % 101) for i in range(5000)]
     for nparts in (1, 7, 32):
@@ -277,7 +278,7 @@ def test_global_running_sum_matches_single_partition(spark):
             acc += v
             want[k] = acc
         assert got == want, nparts
-    release_scan_caches()
+    release_all_caches()
 
 
 def test_global_running_sum_plan_has_no_global_window(spark):
@@ -325,7 +326,8 @@ def test_global_running_sum_recompute_invariant(spark):
     pass and the scan pass could pair offsets with re-sampled ranges."""
     from pyspark import StorageLevel
 
-    from ironbeam_spark.operators.scan import global_running_sum, release_scan_caches
+    from ironbeam_spark.caches import release_all_caches
+    from ironbeam_spark.operators.scan import global_running_sum
 
     rows = [(i, (i * 53) % 97) for i in range(3000)]
     src = (
@@ -347,14 +349,15 @@ def test_global_running_sum_recompute_invariant(spark):
         want[k] = acc
     assert first == want
     assert second == want
-    release_scan_caches()
+    release_all_caches()
 
 
 def test_global_running_sum_payload_join_back(spark):
     """Payload columns beyond (order, value) never enter the checkpoint:
     the narrow scan result joins back on the order key, values and payload
     intact (round-6: full-row checkpoints are corpus-width writes at scale)."""
-    from ironbeam_spark.operators.scan import global_running_sum, release_scan_caches
+    from ironbeam_spark.caches import release_all_caches
+    from ironbeam_spark.operators.scan import global_running_sum
 
     rows = [(i, (i * 37) % 101, f"payload-{i}") for i in range(2000)]
     df = spark.createDataFrame(rows, "k long, v long, tag string").repartition(9)
@@ -365,7 +368,7 @@ def test_global_running_sum_payload_join_back(spark):
         want[k] = acc
     assert {r.k: r.running_sum for r in out} == want
     assert {r.k: r.tag for r in out} == {k: t for k, _, t in rows}
-    release_scan_caches()
+    release_all_caches()
 
 
 def test_global_running_sum_payload_requires_unique_order(spark):
@@ -378,13 +381,14 @@ def test_global_running_sum_payload_requires_unique_order(spark):
     arbitrary-but-fixed relative order."""
     import pytest
 
-    from ironbeam_spark.operators.scan import global_running_sum, release_scan_caches
+    from ironbeam_spark.caches import release_all_caches
+    from ironbeam_spark.operators.scan import global_running_sum
 
     frows = [(float(i % 50), i, f"p{i}") for i in range(500)]  # dup float keys
     fdf = spark.createDataFrame(frows, "k double, v long, tag string")
     with pytest.raises(ValueError, match="uniquely key"):
         global_running_sum(fdf, ["k"], "v")
-    release_scan_caches()
+    release_all_caches()
     # the same tied keys WITHOUT payload stay legal (documented contract)
     narrow = fdf.select("k", "v")
     total = sum(v for _, v, _ in frows)
@@ -392,7 +396,7 @@ def test_global_running_sum_payload_requires_unique_order(spark):
         F.max("running_sum")
     ).collect()[0][0]
     assert got == total
-    release_scan_caches()
+    release_all_caches()
     # string keys + ties + payload: legal on the round-7 bucketed path
     srows = [(f"k{i % 50:02d}", i, f"p{i}") for i in range(500)]
     sdf = spark.createDataFrame(srows, "k string, v long, tag string")
