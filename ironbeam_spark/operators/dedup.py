@@ -517,7 +517,6 @@ def minhash_pairs_from_shingles(
     return verified
 
 
-_LOCAL_SOLVE_CONF = "ironbeam.components.local_solve_max_edges"
 # symmetrized edge rows; ~1 MB collected worst case.  Sized so the label
 # LITERAL stays cheap to analyze (≤ ~20k structs — measured ~0.2 s to
 # build + fold at 5k rows, superlinear past ~40k), not by driver memory.
@@ -588,7 +587,7 @@ def dedup_components(
     max_iter: int = 25,
     checkpoint_policy=None,
     dedup_edges: bool = True,
-    local_solve_max_edges: int | None = None,
+    local_solve_max_edges: int = _LOCAL_SOLVE_DEFAULT,
 ) -> DataFrame:
     """Duplicate *groups* from near-dup pairs: connected components by
     iterative min-label propagation.  Output: ``(node, component)`` where
@@ -627,8 +626,7 @@ def dedup_components(
     round REGARDLESS of size.  The first action here is therefore a
     bounded ``limit(B+1).collect()`` probe of the (lazily checkpointed)
     edge table: when every edge fits under ``local_solve_max_edges``
-    (default 10,000 symmetrized rows ≈ 1 MB collected; conf
-    ``ironbeam.components.local_solve_max_edges``, 0 disables), the
+    (default 10,000 symmetrized rows ≈ 1 MB collected; 0 disables), the
     components are solved on the driver with union-find — bit-identical
     min-id labels, pinned by ``test_dedup_components_local_solve_*`` —
     and returned as one pure-JVM literal frame, replacing R blocking
@@ -679,15 +677,6 @@ def dedup_components(
     edges = policy.checkpoint(sym, eager=False)
 
     # -- local-solve short-circuit (see docstring) ----------------------
-    if local_solve_max_edges is None:
-        try:
-            local_solve_max_edges = int(
-                pairs.sparkSession.conf.get(
-                    _LOCAL_SOLVE_CONF, str(_LOCAL_SOLVE_DEFAULT)
-                )
-            )
-        except Exception:
-            local_solve_max_edges = _LOCAL_SOLVE_DEFAULT
     node_type = edges.schema["src"].dataType.simpleString()
     if local_solve_max_edges > 0 and node_type in (
         "tinyint", "smallint", "int", "bigint", "string"

@@ -221,8 +221,6 @@ def arrow_pair_cosine(
     return df.mapInArrow(score, out_schema)
 
 
-_SCORER_CONF = "ironbeam.ann.pair_scorer"
-_SCORER_BYTES_CONF = "ironbeam.ann.pair_scorer_arrow_min_bytes_per_task"
 # Catalyst-ESTIMATED pair bytes per task above which the Arrow scorer wins.
 # Calibrated from the r12 stage-isolated crossover (~3k pairs/task: the
 # mapInArrow boundary costs a flat ~11 ms/task vs ~4 µs/pair interpreted)
@@ -241,28 +239,43 @@ def _auto_pair_impl(joined: DataFrame, impl: str) -> str:
     measurement showed each side wins by >1.5x on its own side of ~3k
     pairs/task, and a fixed default is wrong at one scale or the other
     (guide §1.2: the bench layout sits at ~600 pairs/task, production
-    shards at 10^4-10^6).  Resolution order: explicit ``impl=`` argument >
-    ``ironbeam.ann.pair_scorer`` conf > size estimate from the optimized
-    plan's stats (driver-side, no job).  Estimator failure falls back to
-    Arrow — the scale-safe side."""
+    shards at 10^4-10^6).  An explicit ``impl=`` argument wins; otherwise
+    the size estimate comes from the optimized plan's stats (driver-side,
+    no job).  Estimator failure falls back to Arrow — the scale-safe
+    side."""
     if impl in ("expr", "arrow"):
         return impl
-    spark = joined.sparkSession
-    try:
-        knob = spark.conf.get(_SCORER_CONF, "auto")
-    except Exception:
-        knob = "auto"
-    if knob in ("expr", "arrow"):
-        return knob
     try:
         size = int(
             joined._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-        par = max(spark.sparkContext.defaultParallelism, 1)
-        thr = int(spark.conf.get(_SCORER_BYTES_CONF, str(_SCORER_DEFAULT_BYTES)))
-        return "arrow" if size / par >= thr else "expr"
+        par = max(joined.sparkSession.sparkContext.defaultParallelism, 1)
+        return "arrow" if size / par >= _SCORER_DEFAULT_BYTES else "expr"
     except Exception:
         return "arrow"
+
+
+def _score_pairs(joined: DataFrame, impl: str) -> DataFrame:
+    """Cosine-score the ``(query_id, q_vec, neighbor_id, c_vec)`` pairs of
+    ``joined`` into ``(query_id, neighbor_id, cos_sim)`` with the scorer
+    :func:`_auto_pair_impl` resolves ``impl`` to."""
+    if _auto_pair_impl(joined, impl) == "expr":
+        return joined.select(
+            "query_id",
+            "neighbor_id",
+            # cosine_safe (not cosine): degenerate vectors (zero-norm or
+            # empty — ivf_assign_cells keeps them in a cell, LSH hashes them
+            # to a bucket like any other) score NULL and are dropped by
+            # _rank_topk, the same contract as the arrow path; the unsafe
+            # quotient would raise DIVIDE_BY_ZERO under ANSI mode
+            cosine_safe(F.col("q_vec"), F.col("c_vec")).alias("cos_sim"),
+        )
+    return arrow_pair_cosine(
+        joined.select("query_id", "q_vec", "neighbor_id", "c_vec"),
+        "q_vec",
+        "c_vec",
+        ["query_id", "neighbor_id"],
+    )
 
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -329,23 +342,7 @@ def brute_force_topk(
         .crossJoin(c)
         .where(F.col("query_id") != F.col("neighbor_id"))
     )
-    if _auto_pair_impl(joined, impl) == "expr":
-        scored = joined.select(
-            "query_id",
-            "neighbor_id",
-            # cosine_safe (not cosine): degenerate vectors score NULL and
-            # are dropped by _rank_topk — the identical contract as the
-            # arrow path; the unsafe quotient would raise under ANSI
-            cosine_safe(F.col("q_vec"), F.col("c_vec")).alias("cos_sim"),
-        )
-    else:
-        scored = arrow_pair_cosine(
-            joined.select("query_id", "q_vec", "neighbor_id", "c_vec"),
-            "q_vec",
-            "c_vec",
-            ["query_id", "neighbor_id"],
-        )
-    return _rank_topk(scored, k)
+    return _rank_topk(_score_pairs(joined, impl), k)
 
 
 def _side_array(side_df: DataFrame, id_col: str, vec_col: str, out: str) -> DataFrame:
@@ -515,25 +512,7 @@ def ivf_ann_topk(
         # at most once — a distinct() here re-shuffled the largest
         # intermediate for nothing (opt r12, guide §2.4)
     )
-    if _auto_pair_impl(joined, impl) == "expr":
-        scored = joined.select(
-            "query_id",
-            "neighbor_id",
-            # cosine_safe: ivf_assign_cells deliberately keeps zero-norm /
-            # empty vectors (coalesce(-2) cell assignment), so a degenerate
-            # vector CAN reach this join — the unsafe quotient would raise
-            # ANSI DIVIDE_BY_ZERO and kill the job; NULL scores are dropped
-            # by _rank_topk so such vectors simply never rank.
-            cosine_safe(F.col("q_vec"), F.col("c_vec")).alias("cos_sim"),
-        )
-    else:
-        scored = arrow_pair_cosine(
-            joined.select("query_id", "q_vec", "neighbor_id", "c_vec"),
-            "q_vec",
-            "c_vec",
-            ["query_id", "neighbor_id"],
-        )
-    return _rank_topk(scored, k)
+    return _rank_topk(_score_pairs(joined, impl), k)
 
 
 def lsh_ann_topk(
@@ -566,23 +545,7 @@ def lsh_ann_topk(
         F.broadcast(qb).join(cb, on="bucket")
         .where(F.col("query_id") != F.col("neighbor_id"))
     )
-    if _auto_pair_impl(joined, impl) == "expr":
-        scored = joined.select(
-            "query_id",
-            "neighbor_id",
-            # cosine_safe for the same reason as ivf_ann_topk: zero-norm
-            # vectors hash to a bucket like any other, and the unsafe
-            # quotient raises under ANSI mode instead of being dropped
-            cosine_safe(F.col("q_vec"), F.col("c_vec")).alias("cos_sim"),
-        )
-    else:
-        scored = arrow_pair_cosine(
-            joined.select("query_id", "q_vec", "neighbor_id", "c_vec"),
-            "q_vec",
-            "c_vec",
-            ["query_id", "neighbor_id"],
-        )
-    return _rank_topk(scored, k)
+    return _rank_topk(_score_pairs(joined, impl), k)
 
 
 def lsh_near_dup_pairs(

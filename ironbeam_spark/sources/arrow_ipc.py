@@ -18,10 +18,9 @@ operator's output batches, cast once per batch to the session's expected
 Arrow schema (timezone/width normalization).  Contrast ``sources/avro.py``
 / ``sources/msgpack.py``, whose codecs necessarily walk Python values.
 
-Scale: one self-contained shard per partition, written via hidden-temp +
-atomic ``os.rename`` (the same task-commit contract as
-``sources/compression.write_text_shards`` — concurrent speculative
-attempts each rename a complete payload); readers enumerate shards with
+Scale: one self-contained shard per partition, written through the shared
+shard protocol (:mod:`ironbeam_spark.sources.shards`: hidden temp + atomic
+rename); readers enumerate shards with
 ``binaryFile`` (globs, multi-dir), so both sides are
 embarrassingly parallel with zero shuffle.  A shard is one IPC *file*
 (footer + per-batch offsets), so a future split-capable reader can seek
@@ -30,7 +29,6 @@ individual batches without parsing the whole shard.
 
 from __future__ import annotations
 
-import os
 from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,68 +44,37 @@ def write_arrow_ipc_py(
     compression: str | None = None,
 ) -> int:
     """Partition-parallel Arrow IPC sink: one Feather-V2 shard per non-empty
-    partition (``part-NNNNN.arrow``), atomic rename commit.  Returns rows
-    written.  ``compression`` is an IPC buffer codec (``"zstd"``/``"lz4"``)
-    or None; mode semantics follow DataFrameWriter (see
-    :func:`sources.avro.write_avro_py`)."""
-    import uuid
-
-    from pyspark.sql import functions as F
+    partition (``part-NNNNN.arrow``) through the shared shard protocol
+    (:mod:`ironbeam_spark.sources.shards`: mode semantics, atomic commit).
+    Returns rows written.  ``compression`` is an IPC buffer codec
+    (``"zstd"``/``"lz4"``) or None."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from ironbeam_spark.collection import PCollection
+    from ironbeam_spark.sources.shards import shard_sink
 
-    modes = {"overwrite", "append", "error", "errorifexists", "ignore"}
-    if mode not in modes:
-        raise ValueError(
-            f"write_arrow_ipc mode must be one of {sorted(modes)}, got {mode!r}"
-        )
     d = df.df if isinstance(df, PCollection) else df
     # resolved ONCE on the driver: every shard carries the identical schema
     # (timestamps as tz-aware UTC micros), so readers never reconcile
     # per-shard drift
     arrow_schema = to_arrow_schema(d.schema)
-    os.makedirs(path, exist_ok=True)
-    existing = [f for f in os.listdir(path) if f.endswith(".arrow")]
-    if mode == "overwrite":
-        # also sweep crashed-attempt temp files so they can't accumulate
-        for f in existing + [
-            f for f in os.listdir(path) if f.endswith(".arrow.tmp")
-        ]:
-            os.remove(os.path.join(path, f))
-    elif mode in ("error", "errorifexists") and existing:
-        raise FileExistsError(f"arrow shards already exist at {path} (mode={mode})")
-    elif mode == "ignore" and existing:
-        return 0
-    token = f"-{uuid.uuid4().hex[:8]}" if mode == "append" else ""
 
-    def write_partition(batches: Iterator) -> Iterator:
-        import uuid as _uuid
-
+    def encode(batches: Iterator, fh) -> int:
         import pyarrow as pa
         import pyarrow.ipc as ipc
-        from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
         opts = (
             ipc.IpcWriteOptions(compression=compression) if compression else None
         )
         n = 0
         writer = None
-        # per-ATTEMPT temp name (same task-commit contract as
-        # compression._commit_shard): racing speculative attempts write
-        # separate files and each rename a COMPLETE payload over the same
-        # final name — a pid-only temp would interleave their writes
-        tmp = os.path.join(
-            path, f".part-{pid:05d}{token}-{_uuid.uuid4().hex[:8]}.arrow.tmp"
-        )
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             if writer is None:
-                # lazy open: empty partitions write NO shard (matching the
-                # avro/msgpack sinks), so skew never yields footer-only files
-                writer = ipc.new_file(tmp, arrow_schema, options=opts)
+                # lazy open: an empty partition encodes nothing and so
+                # commits no footer-only shard
+                writer = ipc.new_file(fh, arrow_schema, options=opts)
             # cast: Spark hands batches in its own arrow types (e.g. session
             # tz); normalize to the driver-resolved schema before writing
             writer.write_batch(
@@ -118,16 +85,9 @@ def write_arrow_ipc_py(
             n += batch.num_rows
         if writer is not None:
             writer.close()
-            # atomic commit: concurrent speculative attempts each rename a
-            # COMPLETE payload over the same final name
-            os.rename(tmp, os.path.join(path, f"part-{pid:05d}{token}.arrow"))
-        yield pa.RecordBatch.from_pylist(
-            [{"n": n}], schema=pa.schema([("n", pa.int64())])
-        )
+        return n
 
-    counts = d.mapInArrow(write_partition, "n long")
-    written = counts.agg(F.sum("n")).collect()[0][0]
-    return int(written or 0)
+    return shard_sink(d, path, "arrow", mode, encode)[0]
 
 
 def read_arrow_ipc_py(

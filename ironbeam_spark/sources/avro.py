@@ -19,18 +19,18 @@ Avro *Java* reference implementation already on Spark's classpath
 (``avro-1.12.1.jar``, driven over py4j) in both directions.
 
 Scale shape mirrors msgpack: the writer emits one byte-independent
-``part-NNNNN.avro`` per partition (files are the parallelism unit — each is
-a self-contained OCF), the reader schedules one Arrow-batched decode task
-per file via ``binaryFile``.  A deployment with the spark-avro jar can flip
-to the native reader without changing call sites (``sources/io.read_avro``
-tries the jar first).
+``part-NNNNN.avro`` per partition through the shared shard protocol
+(:mod:`ironbeam_spark.sources.shards`; files are the parallelism unit —
+each is a self-contained OCF), the reader schedules one Arrow-batched
+decode task per file via ``binaryFile``.  A deployment with the
+spark-avro jar can flip to the native reader without changing call sites
+(``sources/io.read_avro`` tries the jar first).
 """
 
 from __future__ import annotations
 
 import io
 import json
-import os
 import struct
 import zlib
 from collections.abc import Iterator
@@ -313,37 +313,23 @@ def _is_ts(atype: Any) -> bool:
 
 def write_avro_py(df: Any, path: str, mode: str = "overwrite") -> int:
     """Partition-parallel Avro sink: one self-contained OCF shard per
-    partition (``part-NNNNN.avro``).  Returns shard count.  Mode semantics
-    follow DataFrameWriter, as in :func:`sources.msgpack.write_msgpack`."""
-    import uuid
-
+    non-empty partition (``part-NNNNN.avro``) through the shared shard
+    protocol (:mod:`ironbeam_spark.sources.shards`: mode semantics,
+    atomic commit).  Returns rows written."""
     from ironbeam_spark.collection import PCollection
+    from ironbeam_spark.sources.shards import shard_sink
 
-    modes = {"overwrite", "append", "error", "errorifexists", "ignore"}
-    if mode not in modes:
-        raise ValueError(f"write_avro mode must be one of {sorted(modes)}, got {mode!r}")
     d = df.df if isinstance(df, PCollection) else df
     schema_json = avro_schema_of(d.schema)
     ts_cols = {f.name for f in d.schema.fields if isinstance(f.dataType, TimestampType)}
     names = d.columns
-    os.makedirs(path, exist_ok=True)
-    existing = [f for f in os.listdir(path) if f.endswith(".avro")]
-    if mode == "overwrite":
-        for f in existing:
-            os.remove(os.path.join(path, f))
-    elif mode in ("error", "errorifexists") and existing:
-        raise FileExistsError(f"avro shards already exist at {path} (mode={mode})")
-    elif mode == "ignore" and existing:
-        return 0
-    token = f"-{uuid.uuid4().hex[:8]}" if mode == "append" else ""
 
-    def write_partition(batches: Iterator) -> Iterator:
+    def encode(batches: Iterator, fh) -> int:
         import hashlib
 
         import pyarrow as pa
         from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
         rows: list[list[Any]] = []
         for batch in batches:
             for rec in batch.to_pylist():
@@ -361,21 +347,13 @@ def write_avro_py(df: Any, path: str, mode: str = "overwrite") -> int:
                         v = ts.as_py()
                     row.append(v)
                 rows.append(row)
-        if rows:
-            # deterministic sync marker (any 16 bytes are spec-legal)
-            sync = hashlib.md5(f"{path}:{pid}".encode()).digest()
-            shard = os.path.join(path, f"part-{pid:05d}{token}.avro")
-            with open(shard, "wb") as fh:
-                write_ocf(fh, rows, schema_json, sync)
-        yield pa.RecordBatch.from_pylist(
-            [{"n": len(rows)}], schema=pa.schema([("n", pa.int64())])
-        )
+        # deterministic sync marker (any 16 bytes are spec-legal)
+        pid = TaskContext.get().partitionId()
+        sync = hashlib.md5(f"{path}:{pid}".encode()).digest()
+        write_ocf(fh, rows, schema_json, sync)
+        return len(rows)
 
-    from pyspark.sql import functions as F
-
-    counts = d.mapInArrow(write_partition, "n long")
-    written = counts.agg(F.sum("n")).collect()[0][0]
-    return int(written or 0)
+    return shard_sink(d, path, "avro", mode, encode)[0]
 
 
 def read_avro_py(spark: SparkSession, path: str, schema: StructType | str | None = None) -> DataFrame:

@@ -11,9 +11,9 @@ the rest — ``.xz`` out of the box (stdlib ``lzma``) and any user codec via
   task decompresses a whole shard — the same unit of parallelism Spark's
   native codec path uses for non-splittable codecs like gzip), then an
   Arrow-batched ``mapInPandas`` decompresses and splits lines.
-- **write**: partition-parallel shard sink (same shape as
-  ``write_msgpack``): each partition compresses its lines executor-side and
-  writes one ``part-NNNNN.<ext>`` — no driver collect, no single-writer
+- **write**: the shared shard protocol (:mod:`ironbeam_spark.sources.
+  shards`): each partition compresses its lines executor-side and writes
+  one ``part-NNNNN.<ext>`` — no driver collect, no single-writer
   bottleneck.
 
 Like every non-splittable codec, one compressed shard = one read task;
@@ -26,7 +26,6 @@ import bz2 as _bz2
 import gzip as _gzip
 import io
 import lzma as _lzma
-import os
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 from typing import Any
@@ -34,6 +33,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ironbeam_spark import caches
+from ironbeam_spark.sources.shards import shard_sink
 
 __all__ = [
     "Codec",
@@ -141,101 +141,29 @@ def read_lines(spark: SparkSession, path: str, codec: str | None = None) -> Data
     return files.mapInPandas(decode, "value string")
 
 
-def _shard_extensions() -> tuple[str, ...]:
-    return tuple({c.extension for c in _REGISTRY.values()})
-
-
-def _prepare_shard_dir(
-    path: str, mode: str, sweep_suffixes: tuple[str, ...]
-) -> str | None:
-    """Shared mode semantics for the partition-parallel shard sinks:
-    validates ``mode``, sweeps stale shards (every suffix in
-    ``sweep_suffixes``) plus orphaned ``.inprogress-`` temps on overwrite,
-    raises/ignores per mode, and returns the append token ('' for
-    non-append, ``None`` to signal ignore-mode early exit)."""
-    import uuid
-
-    modes = {"overwrite", "append", "error", "errorifexists", "ignore"}
-    if mode not in modes:
-        raise ValueError(f"mode must be one of {sorted(modes)}, got {mode!r}")
-    os.makedirs(path, exist_ok=True)
-    existing = [f for f in os.listdir(path) if f.endswith(sweep_suffixes)]
-    if mode == "overwrite":
-        for f in existing + [
-            f for f in os.listdir(path)
-            if f.startswith(".") and ".inprogress-" in f
-        ]:
-            os.remove(os.path.join(path, f))
-    elif mode in ("error", "errorifexists") and existing:
-        raise FileExistsError(f"shards already exist at {path} (mode={mode})")
-    elif mode == "ignore" and existing:
-        return None
-    return f"-{uuid.uuid4().hex[:8]}" if mode == "append" else ""
-
-
-def _commit_shard(out_dir: str, final_name: str, payload: bytes) -> None:
-    """Hidden per-attempt temp + atomic rename (Hadoop's task-commit
-    pattern): a mid-write death leaves only an ignored dotfile; racing
-    speculative attempts each rename a COMPLETE payload over the same
-    final name."""
-    import uuid
-
-    tmp = os.path.join(
-        out_dir, f".{final_name}.inprogress-{uuid.uuid4().hex[:8]}"
-    )
-    with open(tmp, "wb") as f:
-        f.write(payload)
-    os.rename(tmp, os.path.join(out_dir, final_name))
-
-
-def _shard_sink(df: DataFrame, path: str, codec: str, mode: str, render) -> int:
-    """Shared scaffold for the partition-parallel compressed sinks: mode
-    semantics, stale-shard cleanup, append-token naming, and the
-    per-partition compress-and-write task.  ``render(batches, buf) -> n``
-    serializes a partition's pandas batches into ``buf`` and returns the
-    row count.
+def _codec_sink(df: DataFrame, path: str, codec: str, mode: str, render) -> int:
+    """Compressed text through the shared shard protocol
+    (:mod:`ironbeam_spark.sources.shards`): ``render(batches, buf) -> n``
+    writes a partition's Arrow batches as text into ``buf``, which is
+    compressed executor-side into one ``part-NNNNN.<ext>``.  Returns the
+    number of shards written.
 
     ``overwrite`` removes shards of EVERY registered codec extension, not
     just the current one — readers decode every file in the directory with
-    one codec, so a leftover shard from a previous codec would silently
-    poison later reads.
-
-    Shards commit via write-to-hidden-temp + ``os.rename`` (Hadoop's
-    task-commit pattern): a task that dies mid-write, or a speculative
-    duplicate attempt racing the original, can only ever leave a
-    dot-prefixed temp file — which Spark's file index ignores — never a
-    torn shard under its final name."""
+    one codec, so a leftover shard from a previous codec (or a hand-copied
+    ``data.gz``) would silently poison later reads."""
     c = codec_for(codec)
     if c is None:
         raise ValueError(f"unknown codec {codec!r}; registered: {sorted(_REGISTRY)}")
-    ext = c.extension
-    # any file with a registered codec extension counts — readers decode
-    # EVERY file binaryFile finds, so a hand-copied data.gz is just as able
-    # to poison an overwrite-then-read as a stale part- shard
-    token = _prepare_shard_dir(
-        path, mode, tuple(f".{e}" for e in _shard_extensions())
-    )
-    if token is None:
-        return 0
-    out = path
 
-    def write_partition(batches: Iterator) -> Iterator:
-        import pandas as pd
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
+    def encode(batches, fh) -> int:
         buf = io.StringIO()
         n = render(batches, buf)
-        if n:
-            _commit_shard(
-                out,
-                f"part-{pid:05d}{token}.{ext}",
-                c.compress(buf.getvalue().encode("utf-8")),
-            )
-        yield pd.DataFrame({"written": [n]})
+        fh.write(c.compress(buf.getvalue().encode("utf-8")))
+        return n
 
-    counts = df.mapInPandas(write_partition, "written long").collect()
-    return sum(1 for r in counts if r.written)
+    sweep = tuple({r.extension for r in _REGISTRY.values()})
+    return shard_sink(df, path, c.extension, mode, encode, sweep)[1]
 
 
 def write_lines(
@@ -246,18 +174,17 @@ def write_lines(
     string column.  Returns the number of shards written."""
     if len(df.columns) != 1:
         raise ValueError(f"write_lines wants a single-column frame, got {df.columns}")
-    col = df.columns[0]
 
     def render(batches, buf) -> int:
         n = 0
-        for pdf in batches:
-            for line in pdf[col]:
+        for batch in batches:
+            for line in batch.column(0).to_pylist():
                 buf.write("" if line is None else str(line))
                 buf.write("\n")
                 n += 1
         return n
 
-    return _shard_sink(df, path, codec, mode, render)
+    return _codec_sink(df, path, codec, mode, render)
 
 
 def read_jsonl_compressed(
@@ -369,9 +296,17 @@ def write_csv_compressed(
     want_header = header
 
     def render(batches, buf) -> int:
+        import pandas as pd
+
         n = 0
         first = True
-        for pdf in batches:
+        for batch in batches:
+            # the batch as mapInPandas hands it over: dates as
+            # datetime.date, timestamps as naive session-zone wall clock
+            pdf = batch.to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
+            for c in pdf.columns:
+                if isinstance(pdf[c].dtype, pd.DatetimeTZDtype):
+                    pdf[c] = pdf[c].dt.tz_localize(None)
             # Spark's CSV parser defaults to backslash-escaped quotes;
             # pandas defaults to RFC doubled quotes — write Spark's dialect
             pdf.to_csv(
@@ -385,4 +320,4 @@ def write_csv_compressed(
             n += len(pdf)
         return n
 
-    return _shard_sink(df, path, codec, mode, render)
+    return _codec_sink(df, path, codec, mode, render)

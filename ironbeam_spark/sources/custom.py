@@ -89,43 +89,33 @@ class _MsgpackCommit(WriterCommitMessage):
 
 
 class _MsgpackWriter(DataSourceWriter):
+    """The DataSource API drives the tasks here, so this writer uses the
+    two halves of :func:`ironbeam_spark.sources.shards.shard_sink`
+    directly: the SaveMode check and sweep on the driver, one atomically
+    committed ``part-NNNNN.msgpack`` per task."""
+
     def __init__(self, options: dict, schema: StructType, overwrite: bool):
+        from ironbeam_spark.sources.shards import prepare_shard_dir
+
         self.path = options.get("path")
         if not self.path:
             raise ValueError("msgpack sink requires a path")
-        self.names = [f.name for f in schema.fields]
-        # runs driver-side, before any task: honor SaveMode here.
-        # overwrite clears prior shards (a rewrite with fewer partitions must
-        # not leave stale part files to be silently mixed into later reads);
-        # append uniquifies names so same-numbered shards never clobber.
-        os.makedirs(self.path, exist_ok=True)
-        if overwrite:
-            for f in os.listdir(self.path):
-                if f.endswith(".msgpack"):
-                    os.remove(os.path.join(self.path, f))
-            self.token = ""
-        else:
-            import uuid
-
-            self.token = f"-{uuid.uuid4().hex[:8]}"
+        self.token = prepare_shard_dir(
+            self.path, "overwrite" if overwrite else "append", (".msgpack",)
+        )
 
     def write(self, iterator: Iterator) -> WriterCommitMessage:
-        import io as _io
-
         from pyspark import TaskContext
 
-        from ironbeam_spark.sources.msgpack import pack_into
+        from ironbeam_spark.sources.msgpack import pack_records
+        from ironbeam_spark.sources.shards import write_shard
 
         pid = TaskContext.get().partitionId()
-        buf = _io.BytesIO()
-        n = 0
-        for row in iterator:
-            pack_into(buf, list(row))
-            n += 1
-        if n:
-            shard = f"part-{pid:05d}{self.token}.msgpack"
-            with open(os.path.join(self.path, shard), "wb") as fh:
-                fh.write(buf.getvalue())
+        write_shard(
+            self.path,
+            f"part-{pid:05d}{self.token}.msgpack",
+            lambda fh: pack_records(fh, (list(row) for row in iterator)),
+        )
         return _MsgpackCommit()
 
 

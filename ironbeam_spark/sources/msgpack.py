@@ -18,7 +18,8 @@ Spark-first shape:
   so at 100 TB the layout answer is "many part files", which is exactly what
   the parallel writer produces.
 - **write**: one shard per partition, encoded executor-side and written in
-  parallel (reference ``write_msgpack_par``, ``src/helpers/msgpack.rs:254``),
+  parallel (reference ``write_msgpack_par``, ``src/helpers/msgpack.rs:254``)
+  through the shared shard protocol (:mod:`ironbeam_spark.sources.shards`),
   deterministic ``part-NNNNN.msgpack`` naming by partition id.
 
 The codec itself is a dependency-free implementation of the public
@@ -30,10 +31,9 @@ small enough that hand-rolling beats stubbing.
 from __future__ import annotations
 
 import io
-import os
 import struct
-from collections.abc import Iterator, Sequence
-from typing import Any
+from collections.abc import Iterable, Iterator
+from typing import Any, BinaryIO
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -41,6 +41,7 @@ from pyspark.sql.types import StructType
 __all__ = [
     "packb",
     "pack_into",
+    "pack_records",
     "unpackb_stream",
     "read_msgpack",
     "write_msgpack",
@@ -49,7 +50,7 @@ __all__ = [
 
 # ── codec: encoder ──────────────────────────────────────────────────────────
 
-def pack_into(buf: io.BytesIO, v: Any) -> None:
+def pack_into(buf: BinaryIO, v: Any) -> None:
     """Append one MessagePack value for ``v`` to ``buf`` (spec families:
     nil/bool/int/float64/str/bin/array/map)."""
     w = buf.write
@@ -305,6 +306,16 @@ def read_msgpack(
     return files.mapInPandas(decode, struct_schema)
 
 
+def pack_records(fh: BinaryIO, records: Iterable[Any]) -> int:
+    """Append each record as one msgpack value to ``fh`` (the flat,
+    byte-concatenable shard body); returns the record count."""
+    n = 0
+    for rec in records:
+        pack_into(fh, rec)
+        n += 1
+    return n
+
+
 def write_msgpack(
     df: Any,
     path: str,
@@ -314,62 +325,24 @@ def write_msgpack(
 ) -> int:
     """Partition-parallel msgpack sink (reference ``write_msgpack_par``,
     ``src/helpers/msgpack.rs:254``): each partition encodes its rows
-    executor-side and writes one byte-concatenable ``part-NNNNN.msgpack``.
+    executor-side into one byte-concatenable ``part-NNNNN.msgpack``
+    through the shared shard protocol (:mod:`ironbeam_spark.sources.shards`:
+    DataFrameWriter mode semantics, atomic commit; appended shards make one
+    valid dataset with the old ones by byte concatenation).
 
-    Returns the number of shard files written.  Targets a POSIX-visible
-    directory (this container's layout); an object-store deployment would
-    swap the ``open`` for an fsspec/Hadoop-FS stream — the encode path and
-    shard naming are unchanged.
-
-    ``mode`` follows DataFrameWriter semantics: ``overwrite`` removes
-    existing shards first; ``append`` adds uniquely-named shards (a per-job
-    token keeps them from clobbering a prior write's ``part-NNNNN``);
-    ``error``/``errorifexists`` raises if the directory already holds
-    shards; ``ignore`` is a no-op then.
+    Returns the number of rows written.
     """
-    import uuid
-
     from ironbeam_spark.collection import PCollection
-
-    modes = {"overwrite", "append", "error", "errorifexists", "ignore"}
-    if mode not in modes:
-        raise ValueError(f"write_msgpack mode must be one of {sorted(modes)}, got {mode!r}")
+    from ironbeam_spark.sources.shards import shard_sink
 
     d = df.df if isinstance(df, PCollection) else df
     names = d.columns
-    os.makedirs(path, exist_ok=True)
-    existing = [f for f in os.listdir(path) if f.endswith(".msgpack")]
-    if mode == "overwrite":
-        for f in existing:
-            os.remove(os.path.join(path, f))
-    elif mode in ("error", "errorifexists") and existing:
-        raise FileExistsError(f"msgpack shards already exist at {path} (mode={mode})")
-    elif mode == "ignore" and existing:
-        return 0
-    # append: a fresh job token uniquifies shard names; byte-concatenation
-    # semantics make old+new shards one valid dataset
-    token = f"-{uuid.uuid4().hex[:8]}" if mode == "append" else ""
 
-    def write_partition(batches: Iterator) -> Iterator:
-        # Arrow-batched: one task sees every batch of its partition, encodes
-        # into one buffer, writes one shard, emits one count row
-        import pyarrow as pa
-        from pyspark import TaskContext
+    def encode(batches: Iterator, fh) -> int:
+        return pack_records(
+            fh,
+            ([rec[c] for c in names] if as_arrays else rec
+             for batch in batches for rec in batch.to_pylist()),
+        )
 
-        pid = TaskContext.get().partitionId()
-        buf = io.BytesIO()
-        n = 0
-        for batch in batches:
-            for rec in batch.to_pylist():
-                pack_into(buf, [rec[c] for c in names] if as_arrays else rec)
-                n += 1
-        if n:  # skip empty shards — concatenation semantics are unchanged
-            with open(os.path.join(path, f"part-{pid:05d}{token}.msgpack"), "wb") as fh:
-                fh.write(buf.getvalue())
-        yield pa.RecordBatch.from_pylist([{"n": n}], schema=pa.schema([("n", pa.int64())]))
-
-    from pyspark.sql import functions as F
-
-    counts = d.mapInArrow(write_partition, "n long")
-    written = counts.agg(F.sum("n")).collect()[0][0]
-    return int(written or 0)
+    return shard_sink(d, path, "msgpack", mode, encode)[0]

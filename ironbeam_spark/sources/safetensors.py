@@ -12,14 +12,14 @@ here loads in PyTorch/HF with ``safetensors.torch.load_file`` and zero
 copies (the format exists precisely to be mmap-safe: no pickle, bounded
 header, data region addressed by offsets).
 
-Spark-first shape, same shard contract as the other sinks: ONE
-self-contained ``part-NNNNN.safetensors`` per non-empty partition, each
-holding two tensors — ``ids`` int64 ``[n]`` and ``embeddings``
-float32/float64 ``[n, d]`` — written via hidden-temp + atomic ``os.rename``
-(concurrent speculative attempts each rename a complete payload), read back
-with ``binaryFile`` + Arrow batches.  Both directions are embarrassingly
-parallel with zero shuffle; the per-row work is one numpy buffer copy
-(Arrow list column → C-order matrix), never Python-object rows.
+Spark-first shape, the shared shard protocol of
+:mod:`ironbeam_spark.sources.shards`: ONE self-contained
+``part-NNNNN.safetensors`` per non-empty partition, each holding two
+tensors — ``ids`` int64 ``[n]`` and ``embeddings`` float32/float64
+``[n, d]`` — read back with ``binaryFile`` + Arrow batches.  Both
+directions are embarrassingly parallel with zero shuffle; the per-row
+work is one numpy buffer copy (Arrow list column → C-order matrix),
+never Python-object rows.
 
 The codec is dependency-free on purpose (the ``safetensors`` package is not
 in this container): the spec is ~30 lines of struct/json, and the tests
@@ -32,7 +32,6 @@ ValueError, the dead-letter-able error class, never a numpy crash).
 from __future__ import annotations
 
 import json
-import os
 import struct
 from typing import Any, Iterator
 
@@ -119,47 +118,24 @@ def write_safetensors_py(
     ``dtype``).  Returns rows written.  Every vector in a shard must share
     one dimension and contain no nulls — a tensor has no ragged rows, so
     violations FAIL the task (ValueError) rather than writing silently
-    corrupt shards.  Mode semantics follow DataFrameWriter."""
-    import uuid
-
+    corrupt shards.  Mode semantics and the atomic commit are the shared
+    shard protocol of :mod:`ironbeam_spark.sources.shards`."""
     from pyspark.sql import functions as F
 
     from ironbeam_spark.collection import PCollection
+    from ironbeam_spark.sources.shards import shard_sink
 
     if dtype not in _DTYPES:
         raise ValueError(f"dtype must be one of {sorted(_DTYPES)}, got {dtype!r}")
-    modes = {"overwrite", "append", "error", "errorifexists", "ignore"}
-    if mode not in modes:
-        raise ValueError(
-            f"write_safetensors mode must be one of {sorted(modes)}, got {mode!r}"
-        )
     d = df.df if isinstance(df, PCollection) else df
     d = d.select(
         F.col(id_col).cast("long").alias("_id"), F.col(vec_col).alias("_vec")
     )
-    os.makedirs(path, exist_ok=True)
-    existing = [f for f in os.listdir(path) if f.endswith(".safetensors")]
-    if mode == "overwrite":
-        # also sweep crashed-attempt temp files so they can't accumulate
-        for f in existing + [
-            f for f in os.listdir(path) if f.endswith(".safetensors.tmp")
-        ]:
-            os.remove(os.path.join(path, f))
-    elif mode in ("error", "errorifexists") and existing:
-        raise FileExistsError(
-            f"safetensors shards already exist at {path} (mode={mode})"
-        )
-    elif mode == "ignore" and existing:
-        return 0
-    token = f"-{uuid.uuid4().hex[:8]}" if mode == "append" else ""
     np_dtype = "<f4" if dtype == "float32" else "<f8"
 
-    def write_partition(batches: Iterator) -> Iterator:
+    def encode(batches: Iterator, fh) -> int:
         import numpy as np
-        import pyarrow as pa
-        from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
         ids_parts, emb_parts, dim = [], [], None
         for batch in batches:
             if batch.num_rows == 0:
@@ -188,32 +164,13 @@ def write_safetensors_py(
                 .astype(np_dtype)
                 .reshape(-1, dim)
             )
-        n = 0
-        if ids_parts:
-            import uuid as _uuid
+        if not ids_parts:
+            return 0
+        ids_all = np.concatenate(ids_parts)
+        fh.write(_pack_file(ids_all, np.concatenate(emb_parts)))
+        return len(ids_all)
 
-            ids_all = np.concatenate(ids_parts)
-            emb_all = np.concatenate(emb_parts)
-            n = len(ids_all)
-            # per-ATTEMPT temp name (compression._commit_shard contract):
-            # racing speculative attempts must never share a temp file
-            tmp = os.path.join(
-                path,
-                f".part-{pid:05d}{token}-{_uuid.uuid4().hex[:8]}.safetensors.tmp",
-            )
-            with open(tmp, "wb") as fh:
-                fh.write(_pack_file(ids_all, emb_all))
-            # atomic commit (same task-commit contract as the other sinks)
-            os.rename(
-                tmp, os.path.join(path, f"part-{pid:05d}{token}.safetensors")
-            )
-        yield pa.RecordBatch.from_pylist(
-            [{"n": n}], schema=pa.schema([("n", pa.int64())])
-        )
-
-    counts = d.mapInArrow(write_partition, "n long")
-    written = counts.agg(F.sum("n")).collect()[0][0]
-    return int(written or 0)
+    return shard_sink(d, path, "safetensors", mode, encode)[0]
 
 
 def read_safetensors_py(

@@ -21,16 +21,13 @@ Spark mapping:
 - ``webdataset_samples`` regroups members into one row per sample with a
   ``field → payload`` map (sorted entries, so downstream hashing is
   deterministic);
-- ``write_tar_shards`` emits one ``part-NNNNN.tar`` per partition with the
-  hidden-temp + atomic-rename commit of ``sources/compression._shard_sink``
-  (task death / speculative duplicates can never leave a torn shard under
-  a final name).
+- ``write_tar_shards`` emits one ``part-NNNNN.tar`` per partition through
+  the shared shard protocol of :mod:`ironbeam_spark.sources.shards`.
 """
 
 from __future__ import annotations
 
 import io
-import os
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,27 +47,17 @@ def write_tar_shards(
     ``{key}.{field}`` members, one per column in ``field_cols`` (binary or
     string; strings are UTF-8 encoded).  Returns the number of shards
     written (empty partitions write nothing)."""
-    from ironbeam_spark.sources.compression import _commit_shard, _prepare_shard_dir
+    from ironbeam_spark.sources.shards import shard_sink
 
-    token = _prepare_shard_dir(path, mode, (".tar",))
-    if token is None:
-        return 0
-    out_dir = path
     cols = [key_col, *field_cols]
 
-    def write_partition(batches: Iterator) -> Iterator:
+    def encode(batches: Iterator, fh) -> int:
         import tarfile
 
-        import pandas as pd
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        buf = io.BytesIO()
         n = 0
-        safe = [f"_c{i}" for i in range(len(cols))]
-        with tarfile.open(fileobj=buf, mode="w") as tf:
-            for pdf in batches:
-                for vals in zip(*(pdf[c] for c in safe)):
+        with tarfile.open(fileobj=fh, mode="w") as tf:
+            for batch in batches:
+                for vals in zip(*(c.to_pylist() for c in batch.columns)):
                     key, fields = str(vals[0]), vals[1:]
                     # '.' would corrupt the first-dot sample/field split on
                     # read-back (sample 'v1.2' comes back as 'v1'); '/'
@@ -85,11 +72,11 @@ def write_tar_shards(
                             continue
                         if isinstance(v, str):
                             payload = v.encode("utf-8")
-                        elif isinstance(v, (bytes, bytearray, memoryview)):
-                            payload = bytes(v)
+                        elif isinstance(v, bytes):
+                            payload = v
                         else:
-                            # bytes(np.int64(5)) is FIVE ZERO BYTES — an
-                            # unchecked cast would silently destroy data
+                            # bytes(5) is FIVE ZERO BYTES — an unchecked
+                            # cast would silently destroy data
                             raise ValueError(
                                 f"field {field!r} must be string or binary, "
                                 f"got {type(v).__name__}"
@@ -99,13 +86,11 @@ def write_tar_shards(
                         info.mtime = 0  # fixed: shard bytes are reproducible
                         tf.addfile(info, io.BytesIO(payload))
                         n += 1
-        if n:
-            _commit_shard(out_dir, f"part-{pid:05d}{token}.tar", buf.getvalue())
-        yield pd.DataFrame({"written": [1 if n else 0]})
+        return n
 
     # backtick-quote so dotted field names (e.g. 'seg.json') resolve as
     # literal column names, not nested struct paths — and ALIAS them to
-    # positional placeholders, because PySpark's mapInPandas re-resolves
+    # positional placeholders, because PySpark's mapInArrow re-resolves
     # every input column by name (df[col]) and would parse the dot as a
     # struct path again
     def _q(c: str):
@@ -114,8 +99,7 @@ def write_tar_shards(
     selected = df.select(
         *[_q(c).alias(f"_c{i}") for i, c in enumerate(cols)]
     )
-    counts = selected.mapInPandas(write_partition, "written long").collect()
-    return sum(r.written for r in counts)
+    return shard_sink(selected, path, "tar", mode, encode)[1]
 
 
 def read_tar_members(spark: SparkSession, path: str) -> DataFrame:

@@ -15,7 +15,9 @@ Spark-first shape:
   here) — so at 100 TB the layout answer is "many ~1 GiB shards", which
   is what the parallel writer produces and what Common Crawl itself
   does (segments of ~1 GiB ``.warc.gz`` files).
-- **write**: one shard per partition (``part-NNNNN.warc[.gz]``),
+- **write**: one shard per partition (``part-NNNNN.warc[.gz]``) through
+  the shared shard protocol (:mod:`ironbeam_spark.sources.shards`: a
+  streaming ``binaryFile`` reader never lists a half-written shard),
   response records with mandatory ``WARC-Record-ID`` / ``WARC-Date`` /
   ``Content-Length`` headers plus ``WARC-Target-URI``.  With
   ``compress=True`` each RECORD is its own gzip member (the Common
@@ -31,7 +33,6 @@ from __future__ import annotations
 
 import gzip
 import io
-import os
 import uuid
 from collections.abc import Iterator
 from typing import Any
@@ -230,38 +231,17 @@ def write_warc(
     ``payload_col`` may be string (UTF-8 encoded) or binary.
     ``warc_type="conversion"`` writes Common-Crawl-WET-style extracted-
     text records (same framing; only the WARC-Type header differs).
-    ``mode`` follows DataFrameWriter semantics (same contract as
-    write_msgpack).  Returns the number of records written.
+    ``mode`` and the atomic commit are the shared shard protocol of
+    :mod:`ironbeam_spark.sources.shards`.  Returns the number of records
+    written.
     """
-    from pyspark.sql import functions as F
-
     from ironbeam_spark.collection import PCollection
-
-    modes = {"overwrite", "append", "error", "errorifexists", "ignore"}
-    if mode not in modes:
-        raise ValueError(f"write_warc mode must be one of {sorted(modes)}, got {mode!r}")
+    from ironbeam_spark.sources.shards import shard_sink
 
     d = df.df if isinstance(df, PCollection) else df
-    suffix = ".warc.gz" if compress else ".warc"
-    os.makedirs(path, exist_ok=True)
-    existing = [f for f in os.listdir(path) if f.endswith((".warc", ".warc.gz"))]
-    if mode == "overwrite":
-        for f in existing:
-            os.remove(os.path.join(path, f))
-    elif mode in ("error", "errorifexists") and existing:
-        raise FileExistsError(f"WARC shards already exist at {path} (mode={mode})")
-    elif mode == "ignore" and existing:
-        return 0
-    token = f"-{uuid.uuid4().hex[:8]}" if mode == "append" else ""
-
     uri_c, pay_c, date_c = uri_col, payload_col, date_col
 
-    def write_partition(batches: Iterator) -> Iterator:
-        import pyarrow as pa
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        buf = io.BytesIO()
+    def encode(batches: Iterator, fh) -> int:
         n = 0
         for batch in batches:
             for rec in batch.to_pylist():
@@ -277,13 +257,9 @@ def write_warc(
                 )
                 # mtime=0 pins the gzip header — shard bytes stay
                 # deterministic for a given partition's rows
-                buf.write(gzip.compress(record, mtime=0) if compress else record)
+                fh.write(gzip.compress(record, mtime=0) if compress else record)
                 n += 1
-        if n:
-            with open(os.path.join(path, f"part-{pid:05d}{token}{suffix}"), "wb") as fh:
-                fh.write(buf.getvalue())
-        yield pa.RecordBatch.from_pylist([{"n": n}], schema=pa.schema([("n", pa.int64())]))
+        return n
 
-    counts = d.mapInArrow(write_partition, "n long")
-    written = counts.agg(F.sum("n")).collect()[0][0]
-    return int(written or 0)
+    ext = "warc.gz" if compress else "warc"
+    return shard_sink(d, path, ext, mode, encode, ("warc", "warc.gz"))[0]

@@ -62,7 +62,7 @@ def test_empty_partitions_write_no_shard(spark, tmp_path):
     assert write_arrow_ipc_py(df, p) == 5
     shards = glob.glob(os.path.join(p, "*.arrow"))
     assert 0 < len(shards) <= 5  # no footer-only files from empty partitions
-    assert not glob.glob(os.path.join(p, ".*tmp"))  # all commits atomic
+    assert not glob.glob(os.path.join(p, ".*.inprogress-*"))  # all temps committed
     assert {r.id for r in read_arrow_ipc_py(spark, p).collect()} == set(range(5))
 
 

@@ -166,20 +166,3 @@ def test_jsonl_schema_skips_blank_lines(spark, tmp_path):
     assert sorted(r.id for r in with_schema.collect()) == [1, 2, 3]
     inferred = read_jsonl_compressed(spark, str(d), codec="xz")
     assert with_schema.count() == inferred.count() == 3
-
-
-def test_torn_inprogress_shard_is_invisible(spark, tmp_path):
-    """A crashed task's partial write exists only under a dot-prefixed
-    temp name, which Spark's file index ignores — a torn shard must never
-    be decoded, and overwrite sweeps the orphan."""
-    out = str(tmp_path / "torn")
-    df = spark.range(4).select(F.col("id").cast("string").alias("value"))
-    write_lines(df.coalesce(1), out, "gzip")
-    # simulate a mid-write death: torn (undecodable) payload under a temp name
-    orphan = os.path.join(out, ".part-00099.inprogress-deadbeef")
-    with open(orphan, "wb") as f:
-        f.write(b"\x1f\x8b\x08NOT-A-VALID-GZIP-STREAM")
-    got = sorted(r.value for r in read_lines(spark, out, "gzip").collect())
-    assert got == ["0", "1", "2", "3"]
-    write_lines(df.coalesce(1), out, "gzip", mode="overwrite")
-    assert not os.path.exists(orphan)

@@ -111,25 +111,6 @@ def test_dedup_components_local_solve_plan_is_pure_jvm_literal(spark):
     assert _labels(out) == [(1, 1), (2, 1), (3, 1)]
 
 
-def test_dedup_components_local_solve_conf_knob(spark):
-    """ironbeam.components.local_solve_max_edges=0 disables the short
-    circuit when the parameter is not passed."""
-    from ironbeam_spark.operators.dedup import dedup_components
-
-    df = _pairs_df(spark, [(1, 2), (2, 3)])
-    spark.conf.set("ironbeam.components.local_solve_max_edges", "0")
-    try:
-        out = dedup_components(df)
-        plan = out._jdf.queryExecution().optimizedPlan().toString()
-        assert "inline([[" not in plan
-    finally:
-        spark.conf.unset("ironbeam.components.local_solve_max_edges")
-    on = dedup_components(df)
-    plan_on = on._jdf.queryExecution().optimizedPlan().toString()
-    assert "inline([[" in plan_on or "LocalRelation" in plan_on
-    assert _labels(out) == _labels(on)
-
-
 def test_dedup_components_local_solve_empty_pairs(spark):
     from ironbeam_spark.operators.dedup import dedup_components
 
@@ -194,31 +175,19 @@ def test_ivf_lsh_expr_arrow_identical(spark):
     )
 
 
-def test_auto_pair_impl_resolution(spark):
-    from ironbeam_spark.operators.similarity import (
-        _SCORER_BYTES_CONF,
-        _SCORER_CONF,
-        _auto_pair_impl,
-    )
+def test_auto_pair_impl_resolution(spark, monkeypatch):
+    from ironbeam_spark.operators import similarity
+    from ironbeam_spark.operators.similarity import _auto_pair_impl
 
     emb = _emb(spark)
     pairs = emb.select(F.col("embedding").alias("a")).crossJoin(
         emb.select(F.col("embedding").alias("b"))
     )
-    # explicit argument wins over everything
+    # explicit argument wins over the estimate
     assert _auto_pair_impl(pairs, "expr") == "expr"
     assert _auto_pair_impl(pairs, "arrow") == "arrow"
-    # conf knob wins over the estimate
-    spark.conf.set(_SCORER_CONF, "arrow")
-    try:
-        assert _auto_pair_impl(pairs, "auto") == "arrow"
-    finally:
-        spark.conf.unset(_SCORER_CONF)
     # estimate: a tiny threshold forces arrow, a huge one forces expr
-    spark.conf.set(_SCORER_BYTES_CONF, "1")
-    try:
-        assert _auto_pair_impl(pairs, "auto") == "arrow"
-        spark.conf.set(_SCORER_BYTES_CONF, str(1 << 60))
-        assert _auto_pair_impl(pairs, "auto") == "expr"
-    finally:
-        spark.conf.unset(_SCORER_BYTES_CONF)
+    monkeypatch.setattr(similarity, "_SCORER_DEFAULT_BYTES", 1)
+    assert _auto_pair_impl(pairs, "auto") == "arrow"
+    monkeypatch.setattr(similarity, "_SCORER_DEFAULT_BYTES", 1 << 60)
+    assert _auto_pair_impl(pairs, "auto") == "expr"

@@ -56,14 +56,9 @@ def test_tar_write_modes_and_atomicity(spark, tmp_path):
     with pytest.raises(FileExistsError):
         write_tar_shards(df, out, "doc_id", ["txt"], mode="error")
     assert write_tar_shards(df, out, "doc_id", ["txt"], mode="ignore") == 0
-    # orphaned temp from a "crashed" attempt is swept by overwrite and
-    # invisible to readers (dot-prefixed)
-    orphan = os.path.join(out, ".part-00099.inprogress-deadbeef")
-    with open(orphan, "wb") as f:
-        f.write(b"torn")
-    assert read_tar_members(spark, out).count() == 10
+    # torn-temp invisibility and sweep: tests/test_shards.py, every sink
     write_tar_shards(df, out, "doc_id", ["txt"], mode="overwrite")
-    assert not os.path.exists(orphan)
+    assert read_tar_members(spark, out).count() == 10
     # append adds distinctly-named shards
     write_tar_shards(df, out, "doc_id", ["txt"], mode="append")
     assert read_tar_members(spark, out).count() == 20
