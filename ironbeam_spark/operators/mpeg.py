@@ -36,6 +36,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
+from ironbeam_spark.operators.multimodal import payload_bytes
+
 __all__ = ["probe_mpeg_bytes", "probe_mpeg_audio", "synthesize_mpeg_stream"]
 
 # bitrate tables, kbps, indices 1..14 (0 = free format, 15 = invalid).
@@ -192,7 +194,7 @@ def probe_mpeg_audio(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
             rows = []
             for rid, blob in zip(pdf[id_col], pdf[blob_col]):
                 try:
-                    d = probe_mpeg_bytes(bytes(blob))
+                    d = probe_mpeg_bytes(payload_bytes(blob))
                     rows.append(
                         (rid, d["fmt"], d["version"], d["sample_rate"],
                          d["channels"], d["frames"], d["duration_ms"],

@@ -55,6 +55,7 @@ __all__ = [
     "decode_image_pixels",
     "decode_audio_bytes",
     "decode_rvid",
+    "payload_bytes",
     "decode_image",
     "decode_audio",
     "resize_image",
@@ -632,6 +633,16 @@ _IMAGE_SCHEMA = (
 )
 
 
+def payload_bytes(blob) -> bytes:
+    """One row's payload as ``bytes`` for the per-row decoders.  A NULL
+    payload (e.g. a WebDataset sample without the requested member) raises
+    ``ValueError`` like any corrupt payload, so it becomes a dead-letter
+    row instead of a ``TypeError`` that kills the job."""
+    if blob is None:
+        raise ValueError("null payload")
+    return bytes(blob)
+
+
 def decode_image(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
     """REAL image decode over the multimodal plumbing: Arrow-batched
     ``mapInPandas``; each payload is parsed with :func:`decode_image_bytes`
@@ -645,7 +656,7 @@ def decode_image(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
             rows = []
             for rid, blob in zip(pdf[id_col], pdf[blob_col]):
                 try:
-                    d = decode_image_bytes(bytes(blob))
+                    d = decode_image_bytes(payload_bytes(blob))
                     rows.append(
                         (rid, d["fmt"], d["width"], d["height"], d["channels"],
                          d["sum_r"], d["sum_g"], d["sum_b"], None)
@@ -791,7 +802,7 @@ def decode_audio(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
             rows = []
             for rid, blob in zip(pdf[id_col], pdf[blob_col]):
                 try:
-                    d = decode_audio_bytes(bytes(blob))
+                    d = decode_audio_bytes(payload_bytes(blob))
                     rows.append((rid, d["fmt"], d["sample_rate"], d["channels"],
                                  d["bits"], d["n_frames"], d["sum_abs"], None))
                 except ValueError as e:
@@ -864,7 +875,7 @@ def resize_image(
             rows = []
             for rid, blob in zip(pdf[id_col], pdf[blob_col]):
                 try:
-                    fmt, px = decode_image_pixels(bytes(blob))
+                    fmt, px = decode_image_pixels(payload_bytes(blob))
                     rp = resize_rgb_nearest(px, out_w, out_h)
                     s = rp.reshape(-1, 3).astype("int64").sum(axis=0)
                     payload = encode_ppm(out_w, out_h, rp.tobytes())
@@ -952,7 +963,7 @@ def sample_frames(
             rows = []
             for rid, blob in zip(pdf[id_col], pdf[blob_col]):
                 try:
-                    v = decode_rvid(bytes(blob))
+                    v = decode_rvid(payload_bytes(blob))
                     for idx in range(0, v["n_frames"], every_n):
                         fr = v["frames"][idx].reshape(-1, 3).astype("int64")
                         s = fr.sum(axis=0)

@@ -37,6 +37,7 @@ __all__ = [
     "read_msgpack",
     "write_msgpack",
     "read_table",
+    "read_table_stream",
     "load_tables",
     "TPCH_TABLES",
 ]
@@ -359,6 +360,17 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark,
         ("read_table", sf_dir, name),
         lambda: spark.read.parquet(f"{sf_dir}/{name}.parquet"),
+    )
+
+
+def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Stream one test table: the streaming twin of :func:`read_table`,
+    whose schema (and conf pins) it reuses.  A file stream source must be a
+    directory, so the stream reads ``sf_dir`` filtered to ``<name>.parquet``."""
+    return (
+        spark.readStream.schema(read_table(spark, sf_dir, name).schema)
+        .option("pathGlobFilter", f"{name}.parquet")
+        .parquet(sf_dir)
     )
 
 

@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 
 from ironbeam_spark.operators.multimodal import as_blob, blob_metadata, fake_decode_features
 from ironbeam_spark.operators.windowing import to_event_time
-from ironbeam_spark.sources.io import read_table
+from ironbeam_spark.sources.io import read_table, read_table_stream
+from ironbeam_spark.streaming import run_to_memory
 from ironbeam_spark.suite.registry import query
 
 
@@ -319,13 +320,7 @@ def q_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_tumble(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ironbeam_spark.streaming.windows import stream_tumbling_agg
 
-    static = read_table(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(static.schema)
-        # streaming source must be a directory; glob-filter to the events file
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = read_table_stream(spark, sf_dir, "events")
     # dtype-aware: current testdata stores TIMESTAMP(MICROS) (passes through);
     # a legacy nanosAsLong int64 read truncates to millis — either way
     # window assignment is bit-exact with the oracle's epoch_ms floor
@@ -339,18 +334,9 @@ def q_stream_tumble(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_value_cents"),
         watermark_ms=600_000,
     )
-    name = "q_stream_tumble_sink"
-    ckpt = tempfile.mkdtemp(prefix="ironbeam_stream_ckpt_")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return run_to_memory(agg, "q_stream_tumble_sink", "complete").orderBy(
+        "event_type", "window_start"
     )
-    q.awaitTermination()
-    return spark.table(name).orderBy("event_type", "window_start")
 
 
 @query(
@@ -389,13 +375,7 @@ def q_stream_tumble(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ironbeam_spark.streaming.windows import stream_session_agg
 
-    static = read_table(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .where(F.col("user_id") < 30)
-    )
+    sdf = read_table_stream(spark, sf_dir, "events").where(F.col("user_id") < 30)
     sdf = sdf.withColumn("event_time", to_event_time(sdf, "ts"))
     agg = stream_session_agg(
         sdf,
@@ -405,19 +385,8 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         watermark_ms=600_000,
     )
-    name = "q_stream_session_sink"
-    ckpt = tempfile.mkdtemp(prefix="ironbeam_stream_sess_ckpt_")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        run_to_memory(agg, "q_stream_session_sink", "complete")
         .select("user_id", "session_start", "session_end", "n")
         .orderBy("user_id", "session_start")
     )
@@ -449,12 +418,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ironbeam_spark.streaming.windows import stream_sliding_agg
 
-    static = read_table(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = read_table_stream(spark, sf_dir, "events")
     sdf = sdf.withColumn("event_time", to_event_time(sdf, "ts"))
     agg = stream_sliding_agg(
         sdf,
@@ -465,19 +429,8 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         watermark_ms=600_000,
     )
-    name = "q_stream_sliding_sink"
-    ckpt = tempfile.mkdtemp(prefix="ironbeam_stream_slide_ckpt_")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        run_to_memory(agg, "q_stream_sliding_sink", "complete")
         .select("event_type", "window_start", "n")
         .orderBy("event_type", "window_start")
     )
@@ -497,25 +450,11 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ironbeam_spark.streaming.dedup import stream_distinct
 
-    static = read_table(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = read_table_stream(spark, sf_dir, "events")
     out = stream_distinct(sdf, ["user_id", "event_type"])
-    name = "q_stream_dedup_sink"
-    ckpt = tempfile.mkdtemp(prefix="ironbeam_stream_dedup_ckpt_")
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return run_to_memory(out, "q_stream_dedup_sink", "append").orderBy(
+        "user_id", "event_type"
     )
-    q.awaitTermination()
-    return spark.table(name).orderBy("user_id", "event_type")
 
 
 @query(
@@ -877,14 +816,9 @@ def q_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ironbeam_spark.streaming.joins import stream_interval_join
 
-    static = read_table(spark, sf_dir, "events")
-
     def side(etype: str, ts_alias: str, id_alias: str) -> DataFrame:
-        sdf = (
-            spark.readStream.schema(static.schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-            .where((F.col("user_id") < 40) & (F.col("event_type") == etype))
+        sdf = read_table_stream(spark, sf_dir, "events").where(
+            (F.col("user_id") < 40) & (F.col("event_type") == etype)
         )
         return sdf.select(
             "user_id",
@@ -907,18 +841,9 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("click_id").cast("long").alias("click_id"),
         (F.unix_micros("click_time") - F.unix_micros("err_time")).alias("delta_us"),
     )
-    name = "q_stream_join_sink"
-    ckpt = tempfile.mkdtemp(prefix="ironbeam_stream_ckpt_")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return run_to_memory(joined, "q_stream_join_sink", "append").orderBy(
+        "user_id", "err_id", "click_id"
     )
-    q.awaitTermination()
-    return spark.table(name).orderBy("user_id", "err_id", "click_id")
 
 
 @query(
@@ -1038,20 +963,9 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         delete_ops=("D",),
         tiebreak_cols=["event_id"],
     )
-    name = "q_stream_cdc_sink"
-    ckpt = tempfile.mkdtemp(prefix="ironbeam_stream_cdc_ckpt_")
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     from pyspark.sql import Window as W
 
-    t = spark.table(name)
+    t = run_to_memory(out, "q_stream_cdc_sink", "update")
     w = W.partitionBy("user_id").orderBy(
         F.col("us").desc(), F.col("event_id").desc()
     )
@@ -1104,11 +1018,8 @@ def q_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     static = read_table(spark, sf_dir, "events")
 
     def side(etype: str, ts_alias: str, id_alias: str) -> DataFrame:
-        sdf = (
-            spark.readStream.schema(static.schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-            .where((F.col("user_id") < 40) & (F.col("event_type") == etype))
+        sdf = read_table_stream(spark, sf_dir, "events").where(
+            (F.col("user_id") < 40) & (F.col("event_type") == etype)
         )
         return sdf.select(
             "user_id",
@@ -1132,17 +1043,7 @@ def q_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("err_id").cast("long").alias("err_id"),
         F.col("click_id").cast("long").alias("click_id"),
     )
-    name = "q_stream_left_join_sink"
-    ckpt = tempfile.mkdtemp(prefix="ironbeam_stream_loj_ckpt_")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    pairs = run_to_memory(joined, "q_stream_left_join_sink", "append")
 
     def max_us(etype: str):
         return F.max(
@@ -1156,8 +1057,7 @@ def q_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.least(max_us("error"), max_us("click")) - F.lit(4_800_000_000)).alias("c")
     )
     return (
-        spark.table(name)
-        .crossJoin(F.broadcast(cutoff))
+        pairs.crossJoin(F.broadcast(cutoff))
         .where(F.unix_micros("err_time") < F.col("c"))
         .select("user_id", "err_id", "click_id")
         .orderBy("user_id", "err_id", "click_id")
@@ -1186,22 +1086,21 @@ def q_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ironbeam_spark.streaming.sink import IdempotentParquetSink
 
-    static = read_table(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = read_table_stream(spark, sf_dir, "events")
     out = tempfile.mkdtemp(prefix="ironbeam_q_sink_")
-    ckpt = tempfile.mkdtemp(prefix="ironbeam_q_sink_ck_")
     sink = IdempotentParquetSink(out)
-    q = (
-        sdf.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # the read-back below is lazy over ``out``, which therefore stays; the
+    # checkpoint is single-use scratch (see streaming.run_to_memory)
+    with tempfile.TemporaryDirectory(
+        prefix="ironbeam_q_sink_ck_", ignore_cleanup_errors=True
+    ) as ckpt:
+        q = (
+            sdf.writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     back = spark.read.parquet(f"{out}/batch-*")
     return (
         back.groupBy((F.col("user_id") % 7).alias("shard"))
@@ -1233,12 +1132,7 @@ def q_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ironbeam_spark.streaming.enrich import stream_static_enrich
 
-    static = read_table(spark, sf_dir, "events")
-    sdf = (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    sdf = read_table_stream(spark, sf_dir, "events")
     dim = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
@@ -1249,15 +1143,4 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("sum_value_cents"),
     )
-    name = "q_stream_enrich_sink"
-    ckpt = tempfile.mkdtemp(prefix="ironbeam_stream_ckpt_")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).orderBy("segment")
+    return run_to_memory(agg, "q_stream_enrich_sink", "complete").orderBy("segment")

@@ -32,6 +32,8 @@ from ironbeam_spark.operators.dedup import (
     minhash_dedup_pairs,
 )
 from ironbeam_spark.operators.similarity import brute_force_topk, lsh_ann_topk
+from ironbeam_spark.sources.io import read_table_stream
+from ironbeam_spark.streaming import run_to_memory
 from ironbeam_spark.suite.registry import _t, query
 
 _TOKS_SQL = "list_filter(string_split(text, ' '), x -> x <> '')"
@@ -407,8 +409,6 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="ingestion-time near-dup admission check: a STREAM of delta docs (doc_id%3=1) classified against the static corpus fingerprint index + verify table via stream-static band-key equi-joins and exact-Jaccard verify; new-vs-new pairs are out of stream contract (composed with stream_distinct upstream), so the oracle is the cross-pair branch of the shared minhash CTE chain",
 )
 def q_stream_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ironbeam_spark.operators.incremental import (
         minhash_index,
         minhash_verify_table,
@@ -420,9 +420,7 @@ def q_stream_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = minhash_index(corpus, "doc_id", "text", shingle_words=3, k=8, bands=4)
     ver = minhash_verify_table(corpus, "doc_id", "text", shingle_words=3)
     sdf = (
-        spark.readStream.schema(static.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+        read_table_stream(spark, sf_dir, "documents")
         .where(F.col("doc_id") % 3 == 1)
         .select("doc_id", "text")
     )
@@ -431,28 +429,10 @@ def q_stream_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingle_words=3, k=8, bands=4, threshold=0.5,
         max_band_bucket=RECOMMENDED_MAX_BAND_BUCKET,
     )
-    name = "q_stream_dedup_index_sink"
-    # availableNow + memory sink: the checkpoint is single-use scratch;
-    # remove it after termination (bench/check call this repeatedly and
-    # would otherwise leak one /tmp dir per invocation)
-    ckpt = tempfile.mkdtemp(prefix="ironbeam_stream_ckpt_")
-    try:
-        q = (
-            matches.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
+    found = run_to_memory(matches, "q_stream_dedup_index_sink", "complete")
     batch_ids = static.where(F.col("doc_id") % 3 == 1).select("doc_id")
     return (
-        batch_ids.join(spark.table(name), on="doc_id", how="left")
+        batch_ids.join(found, on="doc_id", how="left")
         .select(
             "doc_id",
             F.when(F.col("dup_of").isNotNull(), F.lit("dup_of_corpus"))

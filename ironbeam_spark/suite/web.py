@@ -55,6 +55,7 @@ from ironbeam_spark.operators.web import domain_stats
 from ironbeam_spark.plancache import memo_expr
 from ironbeam_spark.scale import local_metadata_df
 from ironbeam_spark.sources.io import read_table
+from ironbeam_spark.streaming import run_to_memory
 from ironbeam_spark.suite.registry import QUERIES, query
 
 # Written-WARC corpus cache, keyed by (Spark application id, sf_dir):
@@ -864,8 +865,6 @@ def q_web_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_stream_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ironbeam_spark.sources.warc import read_warc_streaming
 
     path = _warc_corpus(spark, sf_dir)
@@ -879,18 +878,7 @@ def q_stream_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars_payload").cast("long").alias("sum_chars"),
     )
-    name = "q_stream_warc_ingest_sink"
-    ckpt = tempfile.mkdtemp(prefix="ironbeam_stream_ckpt_")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).orderBy("lang")
+    return run_to_memory(agg, "q_stream_warc_ingest_sink", "complete").orderBy("lang")
 
 
 # ---------------------------------------------------------------------------
@@ -1338,8 +1326,6 @@ QUERIES["q_crawl_to_shards"].oracle = _crawl_to_shards_sql()
     ),
 )
 def q_stream_crawl_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ironbeam_spark.functions.web import url_path
     from ironbeam_spark.operators.robots import robots_filter
     from ironbeam_spark.operators.web import blocklist_filter, with_registered_domain
@@ -1375,18 +1361,9 @@ def q_stream_crawl_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_chars_clean").cast("long").alias("sum_chars_clean"),
         )
     )
-    name = "q_stream_crawl_gate_sink"
-    ckpt = tempfile.mkdtemp(prefix="ironbeam_stream_ckpt_")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return run_to_memory(agg, "q_stream_crawl_gate_sink", "complete").orderBy(
+        "registered_domain"
     )
-    q.awaitTermination()
-    return spark.table(name).orderBy("registered_domain")
 
 
 @query(

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -25,16 +24,15 @@ def _content(spark, path):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _write_shattered(spark, n_rows, n_files):
-    tmp = tempfile.mkdtemp(prefix="ironbeam_compact_t_")
+def _write_shattered(spark, tmp, n_rows, n_files):
     spark.range(n_rows).withColumn("v", F.col("id") * 2).repartition(
         n_files
     ).write.mode("overwrite").parquet(tmp)
     return tmp
 
 
-def test_compaction_preserves_content_and_shrinks_files(spark):
-    tmp = _write_shattered(spark, 5000, 20)
+def test_compaction_preserves_content_and_shrinks_files(spark, tmp_path):
+    tmp = _write_shattered(spark, str(tmp_path), 5000, 20)
     before = _content(spark, tmp)
     stats = compact_parquet(spark, tmp, target_bytes=64 << 20)
     assert _content(spark, tmp) == before      # every row, exactly once
@@ -46,8 +44,8 @@ def test_compaction_preserves_content_and_shrinks_files(spark):
     assert not [e for e in os.listdir(tmp) if e.startswith(".compact-")]
 
 
-def test_large_files_left_untouched(spark):
-    tmp = _write_shattered(spark, 2000, 4)
+def test_large_files_left_untouched(spark, tmp_path):
+    tmp = _write_shattered(spark, str(tmp_path), 2000, 4)
     sizes = {
         e.name: e.stat().st_size
         for e in os.scandir(tmp)
@@ -65,8 +63,8 @@ def test_large_files_left_untouched(spark):
     assert _parts(tmp) == names_before  # same physical files
 
 
-def test_bin_packing_respects_target(spark):
-    tmp = _write_shattered(spark, 4000, 8)
+def test_bin_packing_respects_target(spark, tmp_path):
+    tmp = _write_shattered(spark, str(tmp_path), 4000, 8)
     sizes = [
         e.stat().st_size
         for e in os.scandir(tmp)
@@ -88,8 +86,8 @@ def test_bin_packing_respects_target(spark):
     assert _content(spark, tmp) == before
 
 
-def test_singleton_bins_are_skipped(spark):
-    tmp = _write_shattered(spark, 1000, 3)
+def test_singleton_bins_are_skipped(spark, tmp_path):
+    tmp = _write_shattered(spark, str(tmp_path), 1000, 3)
     sizes = [
         e.stat().st_size
         for e in os.scandir(tmp)
@@ -99,11 +97,11 @@ def test_singleton_bins_are_skipped(spark):
     assert compaction_plan(tmp, target_bytes=min(sizes) + 1) == []
 
 
-def test_schema_drift_across_small_files_is_merged(spark):
+def test_schema_drift_across_small_files_is_merged(spark, tmp_path):
     # a small-file producer that added a column mid-stream: compaction must
     # mergeSchema, not infer from one footer and silently drop the new
     # column before unlinking the originals (round-6 review)
-    tmp = tempfile.mkdtemp(prefix="ironbeam_compact_drift_")
+    tmp = str(tmp_path)
     spark.range(5).coalesce(1).write.mode("append").parquet(tmp)
     spark.range(5, 10).withColumn("extra", F.col("id") * 3).coalesce(
         1

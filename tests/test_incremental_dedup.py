@@ -132,8 +132,6 @@ def test_max_band_bucket_guard_in_batch_pairs(spark):
 def test_stream_dedup_against_index(spark, tmp_path):
     """Streaming admission check agrees with the batch classifier's
     corpus branch on the same split of real testdata."""
-    import tempfile
-
     from ironbeam_spark.operators.incremental import minhash_verify_table
     from ironbeam_spark.streaming.dedup import stream_dedup_against_index
 
@@ -150,7 +148,7 @@ def test_stream_dedup_against_index(spark, tmp_path):
         .select("doc_id", "text")
     )
     matches = stream_dedup_against_index(sdf, idx, ver, "doc_id", "text")
-    ckpt = tempfile.mkdtemp(prefix="ironbeam_test_ckpt_", dir=str(tmp_path))
+    ckpt = str(tmp_path / "ckpt")
     q = (
         matches.writeStream.format("memory")
         .queryName("t_stream_dedup_idx")
@@ -178,8 +176,6 @@ def test_stream_dedup_guard_raises_on_hot_index_bucket(spark, tmp_path):
     """End-to-end raise path for the streaming variant: a boilerplate
     cluster in the STATIC index trips the guard mid-micro-batch (the
     failure surfaces through the StreamingQuery, not as a silent melt)."""
-    import tempfile
-
     import pytest
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
@@ -197,7 +193,7 @@ def test_stream_dedup_guard_raises_on_hot_index_bucket(spark, tmp_path):
     matches = stream_dedup_against_index(
         sdf, idx, ver, "doc_id", "text", max_band_bucket=3
     )
-    ckpt = tempfile.mkdtemp(prefix="ironbeam_guard_ckpt_", dir=str(tmp_path))
+    ckpt = str(tmp_path / "ckpt")
     q = (
         matches.writeStream.format("memory")
         .queryName("t_stream_guard")
@@ -494,7 +490,6 @@ def test_bucketed_index_also_serves_the_streaming_admission_join(spark, tmp_path
     import contextlib
     import io
     import re
-    import tempfile
 
     from ironbeam_spark.operators.incremental import (
         minhash_index,
@@ -529,7 +524,7 @@ def test_bucketed_index_also_serves_the_streaming_admission_join(spark, tmp_path
         matches = stream_dedup_against_index(
             sdf, spark.table("t_mh_sidx"), ver, "doc_id", "text"
         )
-        ckpt = tempfile.mkdtemp(prefix="ckpt_bidx_", dir=str(tmp_path))
+        ckpt = str(tmp_path / "ckpt")
         q = (
             matches.writeStream.format("memory")
             .queryName("t_mh_sidx_out")

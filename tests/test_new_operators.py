@@ -709,6 +709,60 @@ def test_rvid_roundtrip_and_frame_sampling(spark):
     assert len(bad) == 1 and bad[0].frame_idx == -1 and bad[0].error
 
 
+def _null_payload_cases():
+    from ironbeam_spark.operators import multimodal as mm
+    from ironbeam_spark.operators.mpeg import probe_mpeg_audio, synthesize_mpeg_stream
+
+    # operator name -> (run over (doc_id, payload), one valid payload,
+    # a feature column that is set for it and null for a dead-letter row)
+    return {
+        "decode_image": (
+            lambda df: mm.decode_image(df, "doc_id", "payload"),
+            mm.encode_png(2, 2, bytes(range(12))),
+            "width",
+        ),
+        "decode_audio": (
+            lambda df: mm.decode_audio(df, "doc_id", "payload"),
+            mm.encode_wav_pcm16(8000, 1, [0, 5, -5]),
+            "n_frames",
+        ),
+        "resize_image": (
+            lambda df: mm.resize_image(df, "doc_id", "payload", 1, 1),
+            mm.encode_ppm(2, 2, bytes(range(12))),
+            "width",
+        ),
+        "sample_frames": (
+            lambda df: mm.sample_frames(df, "doc_id", "payload", 1),
+            mm.encode_rvid(1, 1, 10, [bytes(3), bytes(3)]),
+            "width",
+        ),
+        "probe_mpeg_audio": (
+            lambda df: probe_mpeg_audio(df, "doc_id", "payload"),
+            synthesize_mpeg_stream(n_frames=3),
+            "frames",
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["decode_image", "decode_audio", "resize_image", "sample_frames", "probe_mpeg_audio"],
+)
+def test_null_payload_is_dead_lettered(spark, op):
+    """A NULL payload (a WebDataset sample without the member) yields the
+    operator's dead-letter row — null features plus an error — and the
+    valid payload next to it still decodes."""
+    run, valid, feature = _null_payload_cases()[op]
+    df = spark.createDataFrame([(1, valid), (2, None)], "doc_id long, payload binary")
+    rows = run(df).collect()
+    good = [r for r in rows if r.doc_id == 1]
+    (bad,) = [r for r in rows if r.doc_id == 2]
+    assert good and all(r.error is None and r[feature] is not None for r in good)
+    assert bad.error and bad[feature] is None
+    if op == "sample_frames":
+        assert bad.frame_idx == -1
+
+
 def test_cms_estimates_guarantee(spark):
     """CMS contract: never underestimates, and with width >> distinct items
     the estimate is exact for every key."""

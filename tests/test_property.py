@@ -470,9 +470,7 @@ def test_media_decoders_raise_only_valueerror(data):
 def test_tar_shard_roundtrip_property(spark, data):
     """write_tar_shards -> read_tar_members round-trips ANY binary/unicode
     payload mix byte for byte, across partitionings."""
-    import shutil
     import tempfile
-    import uuid
 
     from ironbeam_spark.sources.tar import read_tar_members, write_tar_shards
 
@@ -485,8 +483,7 @@ def test_tar_shard_roundtrip_property(spark, data):
         )
         for i in range(n)
     ]
-    out = tempfile.mkdtemp(prefix=f"ironbeam_tarprop_{uuid.uuid4().hex[:6]}_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="ironbeam_tarprop_") as out:
         df = spark.createDataFrame(
             rows, "k long, blob binary, txt string"
         ).repartition(data.draw(st.integers(1, 4)))
@@ -500,5 +497,3 @@ def test_tar_shard_roundtrip_property(spark, data):
                 assert got[(str(k), "blob")] == blob
             if txt:
                 assert got[(str(k), "txt")] == txt.encode("utf-8")
-    finally:
-        shutil.rmtree(out, ignore_errors=True)

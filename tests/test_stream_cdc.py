@@ -4,7 +4,6 @@ tombstone/resurrection, late-row suppression, batch equivalence."""
 from __future__ import annotations
 
 import random
-import tempfile
 import uuid
 
 import pyspark.sql.functions as F
@@ -16,14 +15,14 @@ from ironbeam_spark.streaming.cdc import stream_apply_changes
 SCHEMA = "key long, us long, seq long, op string, val string"
 
 
-def _run_stream(spark, batches):
+def _run_stream(spark, tmp_path, batches):
     """batches: list[list[rows]] -> converged snapshot dict + emissions.
 
     Each inner list becomes one parquet file; maxFilesPerTrigger=1 makes
     each file one micro-batch (file order = listing order, so file names
     are zero-padded)."""
     tag = uuid.uuid4().hex[:8]
-    src = tempfile.mkdtemp(prefix=f"ironbeam_cdc_src_{tag}_")
+    src = str(tmp_path / "src")
     for i, rows in enumerate(batches):
         spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(
             f"{src}/b{i:03d}"
@@ -41,7 +40,7 @@ def _run_stream(spark, batches):
         out.writeStream.format("memory")
         .queryName(name)
         .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ironbeam_cdc_ck_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -70,23 +69,23 @@ def _batch_snap(spark, rows):
     return {r["key"]: (r["val"], r["_us"]) for r in got.collect()}
 
 
-def test_tombstone_and_resurrection_across_batches(spark):
+def test_tombstone_and_resurrection_across_batches(spark, tmp_path):
     b1 = [(1, 10, 0, "U", "a"), (2, 10, 1, "U", "x")]
     b2 = [(1, 20, 2, "D", None)]          # tombstone key 1
     b3 = [(1, 30, 3, "U", "back")]        # resurrect key 1
-    snap, _ = _run_stream(spark, [b1, b2, b3])
+    snap, _ = _run_stream(spark, tmp_path, [b1, b2, b3])
     assert snap == {1: ("back", 30), 2: ("x", 10)}
 
 
-def test_late_row_is_ignored(spark):
+def test_late_row_is_ignored(spark, tmp_path):
     b1 = [(1, 100, 0, "U", "new")]
     b2 = [(1, 50, 1, "U", "late")]  # older than stored winner: no emission
-    snap, n_emissions = _run_stream(spark, [b1, b2])
+    snap, n_emissions = _run_stream(spark, tmp_path, [b1, b2])
     assert snap == {1: ("new", 100)}
     assert n_emissions == 1  # the late batch emitted nothing
 
 
-def test_stream_converges_to_batch_apply(spark):
+def test_stream_converges_to_batch_apply(spark, tmp_path):
     rng = random.Random(606)
     rows = [
         (rng.randrange(10), rng.randrange(200), i,
@@ -94,5 +93,5 @@ def test_stream_converges_to_batch_apply(spark):
         for i in range(120)
     ]
     batches = [rows[0:40], rows[40:80], rows[80:120]]
-    snap, _ = _run_stream(spark, batches)
+    snap, _ = _run_stream(spark, tmp_path, batches)
     assert snap == _batch_snap(spark, rows)

@@ -4,8 +4,6 @@ content equivalence, replay idempotence, crash-window recovery."""
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 import pyspark.sql.functions as F
 
@@ -14,8 +12,7 @@ from ironbeam_spark.streaming.sink import IdempotentParquetSink
 SCHEMA = "k long, v long"
 
 
-def _mk_source(spark, batches):
-    src = tempfile.mkdtemp(prefix=f"ironbeam_sink_src_{uuid.uuid4().hex[:6]}_")
+def _mk_source(spark, src, batches):
     for i, rows in enumerate(batches):
         spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(
             f"{src}/b{i:03d}"
@@ -44,19 +41,19 @@ def _content(spark, path):
     )
 
 
-def test_multi_batch_content_and_manifest(spark):
+def test_multi_batch_content_and_manifest(spark, tmp_path):
     batches = [[(i, i * 2) for i in range(j * 10, j * 10 + 10)] for j in range(3)]
-    src = _mk_source(spark, batches)
-    out = tempfile.mkdtemp(prefix="ironbeam_sink_out_")
+    src = _mk_source(spark, str(tmp_path / "src"), batches)
+    out = str(tmp_path / "out")
     sink = IdempotentParquetSink(out)
-    _run(spark, src, sink, tempfile.mkdtemp(prefix="ironbeam_sink_ck_"))
+    _run(spark, src, sink, str(tmp_path / "ckpt"))
     want = sorted((i, i * 2) for j in range(3) for i in range(j * 10, j * 10 + 10))
     assert _content(spark, out) == want
     assert len(sink.committed_ids()) == 3  # one commit per micro-batch
 
 
-def test_replayed_batch_is_a_noop(spark):
-    out = tempfile.mkdtemp(prefix="ironbeam_sink_out_")
+def test_replayed_batch_is_a_noop(spark, tmp_path):
+    out = str(tmp_path)
     sink = IdempotentParquetSink(out)
     df = spark.createDataFrame([(1, 2), (3, 4)], SCHEMA)
     sink(df, 0)
@@ -67,8 +64,8 @@ def test_replayed_batch_is_a_noop(spark):
     assert sink.committed_ids() == {0}
 
 
-def test_crash_between_rename_and_manifest_recovers(spark):
-    out = tempfile.mkdtemp(prefix="ironbeam_sink_out_")
+def test_crash_between_rename_and_manifest_recovers(spark, tmp_path):
+    out = str(tmp_path)
     sink = IdempotentParquetSink(out)
     df = spark.createDataFrame([(7, 8)], SCHEMA)
     # simulate: batch dir landed but the manifest append never happened
@@ -79,11 +76,11 @@ def test_crash_between_rename_and_manifest_recovers(spark):
     assert sink.committed_ids() == {0}
 
 
-def test_restart_processes_only_new_batches(spark):
+def test_restart_processes_only_new_batches(spark, tmp_path):
     batches = [[(1, 1)], [(2, 2)]]
-    src = _mk_source(spark, batches)
-    out = tempfile.mkdtemp(prefix="ironbeam_sink_out_")
-    ckpt = tempfile.mkdtemp(prefix="ironbeam_sink_ck_")
+    src = _mk_source(spark, str(tmp_path / "src"), batches)
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
     sink = IdempotentParquetSink(out)
     _run(spark, src, sink, ckpt)
     assert _content(spark, out) == [(1, 1), (2, 2)]
@@ -96,11 +93,11 @@ def test_restart_processes_only_new_batches(spark):
     assert len(sink.committed_ids()) == 3
 
 
-def test_stale_inflight_dirs_swept_on_init(spark):
+def test_stale_inflight_dirs_swept_on_init(spark, tmp_path):
     # a crash between the parquet write and the rename orphans an
     # .inflight-* dir; a fresh sink on the path must sweep it (round-6
     # review: otherwise every crash-replay cycle leaks a batch copy)
-    out = tempfile.mkdtemp(prefix=f"ironbeam_sink_sweep_{uuid.uuid4().hex[:6]}_")
+    out = str(tmp_path)
     stale = os.path.join(out, ".inflight-deadbeef")
     os.makedirs(stale)
     with open(os.path.join(out, "_manifest.tmp-deadbeef"), "w") as fh:

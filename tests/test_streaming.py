@@ -22,15 +22,18 @@ def _events_stream(spark):
 
 
 def _run_to_memory(sdf, name, mode):
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ironbeam_state_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # also called inside a hypothesis body, where tmp_path is not reset per
+    # example: the checkpoint lives exactly as long as the query
+    with tempfile.TemporaryDirectory(prefix="ironbeam_state_") as ckpt:
+        q = (
+            sdf.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
 
 
 def test_stream_dedup_first_matches_batch_winner(spark):
@@ -284,7 +287,6 @@ def test_rocksdb_changelog_batch_equivalence_property(spark):
     HDFS-backed one and RocksDB with changelog checkpointing.  Covers the
     two hardest state shapes: cross-batch first-seen dedup and session
     windows that merge across micro-batches."""
-    import shutil
     import uuid
 
     from hypothesis import HealthCheck, given, settings
@@ -307,8 +309,7 @@ def test_rocksdb_changelog_batch_equivalence_property(spark):
     )
     def run(events):
         tag = uuid.uuid4().hex[:8]
-        src = tempfile.mkdtemp(prefix=f"ironbeam_prop_src_{tag}_")
-        try:
+        with tempfile.TemporaryDirectory(prefix=f"ironbeam_prop_src_{tag}_") as src:
             static = spark.createDataFrame(
                 events, "user_id int, off int, event_id int"
             ).select(
@@ -396,8 +397,6 @@ def test_rocksdb_changelog_batch_equivalence_property(spark):
                 else:
                     check()
             assert winners["default"] == winners["rocksdb"]
-        finally:
-            shutil.rmtree(src, ignore_errors=True)
 
     run()
 

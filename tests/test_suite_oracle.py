@@ -3,12 +3,30 @@ sf0.001 (fast smoke; tools/check.py covers sf0.01 — the driver's gate)."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import pytest
 
 from ironbeam_spark.suite import QUERIES
 from tests.conftest import SF_SMOKE, assert_df_equals_oracle
 
 ORACLE_QUERIES = [n for n, q in QUERIES.items() if q.oracle is not None]
+
+
+@pytest.fixture(autouse=True)
+def no_streaming_checkpoint_left(monkeypatch, tmp_path):
+    """Every query's temp dirs land in ``tmp_path``; afterwards none of them
+    may still hold a streaming checkpoint (``offsets/`` or ``commits/``): a
+    bounded replay's checkpoint is removed when its query ends."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    yield
+    left = [
+        root
+        for root, dirs, _ in os.walk(tmp_path)
+        if "offsets" in dirs or "commits" in dirs
+    ]
+    assert not left, f"streaming checkpoints left behind: {left}"
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)

@@ -7,7 +7,6 @@ from __future__ import annotations
 import glob
 import gzip
 import os
-import tempfile
 
 import pytest
 
@@ -34,8 +33,8 @@ def _write(spark, tmp, **kw):
     return df
 
 
-def test_roundtrip_plain(spark):
-    tmp = tempfile.mkdtemp(prefix="warc_rt_")
+def test_roundtrip_plain(spark, tmp_path):
+    tmp = str(tmp_path)
     _write(spark, tmp)
     back = {r.target_uri: r for r in read_warc(spark, tmp).collect()}
     assert len(back) == len(_ROWS)
@@ -48,10 +47,10 @@ def test_roundtrip_plain(spark):
         assert r.record_id.startswith("<urn:uuid:") and r.record_id.endswith(">")
 
 
-def test_roundtrip_gzip_multimember_matches_plain(spark):
+def test_roundtrip_gzip_multimember_matches_plain(spark, tmp_path):
     """compress=True writes one gzip MEMBER per record (the Common Crawl
     layout); the reader must consume concatenated members to exhaustion."""
-    plain, gz = tempfile.mkdtemp(prefix="warc_p_"), tempfile.mkdtemp(prefix="warc_z_")
+    plain, gz = str(tmp_path / "plain"), str(tmp_path / "gz")
     _write(spark, plain)
     _write(spark, gz, compress=True)
     shard = glob.glob(os.path.join(gz, "*.warc.gz"))[0]
@@ -68,8 +67,8 @@ def test_roundtrip_gzip_multimember_matches_plain(spark):
     assert a == b
 
 
-def test_record_ids_are_deterministic(spark):
-    t1, t2 = tempfile.mkdtemp(prefix="warc_d1_"), tempfile.mkdtemp(prefix="warc_d2_")
+def test_record_ids_are_deterministic(spark, tmp_path):
+    t1, t2 = str(tmp_path / "d1"), str(tmp_path / "d2")
     _write(spark, t1)
     _write(spark, t2)
     ids1 = {r.target_uri: r.record_id for r in read_warc(spark, t1).collect()}
@@ -106,12 +105,12 @@ def test_parse_hand_framed_record_from_spec():
     assert p1 == b"abc" and f1["warc-target-uri"] == "http://b.example/2"
 
 
-def test_binary_payload_roundtrip(spark):
+def test_binary_payload_roundtrip(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "http://x/1", bytearray(bytes(range(256))))],
         "doc_id int, uri string, body binary",
     )
-    tmp = tempfile.mkdtemp(prefix="warc_bin_")
+    tmp = str(tmp_path)
     assert write_warc(df, tmp, uri_col="uri", payload_col="body") == 1
     r = read_warc(spark, tmp).collect()[0]
     assert bytes(r.payload) == bytes(range(256)) and r.content_length == 256
@@ -134,8 +133,8 @@ def test_malformed_framing_fails_fast(raw, msg):
         list(parse_warc_records(raw))
 
 
-def test_write_modes(spark):
-    tmp = tempfile.mkdtemp(prefix="warc_modes_")
+def test_write_modes(spark, tmp_path):
+    tmp = str(tmp_path)
     df = _write(spark, tmp)
     with pytest.raises(FileExistsError):
         write_warc(df, tmp, uri_col="uri", payload_col="body", mode="error")
@@ -144,43 +143,41 @@ def test_write_modes(spark):
     assert read_warc(spark, tmp).count() == 8
 
 
-def _run_available_now(df, name):
-    import tempfile as _tf
-
+def _run_available_now(df, name, ckpt):
     q = (
         df.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", _tf.mkdtemp(prefix="warc_ckpt_"))
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
 
 
-def test_streaming_reader_equals_batch_reader(spark):
+def test_streaming_reader_equals_batch_reader(spark, tmp_path):
     from ironbeam_spark.sources.warc import read_warc_streaming
 
-    tmp = tempfile.mkdtemp(prefix="warc_sb_")
+    tmp = str(tmp_path / "warc")
     _write(spark, tmp, compress=True)
-    _run_available_now(read_warc_streaming(spark, tmp), "warc_sb_sink")
+    _run_available_now(
+        read_warc_streaming(spark, tmp), "warc_sb_sink", str(tmp_path / "ckpt")
+    )
     got = sorted(tuple(r) for r in spark.table("warc_sb_sink").collect())
     want = sorted(tuple(r) for r in read_warc(spark, tmp).collect())
     assert got == want and len(got) == len(_ROWS)
 
 
-def test_streaming_reader_picks_up_new_shards_incrementally(spark):
+def test_streaming_reader_picks_up_new_shards_incrementally(spark, tmp_path):
     """The continuous-ingestion claim: a second AvailableNow run over the
     SAME checkpoint processes only shards that landed after the first run
     (file-source exactly-once tracking)."""
-    import tempfile as _tf
-
     from ironbeam_spark.sources.warc import read_warc_streaming
 
-    tmp = tempfile.mkdtemp(prefix="warc_inc_")
+    tmp = str(tmp_path / "warc")
     _write(spark, tmp, compress=True)
-    ckpt = _tf.mkdtemp(prefix="warc_inc_ckpt_")
-    sink = _tf.mkdtemp(prefix="warc_inc_sink_")
+    ckpt = str(tmp_path / "ckpt")
+    sink = str(tmp_path / "sink")
 
     def run():
         # a FILE sink supports checkpoint recovery (memory sink does not)
@@ -209,23 +206,23 @@ def test_streaming_reader_picks_up_new_shards_incrementally(spark):
     assert sorted(second) == sorted(first + ["http://corpus.local/en/9"]), second
 
 
-def test_wet_style_conversion_records(spark):
+def test_wet_style_conversion_records(spark, tmp_path):
     """Common Crawl WET layout: warc_type='conversion' extracted-text
     records, same framing — round-trips with the type preserved."""
-    tmp = tempfile.mkdtemp(prefix="warc_wet_")
+    tmp = str(tmp_path)
     _write(spark, tmp, warc_type="conversion", compress=True)
     rows = read_warc(spark, tmp).collect()
     assert len(rows) == len(_ROWS)
     assert {r.warc_type for r in rows} == {"conversion"}
 
 
-def test_decode_is_arrow_native(spark):
+def test_decode_is_arrow_native(spark, tmp_path):
     """The record decode crosses the Python boundary as mapInArrow building
     typed Arrow arrays (r12 optimization: the mapInPandas spelling paid an
     O(rows) pandas object-block construction plus a pandas->Arrow conversion
     per batch for nothing — measured 1.05-1.21x, growing with rows/task).
     Pin the node so a refactor doesn't quietly reintroduce the pandas hop."""
-    tmp = tempfile.mkdtemp(prefix="warc_node_")
+    tmp = str(tmp_path)
     _write(spark, tmp)
     plan = read_warc(spark, tmp)._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan, plan

@@ -32,6 +32,7 @@ _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
+from ironbeam_spark.caches import release_all_caches  # noqa: E402
 from ironbeam_spark.sources.io import TPCH_TABLES  # noqa: E402
 from ironbeam_spark.suite import QUERIES  # noqa: E402
 
@@ -112,6 +113,45 @@ def canon_table(tbl: pa.Table) -> list[tuple]:
     return sorted(zip(*cols)) if cols else [() for _ in range(tbl.num_rows)]
 
 
+def check_query(spark, con, sf_dir: str, name: str) -> bool:
+    """Fetch one query from both engines as Arrow, compare, print the verdict."""
+    q = QUERIES[name]
+    t0 = time.time()
+    try:
+        s_tbl = q.fn(spark, sf_dir).toArrow()
+    except Exception as e:
+        print(f"FAIL {name}: spark error: {e}")
+        return False
+    try:
+        d_tbl = con.execute(q.oracle).arrow()
+    except Exception as e:
+        print(f"FAIL {name}: duckdb error: {e}")
+        return False
+    msgs = []
+    if sorted(s_tbl.column_names) != sorted(d_tbl.column_names):
+        msgs.append(
+            f"schema: spark={sorted(s_tbl.column_names)} "
+            f"duck={sorted(d_tbl.column_names)}"
+        )
+    elif s_tbl.num_rows != d_tbl.num_rows:
+        msgs.append(
+            f"rowcount: spark={s_tbl.num_rows} duck={d_tbl.num_rows}"
+        )
+    else:
+        sn, dn = canon_table(s_tbl), canon_table(d_tbl)
+        if sn != dn:
+            diffs = [(a, b) for a, b in zip(sn, dn) if a != b][:2]
+            for a, b in diffs:
+                for x, y in zip(a, b):
+                    if x != y:
+                        msgs.append(f"value: spark={x} duck={y}")
+    if msgs:
+        print(f"FAIL {name}: " + "; ".join(msgs[:6]))
+        return False
+    print(f"PASS {name} ({s_tbl.num_rows} rows, {time.time()-t0:.1f}s)")
+    return True
+
+
 def main() -> int:
     args = sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
@@ -133,50 +173,16 @@ def main() -> int:
             print(f"skip {name}: rows-only")
             n_skip += 1
             continue
-        t0 = time.time()
         try:
-            s_tbl = q.fn(spark, sf_dir).toArrow()
-        except Exception as e:
-            print(f"FAIL {name}: spark error: {e}")
-            n_fail += 1
-            continue
-        try:
-            d_tbl = con.execute(q.oracle).arrow()
-        except Exception as e:
-            print(f"FAIL {name}: duckdb error: {e}")
-            n_fail += 1
-            continue
-        msgs = []
-        if sorted(s_tbl.column_names) != sorted(d_tbl.column_names):
-            msgs.append(
-                f"schema: spark={sorted(s_tbl.column_names)} "
-                f"duck={sorted(d_tbl.column_names)}"
-            )
-        elif s_tbl.num_rows != d_tbl.num_rows:
-            msgs.append(
-                f"rowcount: spark={s_tbl.num_rows} duck={d_tbl.num_rows}"
-            )
-        else:
-            sn, dn = canon_table(s_tbl), canon_table(d_tbl)
-            if sn != dn:
-                diffs = [(a, b) for a, b in zip(sn, dn) if a != b][:2]
-                for a, b in diffs:
-                    for x, y in zip(a, b):
-                        if x != y:
-                            msgs.append(f"value: spark={x} duck={y}")
-        if msgs:
-            print(f"FAIL {name}: " + "; ".join(msgs[:6]))
-            n_fail += 1
-        else:
-            print(
-                f"PASS {name} ({s_tbl.num_rows} rows, {time.time()-t0:.1f}s)"
-            )
-            n_pass += 1
+            ok = check_query(spark, con, sf_dir, name)
+        finally:
+            # a held frame must not outlive its compare: CacheManager would
+            # serve it to a later, structurally equal plan (caches.py)
+            release_all_caches()
+        n_pass += ok
+        n_fail += not ok
 
     print(f"\n{n_pass} passed, {n_fail} failed, {n_skip} rows-only")
-    from ironbeam_spark.caches import release_all_caches
-
-    release_all_caches()
     return 1 if n_fail else 0
 
 

@@ -22,6 +22,7 @@ _REPO = str(Path(__file__).resolve().parent.parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
+from ironbeam_spark.caches import release_all_caches  # noqa: E402
 from ironbeam_spark.session import get_spark  # noqa: E402
 from ironbeam_spark.sources.io import TPCH_TABLES  # noqa: E402
 from ironbeam_spark.suite import QUERIES  # noqa: E402
@@ -51,6 +52,69 @@ def close_enough(a, b) -> bool:
         return False
 
 
+def check_query(spark, con, sf_dir: str, name: str) -> bool:
+    """Run one query, compare it with its DuckDB oracle, print the verdict."""
+    q = QUERIES[name]
+    t0 = time.time()
+    try:
+        sdf = q.fn(spark, sf_dir)
+        s_cols = sdf.columns
+        s_rows = [tuple(r) for r in sdf.collect()]
+    except Exception as e:
+        print(f"FAIL {name}: spark error: {e}")
+        return False
+    if q.oracle is None:
+        print(f"pass {name}: rows-only ({len(s_rows)} rows, {time.time()-t0:.1f}s)")
+        return True
+    try:
+        rel = con.execute(q.oracle)
+        d_cols = [d[0] for d in rel.description]
+        d_rows = rel.fetchall()
+    except Exception as e:
+        print(f"FAIL {name}: duckdb error: {e}")
+        return False
+
+    ok = True
+    msgs = []
+    if sorted(s_cols) != sorted(d_cols):
+        ok = False
+        msgs.append(f"schema: spark={sorted(s_cols)} duck={sorted(d_cols)}")
+    # dtype lint: fetchall() above coerces DuckDB HUGEINT/DECIMAL to
+    # Python int, hiding output-typing divergence a dtype-sensitive
+    # external hash WILL see (the four-round q_prefix_scan lesson);
+    # re-type-check the oracle through Arrow (LIMIT 0 — no re-run)
+    try:
+        dmm = dtype_mismatches(sdf.schema, oracle_arrow_schema(con, q.oracle))
+    except Exception as e:  # never let the probe mask the value verdict
+        dmm = [f"dtype probe error: {e}"]
+    if dmm:
+        ok = False
+        msgs.append("dtype: " + "; ".join(dmm))
+    if len(s_rows) != len(d_rows):
+        ok = False
+        msgs.append(f"rowcount: spark={len(s_rows)} duck={len(d_rows)}")
+    if ok:
+        sn = normalize(s_rows, s_cols)
+        dn = normalize(d_rows, d_cols)
+        if sn != dn:
+            ok = False
+            diffs = [
+                (a, b)
+                for a, b in zip(sn, dn)
+                if a != b
+            ][:3]
+            for a, b in diffs:
+                for x, y in zip(a, b):
+                    if x != y:
+                        tol = "≈" if close_enough(x, y) else "≠"
+                        msgs.append(f"value {tol}: spark={x} duck={y}")
+    if ok:
+        print(f"PASS {name} ({len(s_rows)} rows, {time.time()-t0:.1f}s)")
+    else:
+        print(f"FAIL {name}: " + "; ".join(msgs[:6]))
+    return ok
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:] if a != "--bare"]
     bare = "--bare" in sys.argv[1:]
@@ -78,76 +142,16 @@ def main() -> int:
 
     n_pass = n_fail = 0
     for name in names:
-        q = QUERIES[name]
-        t0 = time.time()
         try:
-            sdf = q.fn(spark, sf_dir)
-            s_cols = sdf.columns
-            s_rows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:
-            print(f"FAIL {name}: spark error: {e}")
-            n_fail += 1
-            continue
-        if q.oracle is None:
-            print(f"pass {name}: rows-only ({len(s_rows)} rows, {time.time()-t0:.1f}s)")
-            n_pass += 1
-            continue
-        try:
-            rel = con.execute(q.oracle)
-            d_cols = [d[0] for d in rel.description]
-            d_rows = rel.fetchall()
-        except Exception as e:
-            print(f"FAIL {name}: duckdb error: {e}")
-            n_fail += 1
-            continue
-
-        ok = True
-        msgs = []
-        if sorted(s_cols) != sorted(d_cols):
-            ok = False
-            msgs.append(f"schema: spark={sorted(s_cols)} duck={sorted(d_cols)}")
-        # dtype lint: fetchall() above coerces DuckDB HUGEINT/DECIMAL to
-        # Python int, hiding output-typing divergence a dtype-sensitive
-        # external hash WILL see (the four-round q_prefix_scan lesson);
-        # re-type-check the oracle through Arrow (LIMIT 0 — no re-run)
-        try:
-            dmm = dtype_mismatches(sdf.schema, oracle_arrow_schema(con, q.oracle))
-        except Exception as e:  # never let the probe mask the value verdict
-            dmm = [f"dtype probe error: {e}"]
-        if dmm:
-            ok = False
-            msgs.append("dtype: " + "; ".join(dmm))
-        if len(s_rows) != len(d_rows):
-            ok = False
-            msgs.append(f"rowcount: spark={len(s_rows)} duck={len(d_rows)}")
-        if ok:
-            sn = normalize(s_rows, s_cols)
-            dn = normalize(d_rows, d_cols)
-            if sn != dn:
-                ok = False
-                diffs = [
-                    (a, b)
-                    for a, b in zip(sn, dn)
-                    if a != b
-                ][:3]
-                for a, b in diffs:
-                    for x, y in zip(a, b):
-                        if x != y:
-                            tol = "≈" if close_enough(x, y) else "≠"
-                            msgs.append(f"value {tol}: spark={x} duck={y}")
-        if ok:
-            print(f"PASS {name} ({len(s_rows)} rows, {time.time()-t0:.1f}s)")
-            n_pass += 1
-        else:
-            print(f"FAIL {name}: " + "; ".join(msgs[:6]))
-            n_fail += 1
+            ok = check_query(spark, con, sf_dir, name)
+        finally:
+            # a held frame must not outlive its compare: CacheManager would
+            # serve it to a later, structurally equal plan (caches.py)
+            release_all_caches()
+        n_pass += ok
+        n_fail += not ok
 
     print(f"\n{n_pass} passed, {n_fail} failed")
-    # hygiene: dedup/similarity operators persist shingle/posting tables
-    # per invocation; release them so the gate process exits clean
-    from ironbeam_spark.caches import release_all_caches
-
-    release_all_caches()
     return 1 if n_fail else 0
 
 
