@@ -20,10 +20,10 @@ three versions x three layers.  Rejected with ``ValueError`` (the
 dead-letter contract): free-format bitrate (frames are unsized), mid-
 stream parameter changes, truncated final frames, leading garbage.
 
-Scale shape: one ``mapInPandas`` pass, one row per payload, pure byte
-arithmetic per row — embarrassingly parallel, no shuffle, payloads
-bounded per Arrow batch like every other codec in
-:mod:`ironbeam_spark.operators.multimodal`.
+Scale shape: one pass of the shared ``mapInArrow`` payload map
+(:func:`ironbeam_spark.operators.multimodal.map_payloads`), one row per
+payload, pure byte arithmetic per row — embarrassingly parallel, no
+shuffle, payloads bounded per Arrow batch like every other codec there.
 
 No reference analogue (the reference ships no media code at all); the
 synthesizer exists so tests and oracles can fabricate real streams —
@@ -32,11 +32,11 @@ the prober is the product surface.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from operator import itemgetter
 
 from pyspark.sql import DataFrame
 
-from ironbeam_spark.operators.multimodal import payload_bytes
+from ironbeam_spark.operators.multimodal import map_payloads
 
 __all__ = ["probe_mpeg_bytes", "probe_mpeg_audio", "synthesize_mpeg_stream"]
 
@@ -184,39 +184,19 @@ def _probe(b: bytes) -> dict:
     }
 
 
+_PROBE_FIELDS = [
+    ("fmt", "string"), ("version", "string"), ("sample_rate", "long"),
+    ("channels", "long"), ("frames", "long"), ("duration_ms", "long"),
+    ("kbps_min", "long"), ("kbps_max", "long"), ("vbr", "boolean"),
+]
+
+
 def probe_mpeg_audio(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
-    """Per-row MPEG audio metadata with the dead-letter error-column
-    convention of :func:`ironbeam_spark.operators.multimodal.decode_audio`."""
-    import pandas as pd
-
-    def probe(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            rows = []
-            for rid, blob in zip(pdf[id_col], pdf[blob_col]):
-                try:
-                    d = probe_mpeg_bytes(payload_bytes(blob))
-                    rows.append(
-                        (rid, d["fmt"], d["version"], d["sample_rate"],
-                         d["channels"], d["frames"], d["duration_ms"],
-                         d["kbps_min"], d["kbps_max"], d["vbr"], None)
-                    )
-                except ValueError as e:
-                    rows.append(
-                        (rid, None, None, None, None, None, None, None,
-                         None, None, str(e))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "fmt", "version", "sample_rate", "channels",
-                         "frames", "duration_ms", "kbps_min", "kbps_max",
-                         "vbr", "error"],
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(
-        probe,
-        f"{id_col} long, fmt string, version string, sample_rate long, "
-        "channels long, frames long, duration_ms long, kbps_min long, "
-        "kbps_max long, vbr boolean, error string",
+    """Per-row MPEG audio metadata with the dead-letter error column of
+    :func:`ironbeam_spark.operators.multimodal.map_payloads`."""
+    get = itemgetter(*(n for n, _ in _PROBE_FIELDS))
+    return map_payloads(
+        df, id_col, blob_col, _PROBE_FIELDS, lambda b: [get(probe_mpeg_bytes(b))]
     )
 
 

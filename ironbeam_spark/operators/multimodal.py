@@ -6,8 +6,9 @@ Convention: a modality column is an opaque ``binary`` payload plus a typed
 metadata struct built here (``byte_len``, ``sha256``, ``modality``,
 ``content_type``).  Decode is tiered by what this container can host:
 
-- **plumbing (real, tested)**: schema, Arrow batch shape, ``mapInPandas``
-  signature, partitioning — identical for any decoder;
+- **plumbing (real, tested)**: schema, Arrow batch shape, partitioning and
+  the dead-letter row, all owned by ONE ``mapInArrow`` call,
+  :func:`map_payloads` — identical for any decoder;
 - **real codecs (pure Python, from the public format specs)**:
   :func:`decode_image` parses uncompressed 24-bit **BMP** (BITMAPINFOHEADER,
   BI_RGB), **PPM** (P6 binary / P3 ASCII), and **PNG** (RFC 2083 /
@@ -35,6 +36,7 @@ from __future__ import annotations
 
 import struct
 from collections.abc import Iterator
+from operator import itemgetter
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -55,7 +57,7 @@ __all__ = [
     "decode_image_pixels",
     "decode_audio_bytes",
     "decode_rvid",
-    "payload_bytes",
+    "map_payloads",
     "decode_image",
     "decode_audio",
     "resize_image",
@@ -627,50 +629,70 @@ def decode_image_pixels(b: bytes):
     )
 
 
-_IMAGE_SCHEMA = (
-    "{id} long, fmt string, width long, height long, channels long, "
-    "sum_r long, sum_g long, sum_b long, error string"
-)
+def map_payloads(
+    df: DataFrame, id_col: str, blob_col: str, fields, fn, dead_letter=None
+) -> DataFrame:
+    """The per-payload map behind every binary-payload operator: one
+    ``mapInArrow`` over ``(id_col, blob_col)``.  ``fn(payload: bytes)``
+    returns the feature tuples for one payload — one per output row (several
+    for a fan-out such as :func:`sample_frames`), in ``fields`` order, where
+    ``fields`` is a list of ``(name, DDL type)`` pairs.
+
+    The output is ``id_col`` (keeping its input type), the ``fields``, then
+    ``error string``.  A NULL payload, or a ``fn`` that raises
+    ``ValueError``, yields ONE dead-letter row — ``dead_letter`` (default:
+    all nulls) plus the message — so one bad file never kills a 100 TB job.
+    """
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    ddl = [f"`{id_col}` {df.schema[id_col].dataType.simpleString()}"]
+    ddl += [f"`{n}` {t}" for n, t in fields] + ["error string"]
+    schema = StructType.fromDDL(", ".join(ddl))
+    out = to_arrow_schema(schema)
+    types = out.types[1:]
+    dead = dead_letter or (None,) * len(fields)
+
+    def run(batches: Iterator) -> Iterator:
+        import pyarrow as pa
+
+        for rb in batches:
+            take, rows = [], []
+            for i, blob in enumerate(rb.column(1).to_pylist()):
+                try:
+                    if blob is None:
+                        # e.g. a WebDataset sample without the member
+                        raise ValueError("null payload")
+                    got = [(*t, None) for t in fn(blob)]
+                except ValueError as e:
+                    got = [(*dead, str(e))]
+                take += [i] * len(got)
+                rows += got
+            cols = list(zip(*rows)) or [()] * len(types)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0).take(pa.array(take, pa.int64()))]
+                + [pa.array(c, type=t) for c, t in zip(cols, types)],
+                names=out.names,
+            )
+
+    return df.select(id_col, blob_col).mapInArrow(run, schema)
 
 
-def payload_bytes(blob) -> bytes:
-    """One row's payload as ``bytes`` for the per-row decoders.  A NULL
-    payload (e.g. a WebDataset sample without the requested member) raises
-    ``ValueError`` like any corrupt payload, so it becomes a dead-letter
-    row instead of a ``TypeError`` that kills the job."""
-    if blob is None:
-        raise ValueError("null payload")
-    return bytes(blob)
+_IMAGE_FIELDS = [
+    ("fmt", "string"), ("width", "long"), ("height", "long"),
+    ("channels", "long"), ("sum_r", "long"), ("sum_g", "long"),
+    ("sum_b", "long"),
+]
 
 
 def decode_image(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
-    """REAL image decode over the multimodal plumbing: Arrow-batched
-    ``mapInPandas``; each payload is parsed with :func:`decode_image_bytes`
-    (BMP / PPM / PNG).  Unsupported or corrupt payloads produce a row with null
-    dimensions and the ``error`` message — the dead-letter convention — so
-    one bad file never kills a 100 TB job."""
-    import pandas as pd
-
-    def decode(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            rows = []
-            for rid, blob in zip(pdf[id_col], pdf[blob_col]):
-                try:
-                    d = decode_image_bytes(payload_bytes(blob))
-                    rows.append(
-                        (rid, d["fmt"], d["width"], d["height"], d["channels"],
-                         d["sum_r"], d["sum_g"], d["sum_b"], None)
-                    )
-                except ValueError as e:
-                    rows.append((rid, None, None, None, None, None, None, None, str(e)))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "fmt", "width", "height", "channels",
-                         "sum_r", "sum_g", "sum_b", "error"],
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(
-        decode, _IMAGE_SCHEMA.format(id=id_col)
+    """REAL image decode over the multimodal plumbing: each payload is
+    parsed with :func:`decode_image_bytes` (BMP / PPM / PNG / GIF / JPEG)
+    inside :func:`map_payloads`, whose dead-letter row (null dimensions +
+    ``error``) takes unsupported or corrupt payloads."""
+    get = itemgetter(*(n for n, _ in _IMAGE_FIELDS))
+    return map_payloads(
+        df, id_col, blob_col, _IMAGE_FIELDS, lambda b: [get(decode_image_bytes(b))]
     )
 
 
@@ -792,58 +814,43 @@ def decode_audio_bytes(b: bytes) -> dict:
     }
 
 
+_AUDIO_FIELDS = [
+    ("fmt", "string"), ("sample_rate", "long"), ("channels", "long"),
+    ("bits", "long"), ("n_frames", "long"), ("sum_abs", "long"),
+]
+
+
 def decode_audio(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
-    """REAL audio decode (PCM WAV) with the same dead-letter error-column
-    convention as :func:`decode_image`."""
-    import pandas as pd
-
-    def decode(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            rows = []
-            for rid, blob in zip(pdf[id_col], pdf[blob_col]):
-                try:
-                    d = decode_audio_bytes(payload_bytes(blob))
-                    rows.append((rid, d["fmt"], d["sample_rate"], d["channels"],
-                                 d["bits"], d["n_frames"], d["sum_abs"], None))
-                except ValueError as e:
-                    rows.append((rid, None, None, None, None, None, None, str(e)))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "fmt", "sample_rate", "channels", "bits",
-                         "n_frames", "sum_abs", "error"],
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(
-        decode,
-        f"{id_col} long, fmt string, sample_rate long, channels long, "
-        "bits long, n_frames long, sum_abs long, error string",
+    """REAL audio decode (PCM / G.711 WAV, FLAC) through
+    :func:`map_payloads`, with its dead-letter error column."""
+    get = itemgetter(*(n for n, _ in _AUDIO_FIELDS))
+    return map_payloads(
+        df, id_col, blob_col, _AUDIO_FIELDS, lambda b: [get(decode_audio_bytes(b))]
     )
 
 
+def _byte_features(b: bytes):
+    return [(
+        len(b),
+        b[0] if b else -1,
+        b[-1] if b else -1,
+        int.from_bytes(b[:4], "little") if len(b) >= 4 else -1,
+    )]
+
+
 def fake_decode_features(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
-    """Deterministic stand-in decoder with the real plumbing: Arrow-batched
-    ``mapInPandas``, binary in → fixed-schema features out.
+    """Deterministic stand-in decoder with the real plumbing
+    (:func:`map_payloads`), binary in → fixed-schema features out.
 
     Features are pure byte arithmetic (no codec): payload length, first/last
     byte, and a little-endian u32 of the first 4 bytes — reproducible in any
     engine, so the SQL oracle can verify the full pipeline."""
-
-    def decode(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            blobs = pdf[blob_col]
-            out = pdf[[id_col]].copy()
-            out["byte_len"] = blobs.map(len).astype("int64")
-            out["first_byte"] = blobs.map(lambda b: b[0] if len(b) else -1).astype("int64")
-            out["last_byte"] = blobs.map(lambda b: b[-1] if len(b) else -1).astype("int64")
-            out["head_u32"] = blobs.map(
-                lambda b: int.from_bytes(b[:4], "little") if len(b) >= 4 else -1
-            ).astype("int64")
-            yield out
-
-    schema = (
-        f"{id_col} long, byte_len long, first_byte long, last_byte long, head_u32 long"
+    return map_payloads(
+        df, id_col, blob_col,
+        [("byte_len", "long"), ("first_byte", "long"), ("last_byte", "long"),
+         ("head_u32", "long")],
+        _byte_features,
     )
-    return df.select(id_col, blob_col).mapInPandas(decode, schema)
 
 
 # ------------------------------------------------------------ image resize
@@ -864,41 +871,29 @@ def resize_rgb_nearest(px, out_w: int, out_h: int):
 def resize_image(
     df: DataFrame, id_col: str, blob_col: str, out_w: int, out_h: int
 ) -> DataFrame:
-    """REAL image resize over the multimodal plumbing: decode (BMP/PPM),
-    nearest-neighbor resample, re-encode as PPM, emit the resized payload
-    plus integer channel sums (the oracle-checkable invariant).  Corrupt
-    payloads follow the dead-letter convention (null fields + error)."""
-    import pandas as pd
+    """REAL image resize over the multimodal plumbing: decode (any
+    :func:`decode_image_pixels` format), nearest-neighbor resample,
+    re-encode as PPM, emit the resized payload plus integer channel sums
+    (the oracle-checkable invariant).  Corrupt payloads get the
+    :func:`map_payloads` dead-letter row (null fields + error)."""
+    if out_w < 1 or out_h < 1:
+        raise ValueError(f"resize target must be >= 1x1, got {out_w}x{out_h}")
 
-    def work(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            rows = []
-            for rid, blob in zip(pdf[id_col], pdf[blob_col]):
-                try:
-                    fmt, px = decode_image_pixels(payload_bytes(blob))
-                    rp = resize_rgb_nearest(px, out_w, out_h)
-                    s = rp.reshape(-1, 3).astype("int64").sum(axis=0)
-                    payload = encode_ppm(out_w, out_h, rp.tobytes())
-                    rows.append(
-                        (rid, fmt, int(px.shape[1]), int(px.shape[0]),
-                         out_w, out_h, int(s[0]), int(s[1]), int(s[2]),
-                         payload, None)
-                    )
-                except ValueError as e:
-                    rows.append((rid, None, None, None, None, None, None,
-                                 None, None, None, str(e)))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "src_fmt", "src_width", "src_height",
-                         "width", "height", "sum_r", "sum_g", "sum_b",
-                         "payload", "error"],
-            )
+    def work(b: bytes):
+        fmt, px = decode_image_pixels(b)
+        rp = resize_rgb_nearest(px, out_w, out_h)
+        s = rp.reshape(-1, 3).astype("int64").sum(axis=0)
+        return [(
+            fmt, int(px.shape[1]), int(px.shape[0]), out_w, out_h,
+            int(s[0]), int(s[1]), int(s[2]), encode_ppm(out_w, out_h, rp.tobytes()),
+        )]
 
-    return df.select(id_col, blob_col).mapInPandas(
+    return map_payloads(
+        df, id_col, blob_col,
+        [("src_fmt", "string"), ("src_width", "long"), ("src_height", "long"),
+         ("width", "long"), ("height", "long"), ("sum_r", "long"),
+         ("sum_g", "long"), ("sum_b", "long"), ("payload", "binary")],
         work,
-        f"{id_col} long, src_fmt string, src_width long, src_height long, "
-        "width long, height long, sum_r long, sum_g long, sum_b long, "
-        "payload binary, error string",
     )
 
 
@@ -950,41 +945,25 @@ def sample_frames(
 ) -> DataFrame:
     """Video frame sampling: one output row per kept frame (indices 0,
     every_n, 2·every_n, …) with its timestamp and integer channel sums —
-    the fan-out shape a frame-level feature extractor consumes.  Arrow-
-    batched ``mapInPandas``; corrupt payloads yield a single dead-letter
-    row (frame_idx −1 + error) instead of killing the job."""
-    import pandas as pd
-
+    the fan-out shape a frame-level feature extractor consumes.  Corrupt
+    payloads yield a single :func:`map_payloads` dead-letter row
+    (frame_idx −1 + error) instead of killing the job."""
     if every_n < 1:
         raise ValueError("every_n must be >= 1")
 
-    def work(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            rows = []
-            for rid, blob in zip(pdf[id_col], pdf[blob_col]):
-                try:
-                    v = decode_rvid(payload_bytes(blob))
-                    for idx in range(0, v["n_frames"], every_n):
-                        fr = v["frames"][idx].reshape(-1, 3).astype("int64")
-                        s = fr.sum(axis=0)
-                        ts_ms = idx * 1000 // v["fps"] if v["fps"] else 0
-                        rows.append(
-                            (rid, idx, ts_ms, v["width"], v["height"],
-                             v["n_frames"], int(s[0]), int(s[1]), int(s[2]),
-                             None)
-                        )
-                except ValueError as e:
-                    rows.append((rid, -1, None, None, None, None, None, None,
-                                 None, str(e)))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "frame_idx", "ts_ms", "width", "height",
-                         "n_frames", "sum_r", "sum_g", "sum_b", "error"],
-            )
+    def work(b: bytes):
+        v = decode_rvid(b)
+        for idx in range(0, v["n_frames"], every_n):
+            s = v["frames"][idx].reshape(-1, 3).astype("int64").sum(axis=0)
+            ts_ms = idx * 1000 // v["fps"] if v["fps"] else 0
+            yield (idx, ts_ms, v["width"], v["height"], v["n_frames"],
+                   int(s[0]), int(s[1]), int(s[2]))
 
-    return df.select(id_col, blob_col).mapInPandas(
+    return map_payloads(
+        df, id_col, blob_col,
+        [("frame_idx", "long"), ("ts_ms", "long"), ("width", "long"),
+         ("height", "long"), ("n_frames", "long"), ("sum_r", "long"),
+         ("sum_g", "long"), ("sum_b", "long")],
         work,
-        f"{id_col} long, frame_idx long, ts_ms long, width long, "
-        "height long, n_frames long, sum_r long, sum_g long, sum_b long, "
-        "error string",
+        dead_letter=(-1,) + (None,) * 7,
     )

@@ -14,10 +14,11 @@ How it scales:
   subspace has its own tiny codebook of ``ncode`` centroids.  A vector is
   stored as ``m`` small integers — ``m·log2(ncode)`` bits instead of
   ``4d`` bytes (64 dims × float32 = 256 bytes → 4 subspaces × 3 bits ≈
-  2 bytes: >100× smaller).  ENCODING is one expression-only narrow pass
-  (no shuffle, no Python): per subspace, ``ncode`` codeword L2 distances
-  (a ``transform`` over the broadcast codebook row — see
-  :func:`_with_codebooks`) and an ``array_min`` arg-min.
+  2 bytes: >100× smaller).  ENCODING is one vectorized narrow
+  ``mapInArrow`` pass (no shuffle; :func:`pq_codes_arrow`, or
+  :func:`ivfpq_corpus_codes_arrow` with the IVF cell): per subspace,
+  ``ncode`` codeword L2 distances as numpy matrix ops per batch and a
+  first-occurrence arg-min.
 - SEARCH is asymmetric distance computation (ADC): each query precomputes
   one ``m × ncode`` table of exact sub-dot-products against the codebooks
   (expression-only, on the query side — the small side), then every
@@ -52,7 +53,6 @@ from pyspark.sql import functions as F
 __all__ = [
     "pq_codebooks_from_prefix",
     "pq_train_codebooks",
-    "pq_encode",
     "pq_ann_topk",
     "pq_codes_arrow",
     "ivfpq_corpus_codes_arrow",
@@ -102,7 +102,7 @@ def pq_train_codebooks(
     empty clusters keep their previous center.  Bounded-sample training is
     the standard PQ recipe at scale (Jégou et al. train on a sample and
     encode the full corpus); the distributed full-corpus step is
-    :func:`pq_encode`, never training."""
+    :func:`pq_codes_arrow`, never training."""
     import numpy as np
 
     rows = (
@@ -140,16 +140,6 @@ def _fold_sum(arr: Column) -> Column:
 
 def _sub(vec: Column, j: int, dsub: int) -> Column:
     return F.slice(vec, j * dsub + 1, dsub)
-
-
-def _l2sq(sub: Column, cw: Column) -> Column:
-    return _fold_sum(
-        F.zip_with(
-            sub,
-            cw,
-            lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-        )
-    )
 
 
 def _subdot(sub: Column, cw: Column) -> Column:
@@ -212,32 +202,6 @@ def _dim_guard(df: DataFrame, vec_col: str, d: int) -> DataFrame:
             )
         )
     )
-
-
-def pq_encode(
-    df: DataFrame, vec_col: str, codebooks: list[list[list[float]]]
-) -> DataFrame:
-    """Append ``pq_code_0 .. pq_code_{m-1}`` int columns: per subspace,
-    the L2-nearest codeword's index (ties → lower index).  Expression-only
-    narrow pass — this is the compression step whose output (the code
-    table) is what search scans at 100 TB."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    out = _with_codebooks(_dim_guard(df, vec_col, m * dsub), codebooks)
-    for j in range(m):
-        sub = _sub(F.col(vec_col), j, dsub)
-        # arg-min via array_min over (dist, code) structs: struct ordering
-        # compares dist first, then code — the deterministic tie-break
-        # plain closure capture is safe: F.transform invokes the lambda
-        # immediately while `sub` holds this iteration's value
-        cands = F.transform(
-            F.col("_pq_cb")[j],
-            lambda cw, i: F.struct(
-                _l2sq(sub, cw).alias("d"), i.cast("int").alias("c")
-            ),
-        )
-        out = out.withColumn(f"pq_code_{j}", F.array_min(cands)["c"])
-    return out.drop("_pq_cb")
 
 
 def pq_ann_topk(
@@ -350,7 +314,9 @@ def ivfpq_corpus_codes_arrow(
     ``(id, cell int, pq_code_0..m-1 int)``.
 
     Bit-identical to ``ivf_assign_cells(corpus, …, n_probe=1)`` followed by
-    :func:`pq_encode` (the r12 differential test pins this).  The output is
+    the expression-path PQ encode (``zip_with``/``aggregate`` folds and an
+    ``array_min`` arg-min — kept as the differential reference in
+    ``tests/test_pq.py``, which pins this).  The output is
     INTEGERS ONLY, so equality needs matching arg-max/arg-min decisions,
     not matching doubles — and every sum here replays the expression
     path's sequential left-fold exactly (``np.add.accumulate``, elements
@@ -392,7 +358,8 @@ def pq_codes_arrow(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """PQ encode alone as the same vectorized pass — ``(id, pq_code_0..m-1
-    int)`` — bit-identical to :func:`pq_encode` (the same arg-min decision
+    int)`` — bit-identical to the expression-path encode in
+    ``tests/test_pq.py`` (the same arg-min decision
     logic as :func:`ivfpq_corpus_codes_arrow`, minus the cell column; the
     same r12 differential test pins it).  This is the corpus-dominant step
     of :func:`pq_ann_topk` — the compression pass that touches every

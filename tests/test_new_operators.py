@@ -714,53 +714,120 @@ def _null_payload_cases():
     from ironbeam_spark.operators.mpeg import probe_mpeg_audio, synthesize_mpeg_stream
 
     # operator name -> (run over (doc_id, payload), one valid payload,
-    # a feature column that is set for it and null for a dead-letter row)
+    # a feature column that is set for it and null for a dead-letter row,
+    # the feature columns between doc_id and error as simpleString prints them)
     return {
         "decode_image": (
             lambda df: mm.decode_image(df, "doc_id", "payload"),
             mm.encode_png(2, 2, bytes(range(12))),
             "width",
+            "fmt:string,width:bigint,height:bigint,channels:bigint,"
+            "sum_r:bigint,sum_g:bigint,sum_b:bigint",
         ),
         "decode_audio": (
             lambda df: mm.decode_audio(df, "doc_id", "payload"),
             mm.encode_wav_pcm16(8000, 1, [0, 5, -5]),
             "n_frames",
+            "fmt:string,sample_rate:bigint,channels:bigint,bits:bigint,"
+            "n_frames:bigint,sum_abs:bigint",
         ),
         "resize_image": (
             lambda df: mm.resize_image(df, "doc_id", "payload", 1, 1),
             mm.encode_ppm(2, 2, bytes(range(12))),
             "width",
+            "src_fmt:string,src_width:bigint,src_height:bigint,width:bigint,"
+            "height:bigint,sum_r:bigint,sum_g:bigint,sum_b:bigint,payload:binary",
         ),
         "sample_frames": (
             lambda df: mm.sample_frames(df, "doc_id", "payload", 1),
             mm.encode_rvid(1, 1, 10, [bytes(3), bytes(3)]),
             "width",
+            "frame_idx:bigint,ts_ms:bigint,width:bigint,height:bigint,"
+            "n_frames:bigint,sum_r:bigint,sum_g:bigint,sum_b:bigint",
         ),
         "probe_mpeg_audio": (
             lambda df: probe_mpeg_audio(df, "doc_id", "payload"),
             synthesize_mpeg_stream(n_frames=3),
             "frames",
+            "fmt:string,version:string,sample_rate:bigint,channels:bigint,"
+            "frames:bigint,duration_ms:bigint,kbps_min:bigint,kbps_max:bigint,"
+            "vbr:boolean",
+        ),
+        "fake_decode_features": (
+            lambda df: fake_decode_features(df, "doc_id", "payload"),
+            b"abcde",
+            "byte_len",
+            "byte_len:bigint,first_byte:bigint,last_byte:bigint,head_u32:bigint",
         ),
     }
 
 
-@pytest.mark.parametrize(
-    "op",
-    ["decode_image", "decode_audio", "resize_image", "sample_frames", "probe_mpeg_audio"],
-)
+_PAYLOAD_OPS = [
+    "decode_image", "decode_audio", "resize_image", "sample_frames",
+    "probe_mpeg_audio", "fake_decode_features",
+]
+
+
+@pytest.mark.parametrize("op", _PAYLOAD_OPS)
 def test_null_payload_is_dead_lettered(spark, op):
     """A NULL payload (a WebDataset sample without the member) yields the
     operator's dead-letter row — null features plus an error — and the
-    valid payload next to it still decodes."""
-    run, valid, feature = _null_payload_cases()[op]
-    df = spark.createDataFrame([(1, valid), (2, None)], "doc_id long, payload binary")
-    rows = run(df).collect()
+    valid payload next to it still decodes.  The output keeps its declared
+    schema when every row is dead-lettered (all-null feature columns) and
+    when there are no rows at all."""
+    run, valid, feature, fields = _null_payload_cases()[op]
+    schema = f"struct<doc_id:bigint,{fields},error:string>"
+    ddl = "doc_id long, payload binary"
+    rows = run(spark.createDataFrame([(1, valid), (2, None)], ddl)).collect()
     good = [r for r in rows if r.doc_id == 1]
     (bad,) = [r for r in rows if r.doc_id == 2]
     assert good and all(r.error is None and r[feature] is not None for r in good)
     assert bad.error and bad[feature] is None
     if op == "sample_frames":
         assert bad.frame_idx == -1
+
+    only_null = run(spark.createDataFrame([(2, None)], ddl))
+    assert only_null.schema.simpleString() == schema
+    (dead,) = only_null.collect()
+    expected = {n.split(":")[0]: None for n in fields.split(",")}
+    if op == "sample_frames":
+        expected["frame_idx"] = -1
+    assert dead.asDict() == {"doc_id": 2, **expected, "error": "null payload"}
+
+    empty = run(spark.createDataFrame([], ddl))
+    assert empty.schema.simpleString() == schema
+    assert empty.collect() == []
+
+
+@pytest.mark.parametrize("id_type", ["string", "int"])
+@pytest.mark.parametrize("op", _PAYLOAD_OPS)
+def test_payload_ops_keep_id_type(spark, op, id_type):
+    """The id column passes through with its input type: a string id does
+    not kill the job and an int id is not widened to bigint."""
+    run, valid, feature, fields = _null_payload_cases()[op]
+    ids = ("a", "b") if id_type == "string" else (1, 2)
+    df = spark.createDataFrame(
+        [(ids[0], valid), (ids[1], None)], f"doc_id {id_type}, payload binary"
+    )
+    out = run(df)
+    assert out.schema.simpleString() == f"struct<doc_id:{id_type},{fields},error:string>"
+    got = {r.doc_id: r for r in out.collect()}
+    assert set(got) == set(ids)
+    assert got[ids[0]].error is None and got[ids[0]][feature] is not None
+    assert got[ids[1]].error and got[ids[1]][feature] is None
+
+
+@pytest.mark.parametrize("size", [(0, 2), (2, -1)])
+def test_resize_image_rejects_sizes_below_one(spark, size):
+    """A target below 1x1 is a caller error, raised on the driver — not a
+    zero-width PPM with error=None, nor a dead-lettered row per payload."""
+    from ironbeam_spark.operators.multimodal import encode_ppm, resize_image
+
+    df = spark.createDataFrame(
+        [(1, encode_ppm(2, 2, bytes(12)))], "doc_id long, payload binary"
+    )
+    with pytest.raises(ValueError, match="resize target"):
+        resize_image(df, "doc_id", "payload", *size)
 
 
 def test_cms_estimates_guarantee(spark):

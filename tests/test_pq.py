@@ -13,15 +13,58 @@ import random
 import numpy as np
 import pytest
 
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
 from ironbeam_spark.operators.pq import (
+    _dim_guard,
+    _fold_sum,
+    _sub,
+    _with_codebooks,
     pq_ann_topk,
     pq_codebooks_from_prefix,
-    pq_encode,
     pq_train_codebooks,
 )
 from ironbeam_spark.operators.similarity import brute_force_topk
 from ironbeam_spark.sources.io import read_table
 from tests.conftest import SF_SMOKE
+
+
+def _l2sq(sub: Column, cw: Column) -> Column:
+    return _fold_sum(
+        F.zip_with(
+            sub,
+            cw,
+            lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
+        )
+    )
+
+
+def pq_encode(
+    df: DataFrame, vec_col: str, codebooks: list[list[list[float]]]
+) -> DataFrame:
+    """Expression-path PQ encode, the differential reference for the
+    vectorized ``pq_codes_arrow`` / ``ivfpq_corpus_codes_arrow``: append
+    ``pq_code_0 .. pq_code_{m-1}`` int columns, per subspace the
+    L2-nearest codeword's index (ties → lower index), in one narrow pass of
+    ``zip_with``/``aggregate`` folds."""
+    m = len(codebooks)
+    dsub = len(codebooks[0][0])
+    out = _with_codebooks(_dim_guard(df, vec_col, m * dsub), codebooks)
+    for j in range(m):
+        sub = _sub(F.col(vec_col), j, dsub)
+        # arg-min via array_min over (dist, code) structs: struct ordering
+        # compares dist first, then code — the deterministic tie-break
+        # plain closure capture is safe: F.transform invokes the lambda
+        # immediately while `sub` holds this iteration's value
+        cands = F.transform(
+            F.col("_pq_cb")[j],
+            lambda cw, i: F.struct(
+                _l2sq(sub, cw).alias("d"), i.cast("int").alias("c")
+            ),
+        )
+        out = out.withColumn(f"pq_code_{j}", F.array_min(cands)["c"])
+    return out.drop("_pq_cb")
 
 
 def _numpy_ref(X, ids, CB, qids, k):
