@@ -18,13 +18,12 @@ operator's output batches, cast once per batch to the session's expected
 Arrow schema (timezone/width normalization).  Contrast ``sources/avro.py``
 / ``sources/msgpack.py``, whose codecs necessarily walk Python values.
 
-Scale: one self-contained shard per partition, written through the shared
-shard protocol (:mod:`ironbeam_spark.sources.shards`: hidden temp + atomic
-rename); readers enumerate shards with
-``binaryFile`` (globs, multi-dir), so both sides are
-embarrassingly parallel with zero shuffle.  A shard is one IPC *file*
-(footer + per-batch offsets), so a future split-capable reader can seek
-individual batches without parsing the whole shard.
+Scale: one self-contained shard per partition, through the shared shard
+protocol (:mod:`ironbeam_spark.sources.shards`: hidden temp + atomic
+rename on write; one listing, decode map and corrupt-shard rule on read),
+so both sides are embarrassingly parallel with zero shuffle.  A shard is
+one IPC *file* (footer + per-batch offsets), so a future split-capable
+reader can seek individual batches without parsing the whole shard.
 """
 
 from __future__ import annotations
@@ -90,56 +89,31 @@ def write_arrow_ipc_py(
     return shard_sink(d, path, "arrow", mode, encode)[0]
 
 
-def read_arrow_ipc_py(
-    spark: SparkSession, path: str, schema: StructType | str | None = None
-) -> DataFrame:
-    """Read Arrow IPC file(s) (glob ok) executor-side: ``binaryFile``
-    enumerates shards, each file's record batches are yielded directly
-    through ``mapInArrow`` (no pandas materialization), cast once per batch
-    to the session's expected Arrow schema.  Pass ``schema`` to
-    project/order columns (required when the directory is empty)."""
+def _decode_shard(_name: str, blob: bytes) -> Iterator:
     import pyarrow as pa
     import pyarrow.ipc as ipc
 
-    from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+    reader = ipc.open_file(pa.BufferReader(blob))
+    for i in range(reader.num_record_batches):
+        yield reader.get_batch(i)
 
-    struct_schema = (
-        StructType.fromDDL(schema) if isinstance(schema, str) else schema
-    )
-    listing = spark.read.format("binaryFile").load(path)
-    files = listing.select("content")
-    if struct_schema is None:
-        # schema inference must NOT ship a whole shard to the driver (a
-        # self-contained per-partition shard can be GBs): collect only the
-        # PATH (binaryFile prunes the content column), then read just the
-        # file footer.  Local paths open directly with pyarrow; for remote
-        # filesystems pass `schema` explicitly.
-        first = listing.select("path").limit(1).collect()
-        if not first:
-            raise ValueError("cannot infer arrow-ipc schema from an empty directory")
-        p = first[0].path
-        if p.startswith("file:"):
-            p = p[len("file:") :]
-        if "://" in p:
-            raise ValueError(
-                f"cannot infer arrow-ipc schema from remote path {p!r} "
-                "without shipping a shard to the driver — pass schema="
-            )
-        with pa.OSFile(p, "rb") as fh:
-            struct_schema = from_arrow_schema(ipc.open_file(fh).schema)
-    names = [f.name for f in struct_schema.fields]
-    target = to_arrow_schema(struct_schema)
 
-    def decode(batches: Iterator) -> Iterator:
-        for fb in batches:
-            # binaryFile delivers one row per file; iterate the content cells
-            for blob in fb.column(0):
-                reader = ipc.open_file(pa.BufferReader(blob.as_py()))
-                for i in range(reader.num_record_batches):
-                    b = reader.get_batch(i)
-                    # select-then-cast: tolerate shards with extra/reordered
-                    # columns; cast normalizes tz/width to the session schema
-                    t = pa.Table.from_batches([b]).select(names)
-                    yield from t.cast(target).to_batches()
+def _footer_schema(local_path: str) -> StructType:
+    import pyarrow as pa
+    import pyarrow.ipc as ipc
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    return files.mapInArrow(decode, struct_schema)
+    with pa.OSFile(local_path, "rb") as fh:
+        return from_arrow_schema(ipc.open_file(fh).schema)
+
+
+def read_arrow_ipc_py(
+    spark: SparkSession, path: str, schema: StructType | str | None = None
+) -> DataFrame:
+    """Read Arrow IPC file(s) (glob ok) through the shared shard source:
+    each file's record batches pass straight through ``mapInArrow``.
+    Without ``schema`` (required for an empty directory) it comes from
+    the first shard's footer."""
+    from ironbeam_spark.sources.shards import shard_source
+
+    return shard_source(spark, path, "arrow", _decode_shard, schema or _footer_schema)

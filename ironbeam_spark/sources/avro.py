@@ -18,13 +18,12 @@ Interop is NOT taken on faith: the test suite round-trips files through the
 Avro *Java* reference implementation already on Spark's classpath
 (``avro-1.12.1.jar``, driven over py4j) in both directions.
 
-Scale shape mirrors msgpack: the writer emits one byte-independent
-``part-NNNNN.avro`` per partition through the shared shard protocol
-(:mod:`ironbeam_spark.sources.shards`; files are the parallelism unit —
-each is a self-contained OCF), the reader schedules one Arrow-batched
-decode task per file via ``binaryFile``.  A deployment with the
-spark-avro jar can flip to the native reader without changing call sites
-(``sources/io.read_avro`` tries the jar first).
+Scale shape mirrors msgpack: one self-contained ``part-NNNNN.avro`` OCF
+per partition, written and read through the shared shard protocol
+(:mod:`ironbeam_spark.sources.shards`); schema inference reads the first
+shard's header alone.  A deployment with the spark-avro jar can flip to
+the native reader without changing call sites (``sources/io.read_avro``
+tries the jar first).
 """
 
 from __future__ import annotations
@@ -74,6 +73,8 @@ def zigzag_decode(buf: memoryview, pos: int) -> tuple[int, int]:
     shift = 0
     acc = 0
     while True:
+        if pos >= len(buf):
+            raise _Truncated(f"avro: truncated varint at byte {pos}")
         b = buf[pos]
         pos += 1
         acc |= (b & 0x7F) << shift
@@ -208,6 +209,18 @@ def write_ocf(
 # ------------------------------------------------------------------ decoding
 
 
+class _Truncated(ValueError):
+    pass
+
+
+def _take(buf: memoryview, pos: int, n: int) -> tuple[memoryview, int]:
+    """``buf[pos:pos + n]`` and the position after it; a short read is a
+    truncated file, never a silently shorter value."""
+    if n < 0 or pos + n > len(buf):
+        raise _Truncated(f"avro: truncated at byte {pos} (wanted {n} bytes)")
+    return buf[pos : pos + n], pos + n
+
+
 def _dec_value(buf: memoryview, pos: int, atype: Any) -> tuple[Any, int]:
     if isinstance(atype, list):  # union
         idx, pos = zigzag_decode(buf, pos)
@@ -231,17 +244,22 @@ def _dec_value(buf: memoryview, pos: int, atype: Any) -> tuple[Any, int]:
     if atype in ("long", "int"):
         return zigzag_decode(buf, pos)
     if atype == "double":
-        return struct.unpack_from("<d", buf, pos)[0], pos + 8
+        b, pos = _take(buf, pos, 8)
+        return struct.unpack("<d", b)[0], pos
     if atype == "float":
-        return struct.unpack_from("<f", buf, pos)[0], pos + 4
+        b, pos = _take(buf, pos, 4)
+        return struct.unpack("<f", b)[0], pos
     if atype == "string":
         n, pos = zigzag_decode(buf, pos)
-        return str(buf[pos : pos + n], "utf-8"), pos + n
+        b, pos = _take(buf, pos, n)
+        return str(b, "utf-8"), pos
     if atype == "bytes":
         n, pos = zigzag_decode(buf, pos)
-        return bytes(buf[pos : pos + n]), pos + n
+        b, pos = _take(buf, pos, n)
+        return bytes(b), pos
     if atype == "boolean":
-        return buf[pos] == 1, pos + 1
+        b, pos = _take(buf, pos, 1)
+        return b[0] == 1, pos
     if atype == "null":
         return None, pos
     raise NotImplementedError(f"avro decode: unsupported type {atype!r}")
@@ -249,7 +267,8 @@ def _dec_value(buf: memoryview, pos: int, atype: Any) -> tuple[Any, int]:
 
 def read_ocf(data: bytes) -> tuple[dict, Iterator[dict[str, Any]]]:
     """Parse one OCF; returns (schema_json, record-dict iterator).  The
-    embedded writer schema is the source of truth for decode."""
+    embedded writer schema is the source of truth for decode.  A file cut
+    anywhere but at a block boundary raises ``ValueError``."""
     if data[:4] != MAGIC:
         raise ValueError("not an Avro Object Container File (bad magic)")
     buf = memoryview(data)
@@ -264,17 +283,15 @@ def read_ocf(data: bytes) -> tuple[dict, Iterator[dict[str, Any]]]:
             _, pos = zigzag_decode(buf, pos)
         for _ in range(count):
             n, pos = zigzag_decode(buf, pos)
-            k = str(buf[pos : pos + n], "utf-8")
-            pos += n
+            k, pos = _take(buf, pos, n)
             n, pos = zigzag_decode(buf, pos)
-            meta[k] = bytes(buf[pos : pos + n])
-            pos += n
+            v, pos = _take(buf, pos, n)
+            meta[str(k, "utf-8")] = bytes(v)
     schema_json = json.loads(meta["avro.schema"])
     codec = meta.get("avro.codec", b"null").decode()
     if codec not in ("null", "deflate"):
         raise NotImplementedError(f"avro codec {codec!r} not supported")
-    sync = bytes(buf[pos : pos + 16])
-    pos += 16
+    sync, pos = _take(buf, pos, 16)
     names = [f["name"] for f in schema_json["fields"]]
     types = [f["type"] for f in schema_json["fields"]]
 
@@ -283,11 +300,10 @@ def read_ocf(data: bytes) -> tuple[dict, Iterator[dict[str, Any]]]:
         while p < len(buf):
             n_rec, p = zigzag_decode(buf, p)
             n_bytes, p = zigzag_decode(buf, p)
-            payload = bytes(buf[p : p + n_bytes])
-            p += n_bytes
-            if bytes(buf[p : p + 16]) != sync:
+            payload, p = _take(buf, p, n_bytes)
+            marker, p = _take(buf, p, 16)
+            if marker != sync:
                 raise ValueError("avro block sync marker mismatch (corrupt file)")
-            p += 16
             if codec == "deflate":
                 payload = zlib.decompress(payload, wbits=-15)
             view = memoryview(payload)
@@ -302,13 +318,6 @@ def read_ocf(data: bytes) -> tuple[dict, Iterator[dict[str, Any]]]:
 
 
 # --------------------------------------------------------- Spark integration
-
-
-def _is_ts(atype: Any) -> bool:
-    def logical(t: Any) -> bool:
-        return isinstance(t, dict) and t.get("logicalType", "").startswith("timestamp")
-
-    return logical(atype) or (isinstance(atype, list) and any(logical(t) for t in atype))
 
 
 def write_avro_py(df: Any, path: str, mode: str = "overwrite") -> int:
@@ -356,53 +365,38 @@ def write_avro_py(df: Any, path: str, mode: str = "overwrite") -> int:
     return shard_sink(d, path, "avro", mode, encode)[0]
 
 
+def _decode_shard(_name: str, blob: bytes) -> Iterator:
+    import pyarrow as pa
+
+    # timestamps stay epoch micros: the shard source casts them to UTC
+    # instants, so they round-trip under any session timezone
+    yield pa.RecordBatch.from_pylist(list(read_ocf(blob)[1]))
+
+
+def _header_schema(local_path: str) -> StructType:
+    """One local OCF's Spark schema, read from its header alone."""
+    with open(local_path, "rb") as fh:
+        head = chunk = fh.read(1 << 16)
+        while True:
+            try:
+                return _spark_schema_of(read_ocf(head)[0])
+            except _Truncated:
+                if not chunk:
+                    raise
+                chunk = fh.read(1 << 16)
+                head += chunk
+
+
 def read_avro_py(spark: SparkSession, path: str, schema: StructType | str | None = None) -> DataFrame:
-    """Read Avro OCF file(s) (glob ok).  Decode runs executor-side, one
-    Arrow batch per file, using each file's embedded writer schema; pass
-    ``schema`` to project/order columns (required when the directory is
-    empty)."""
-    import pandas as pd
+    """Read Avro OCF file(s) (glob ok) through the shared shard source, one
+    Arrow batch per file decoded by its embedded writer schema; pass
+    ``schema`` to project/order columns (required for an empty directory)."""
+    from ironbeam_spark.sources.shards import shard_source
 
-    struct_schema = (
-        StructType.fromDDL(schema) if isinstance(schema, str) else schema
-    )
-    files = spark.read.format("binaryFile").load(path).select("content")
-    if struct_schema is None:
-        first = files.limit(1).collect()
-        if not first:
-            raise ValueError("cannot infer avro schema from an empty directory")
-        schema_json, _ = read_ocf(bytes(first[0].content))
-        # infer the Spark schema via the avro→spark inverse of avro_schema_of
-        struct_schema = _spark_schema_of(schema_json)
-    names = [f.name for f in struct_schema.fields]
-    ts_cols = {f.name for f in struct_schema.fields if isinstance(f.dataType, TimestampType)}
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for blob in pdf["content"]:
-                _, recs = read_ocf(bytes(blob))
-                rows = [[rec.get(n) for n in names] for rec in recs]
-                out = pd.DataFrame(rows, columns=names)
-                for c in ts_cols:
-                    # tz-AWARE UTC: stored micros are absolute instants, and
-                    # an aware series keeps Spark from reinterpreting naive
-                    # values in the session timezone (round-trips under any
-                    # session tz, not just UTC)
-                    out[c] = pd.to_datetime(out[c], unit="us", utc=True)
-                yield out
-
-    return files.mapInPandas(decode, struct_schema)
+    return shard_source(spark, path, "avro", _decode_shard, schema or _header_schema)
 
 
-_FROM_AVRO: dict[str, DataType] = {
-    "boolean": BooleanType(),
-    "int": IntegerType(),
-    "long": LongType(),
-    "float": FloatType(),
-    "double": DoubleType(),
-    "string": StringType(),
-    "bytes": BinaryType(),
-}
+_FROM_AVRO: dict[str, DataType] = {a: t() for t, a in _PRIMITIVE.items()}
 
 
 def _spark_type_of(atype: Any) -> DataType:

@@ -7,10 +7,11 @@ Spark covers gzip/bzip2/deflate natively for text formats; this module adds
 the rest — ``.xz`` out of the box (stdlib ``lzma``) and any user codec via
 :func:`register_codec` — without leaving the DataFrame plane:
 
-- **read**: ``binaryFile`` enumerates shards (one row per file, so each
-  task decompresses a whole shard — the same unit of parallelism Spark's
-  native codec path uses for non-splittable codecs like gzip), then an
-  Arrow-batched ``mapInPandas`` decompresses and splits lines.
+- **read**: the shared shard source (:mod:`ironbeam_spark.sources.
+  shards`) lists the ``*.<ext>`` shards of the codec and decodes each
+  whole shard in one task (the same unit of parallelism Spark's native
+  codec path uses for non-splittable codecs like gzip): one ``mapInArrow``
+  decompresses and splits lines.
 - **write**: the shared shard protocol (:mod:`ironbeam_spark.sources.
   shards`): each partition compresses its lines executor-side and writes
   one ``part-NNNNN.<ext>`` — no driver collect, no single-writer
@@ -33,7 +34,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ironbeam_spark import caches
-from ironbeam_spark.sources.shards import shard_sink
+from ironbeam_spark.sources.shards import shard_sink, shard_source
 
 __all__ = [
     "Codec",
@@ -117,28 +118,43 @@ def _split_lines(text: str) -> list[str]:
     return lines
 
 
-def read_lines(spark: SparkSession, path: str, codec: str | None = None) -> DataFrame:
-    """Lines of the (possibly compressed) text files at ``path`` as a
-    single-column DataFrame ``(value: string)``.  Codec resolved from
-    ``codec`` (registry name) or the path's extension.  Line terminators
-    follow Spark's native sources (LF, CRLF, lone CR)."""
+def _resolve(path: str, codec: str | None) -> Codec:
     c = codec_for(codec or path)
     if c is None:
         raise ValueError(
             f"no registered codec matches {codec or path!r}; "
             f"registered: {sorted(_REGISTRY)}"
         )
-    files = spark.read.format("binaryFile").load(path).select("content")
+    return c
 
-    def decode(batches: Iterator) -> Iterator:
-        import pandas as pd
 
-        for pdf in batches:
-            for blob in pdf["content"]:
-                text = c.decompress(bytes(blob)).decode("utf-8")
-                yield pd.DataFrame({"value": _split_lines(text)})
+def _line_decoder(c: Codec, drop_header: bool = False, keep_header: bool = False):
+    """One shard's lines as ``value``; ``drop_header`` drops its first
+    line, ``keep_header`` also carries that line as ``header``."""
 
-    return files.mapInPandas(decode, "value string")
+    def decode(_name: str, blob: bytes) -> Iterator:
+        import pyarrow as pa
+
+        lines = _split_lines(c.decompress(blob).decode("utf-8"))
+        head = ""
+        if drop_header and lines:
+            head, lines = lines[0], lines[1:]
+        cols = {"value": lines}
+        if keep_header:
+            cols["header"] = [head] * len(lines)
+        yield pa.RecordBatch.from_pydict(cols)
+
+    return decode
+
+
+def read_lines(spark: SparkSession, path: str, codec: str | None = None) -> DataFrame:
+    """Lines of the (possibly compressed) ``*.<ext>`` text files at
+    ``path`` as a single-column DataFrame ``(value: string)``.  Codec
+    resolved from ``codec`` (registry name) or the path's extension; its
+    extension picks the files.  Line terminators follow Spark's native
+    sources (LF, CRLF, lone CR)."""
+    c = _resolve(path, codec)
+    return shard_source(spark, path, c.extension, _line_decoder(c), "value string")
 
 
 def _codec_sink(df: DataFrame, path: str, codec: str, mode: str, render) -> int:
@@ -233,37 +249,15 @@ def read_csv_compressed(
     parsing, so quoted fields with embedded newlines (Spark's
     ``multiLine`` option) are not supported by this codec path — external
     shards using them should go through the native CSV source."""
-    c = codec_for(codec or path)
-    if c is None:
-        raise ValueError(f"no registered codec matches {codec or path!r}")
-    files = spark.read.format("binaryFile").load(path).select("content")
-    drop_header = has_headers
-
-    def make_decode(with_header_col: bool):
-        def decode(batches: Iterator) -> Iterator:
-            import pandas as pd
-
-            for pdf in batches:
-                for blob in pdf["content"]:
-                    text = c.decompress(bytes(blob)).decode("utf-8")
-                    lines = _split_lines(text)
-                    header = ""
-                    if drop_header and lines:
-                        header = lines[0]
-                        lines = lines[1:]
-                    if with_header_col:
-                        yield pd.DataFrame(
-                            {"value": lines, "header": [header] * len(lines)}
-                        )
-                    else:
-                        yield pd.DataFrame({"value": lines})
-
-        return decode
-
+    c = _resolve(path, codec)
+    # only the inference path needs the header text — don't replicate it
+    # across every row of the Arrow stream otherwise
+    keep = schema is None and has_headers
+    lines = shard_source(
+        spark, path, c.extension, _line_decoder(c, has_headers, keep),
+        "value string, header string" if keep else "value string",
+    )
     if schema is not None:
-        # schema path never needs the header text — don't replicate it
-        # across every row of the Arrow stream
-        lines = files.mapInPandas(make_decode(False), "value string")
         if hasattr(schema, "fields"):  # StructType -> "name type, ..." DDL
             ddl = ", ".join(
                 f"{f.name} {f.dataType.simpleString()}" for f in schema.fields
@@ -275,12 +269,10 @@ def read_csv_compressed(
     # inference scan, final parse) — persist so non-splittable shards
     # decompress once, not per pass.  The cache lives until
     # caches.release_all_caches() (inference at scale should pass a schema).
-    lines = caches.hold(
-        files.mapInPandas(make_decode(True), "value string, header string").persist()
-    )
-    first_header = lines.select("header").first()
+    lines = caches.hold(lines.persist())
+    first_header = lines.first() if keep else None
     rdd = lines.select("value").rdd.map(lambda r: r.value)
-    if has_headers and first_header is not None:
+    if first_header is not None:
         header_line = first_header.header
         rdd = spark.sparkContext.parallelize([header_line]).union(rdd)
         return spark.read.option("header", "true").option("inferSchema", "true").csv(rdd)

@@ -16,8 +16,6 @@ input partition per shard file, so ``spark.read.format("msgpack")`` and
 
 from __future__ import annotations
 
-import glob as _glob
-import os
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,35 +51,30 @@ def from_custom_source(
 
 
 class _MsgpackReader(DataSourceReader):
+    """One task per shard file (msgpack has no intra-file split points),
+    listed and decoded by the rules of ``msgpack.read_msgpack``."""
+
     def __init__(self, options: dict, schema: StructType):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("msgpack source requires a path")
-        self.names = [f.name for f in schema.fields]
+        self.schema = schema
 
     def partitions(self) -> Sequence[InputPartition]:
-        # one task per shard file — msgpack has no intra-file split points,
-        # so files are the parallelism unit (reference shards by record
-        # count for the same reason, src/io/msgpack.rs:57-70)
-        path = self.path
-        if os.path.isdir(path):
-            files = sorted(
-                os.path.join(path, f) for f in os.listdir(path) if f.endswith(".msgpack")
-            )
-        else:
-            files = sorted(_glob.glob(path)) or [path]
-        return [InputPartition(f) for f in files]
+        from ironbeam_spark.sources.shards import local_shards
 
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
-        from ironbeam_spark.sources.msgpack import unpackb_stream
+        return [InputPartition(f) for f in local_shards(self.path, "msgpack")]
+
+    def read(self, partition: InputPartition) -> Iterator:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from ironbeam_spark.sources.msgpack import shard_decoder
+        from ironbeam_spark.sources.shards import decode_shard
 
         with open(partition.value, "rb") as fh:
-            data = fh.read()
-        for rec in unpackb_stream(data, int64_strict=True):
-            if isinstance(rec, dict):
-                yield tuple(rec.get(n) for n in self.names)
-            else:
-                yield tuple(rec)
+            blob = fh.read()
+        decode, target = shard_decoder(self.schema), to_arrow_schema(self.schema)
+        yield from decode_shard("msgpack", partition.value, blob, decode, target)
 
 
 class _MsgpackCommit(WriterCommitMessage):

@@ -237,8 +237,7 @@ def write_arrow_ipc(
     commit; returns rows written.  See :mod:`sources.arrow_ipc`."""
     from ironbeam_spark.sources.arrow_ipc import write_arrow_ipc_py
 
-    d = df.df if isinstance(df, PCollection) else df
-    return write_arrow_ipc_py(d, path, mode, compression)
+    return write_arrow_ipc_py(df, path, mode, compression)
 
 
 def read_safetensors(
@@ -268,8 +267,7 @@ def write_safetensors(
     rename commit; returns rows written.  See :mod:`sources.safetensors`."""
     from ironbeam_spark.sources.safetensors import write_safetensors_py
 
-    d = df.df if isinstance(df, PCollection) else df
-    return write_safetensors_py(d, path, id_col, vec_col, mode, dtype)
+    return write_safetensors_py(df, path, id_col, vec_col, mode, dtype)
 
 
 def read_xml(spark: SparkSession, path: str, row_tag: str = "row") -> PCollection:
@@ -312,13 +310,13 @@ def write_orc(df: DataFrame | PCollection, path: str, mode: str = "overwrite", p
     w.orc(path)
 
 
-def read_msgpack(spark: SparkSession, path: str, schema: Any, as_arrays: bool = True) -> PCollection:
-    """Reference ``read_msgpack`` (``src/helpers/msgpack.rs:140``): binaryFile
-    enumeration (globs native) + Arrow-batched per-file decode with the
+def read_msgpack(spark: SparkSession, path: str, schema: Any) -> PCollection:
+    """Reference ``read_msgpack`` (``src/helpers/msgpack.rs:140``): the
+    shared shard source (globs native) decoding each file with the
     dependency-free codec in :mod:`ironbeam_spark.sources.msgpack`."""
     from ironbeam_spark.sources.msgpack import read_msgpack as _read
 
-    return PCollection(_read(spark, path, schema, as_arrays=as_arrays))
+    return PCollection(_read(spark, path, schema))
 
 
 def write_msgpack(df: DataFrame | PCollection, path: str, as_arrays: bool = True, mode: str = "overwrite") -> int:

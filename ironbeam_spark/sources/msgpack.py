@@ -9,14 +9,14 @@ like JSONL, and records are serde structs encoded compactly **as arrays**
 
 Spark-first shape:
 
-- **read**: ``spark.read.format("binaryFile")`` enumerates the files (glob
-  patterns work natively, mirroring ``read_msgpack``'s glob support,
-  ``src/helpers/msgpack.rs:83-95``), then an Arrow-batched ``mapInPandas``
-  decodes each file's bytes into rows.  Parallelism is per-file — msgpack
-  has no row-group/byte-offset splits (the reference's streaming reader
-  shards by *record count* for the same reason, ``src/io/msgpack.rs:57-70``),
-  so at 100 TB the layout answer is "many part files", which is exactly what
-  the parallel writer produces.
+- **read**: the shared shard source (:mod:`ironbeam_spark.sources.shards`)
+  lists the ``*.msgpack`` files (glob patterns work natively, mirroring
+  ``read_msgpack``'s glob support, ``src/helpers/msgpack.rs:83-95``), then
+  one ``mapInArrow`` decodes each file's bytes into an Arrow batch.
+  Parallelism is per-file — msgpack has no row-group/byte-offset splits
+  (the reference's streaming reader shards by *record count* for the same
+  reason, ``src/io/msgpack.rs:57-70``), so at 100 TB the layout answer is
+  "many part files", which is exactly what the parallel writer produces.
 - **write**: one shard per partition, encoded executor-side and written in
   parallel (reference ``write_msgpack_par``, ``src/helpers/msgpack.rs:254``)
   through the shared shard protocol (:mod:`ironbeam_spark.sources.shards`),
@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import io
 import struct
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from typing import Any, BinaryIO
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,6 +43,8 @@ __all__ = [
     "pack_into",
     "pack_records",
     "unpackb_stream",
+    "record_row",
+    "shard_decoder",
     "read_msgpack",
     "write_msgpack",
 ]
@@ -259,51 +261,42 @@ def unpackb_stream(data: bytes, *, int64_strict: bool = False) -> Iterator[Any]:
 
 # ── Spark read/write ────────────────────────────────────────────────────────
 
-def read_msgpack(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str,
-    *,
-    as_arrays: bool = True,
-) -> DataFrame:
-    """Read msgpack file(s) (glob ok) into a DataFrame with ``schema``.
+def record_row(rec: Any, names: list[str]) -> dict[str, Any]:
+    """One record as a row keyed by ``names``: a map by field name (absent
+    keys null), an array by position (the reference encoder's default,
+    ``src/io/msgpack.rs:25``).  Both msgpack readers use it."""
+    if isinstance(rec, dict):
+        return {n: rec.get(n) for n in names}
+    if isinstance(rec, (list, tuple)):
+        if len(rec) != len(names):
+            raise ValueError(f"msgpack record arity {len(rec)} != schema arity {len(names)}")
+        return dict(zip(names, rec))
+    raise ValueError(f"msgpack record must be array or map, got {type(rec).__name__}")
 
-    ``as_arrays=True`` matches the reference encoder's default (serde structs
-    → positional arrays, ``src/io/msgpack.rs:25``); map-encoded records
-    (field-name keyed) are detected per record regardless, so mixed files
-    decode correctly.  Decode runs executor-side, one Arrow batch per file.
-    """
-    import pandas as pd
 
-    struct_schema = (
-        schema
-        if isinstance(schema, StructType)
-        else StructType.fromDDL(schema)
-    )
-    names = [f.name for f in struct_schema.fields]
+def shard_decoder(schema: StructType | str) -> Callable:
+    """One shard's records as one Arrow batch of ``schema``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
+    schema = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    target = to_arrow_schema(schema)
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for blob in pdf["content"]:
-                rows = []
-                for rec in unpackb_stream(bytes(blob), int64_strict=True):
-                    if isinstance(rec, dict):
-                        rows.append([rec.get(n) for n in names])
-                    elif isinstance(rec, (list, tuple)):
-                        if len(rec) != len(names):
-                            raise ValueError(
-                                f"msgpack record arity {len(rec)} != schema arity {len(names)}"
-                            )
-                        rows.append(list(rec))
-                    else:
-                        raise ValueError(
-                            f"msgpack record must be array or map, got {type(rec).__name__}"
-                        )
-                yield pd.DataFrame(rows, columns=names)
+    def decode(_name: str, blob: bytes) -> Iterator:
+        import pyarrow as pa
 
-    return files.mapInPandas(decode, struct_schema)
+        rows = unpackb_stream(blob, int64_strict=True)
+        yield pa.RecordBatch.from_pylist([record_row(r, schema.names) for r in rows], target)
+
+    return decode
+
+
+def read_msgpack(spark: SparkSession, path: str, schema: StructType | str) -> DataFrame:
+    """Read msgpack file(s) (glob ok) into a DataFrame with ``schema``
+    through the shared shard source, one Arrow batch per file.  Array- and
+    map-encoded records are told apart per record, so mixed files decode."""
+    from ironbeam_spark.sources.shards import shard_source
+
+    return shard_source(spark, path, "msgpack", shard_decoder(schema), schema)
 
 
 def pack_records(fh: BinaryIO, records: Iterable[Any]) -> int:

@@ -16,10 +16,9 @@ Spark-first shape, the shared shard protocol of
 :mod:`ironbeam_spark.sources.shards`: ONE self-contained
 ``part-NNNNN.safetensors`` per non-empty partition, each holding two
 tensors — ``ids`` int64 ``[n]`` and ``embeddings`` float32/float64
-``[n, d]`` — read back with ``binaryFile`` + Arrow batches.  Both
-directions are embarrassingly parallel with zero shuffle; the per-row
-work is one numpy buffer copy (Arrow list column → C-order matrix),
-never Python-object rows.
+``[n, d]`` — read back the same way.  Both directions are embarrassingly
+parallel with zero shuffle; the per-row work is one numpy buffer copy
+(Arrow list column → C-order matrix), never Python-object rows.
 
 The codec is dependency-free on purpose (the ``safetensors`` package is not
 in this container): the spec is ~30 lines of struct/json, and the tests
@@ -180,45 +179,26 @@ def read_safetensors_py(
     vec_col: str = "embedding",
     dtype: str = "float32",
 ) -> DataFrame:
-    """Read safetensors shard(s) (glob ok) executor-side into
-    ``(id_col long, vec_col array<float|double>)`` rows: ``binaryFile``
-    enumerates shards, each parses with the bounded-header codec and
-    yields Arrow batches (one numpy→Arrow copy, no Python rows)."""
-    import pyarrow as pa
+    """Read safetensors shard(s) (glob ok) into ``(id_col long, vec_col
+    array<float|double>)`` rows through the shared shard source: one Arrow
+    batch per shard (one numpy→Arrow copy, no Python rows)."""
+    from ironbeam_spark.sources.shards import shard_source
 
     if dtype not in _DTYPES:
         raise ValueError(f"dtype must be one of {sorted(_DTYPES)}, got {dtype!r}")
     st_dtype = _DTYPES[dtype][0]
-    elem = pa.float32() if dtype == "float32" else pa.float64()
-    schema = pa.schema([(id_col, pa.int64()), (vec_col, pa.list_(elem))])
 
-    files = spark.read.format("binaryFile").load(path).select("content")
+    def decode(_name: str, blob: bytes) -> Iterator:
+        import pyarrow as pa
 
-    def decode(batches: Iterator) -> Iterator:
-        import numpy as np
-
-        for fb in batches:
-            for blob in fb.column(0):
-                header, data = _unpack_file(blob.as_py())
-                ids = _tensor(header, data, "ids", "I64")
-                emb = _tensor(header, data, "embeddings", st_dtype)
-                if emb.ndim != 2 or len(emb) != len(ids):
-                    raise ValueError(
-                        f"safetensors: embeddings shape {emb.shape} does not "
-                        f"match {len(ids)} ids"
-                    )
-                flat = pa.array(emb.reshape(-1), type=elem)
-                offsets = pa.array(
-                    np.arange(0, (len(ids) + 1) * emb.shape[1], emb.shape[1]),
-                    type=pa.int32(),
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(ids, type=pa.int64()),
-                        pa.ListArray.from_arrays(offsets, flat),
-                    ],
-                    schema=schema,
-                )
+        header, data = _unpack_file(blob)
+        ids = _tensor(header, data, "ids", "I64")
+        emb = _tensor(header, data, "embeddings", st_dtype)
+        if emb.ndim != 2 or len(emb) != len(ids):
+            raise ValueError(f"safetensors: embeddings shape {emb.shape} for {len(ids)} ids")
+        # fixed-size rows; the shard source casts them to the list column
+        vecs = pa.FixedSizeListArray.from_arrays(emb.reshape(-1), emb.shape[1])
+        yield pa.RecordBatch.from_arrays([pa.array(ids), vecs], names=[id_col, vec_col])
 
     spark_schema = f"{id_col} long, {vec_col} array<{'float' if dtype == 'float32' else 'double'}>"
-    return files.mapInArrow(decode, spark_schema)
+    return shard_source(spark, path, "safetensors", decode, spark_schema)

@@ -1,9 +1,11 @@
-"""One-file-per-partition shard sinks: the single statement of the
-directory protocol every partition-parallel file sink in this package
-shares (avro, arrow_ipc, msgpack and its ``format("msgpack")`` DataSource
-writer, safetensors, warc, tar, and the codec-registry text sinks in
-``compression``).  A sink supplies only its format's encoder; this module
-owns the rest:
+"""One-file-per-partition shards: the single statement of the directory
+protocol every partition-parallel file sink and source in this package
+shares (avro, arrow_ipc, msgpack and its ``format("msgpack")``
+DataSource, safetensors, warc, tar, and the codec-registry text formats
+in ``compression``).  A format supplies only its encoder and decoder;
+this module owns the rest.
+
+Write side, :func:`shard_sink`:
 
 - **mode** (DataFrameWriter semantics): ``overwrite`` removes existing
   shards (every suffix the sink names, not only its own extension) and
@@ -20,28 +22,50 @@ owns the rest:
   (``os.rename`` is atomic on POSIX: Hadoop's task-commit pattern);
   ``n == 0`` removes it, so empty partitions write no shard.  A task that
   dies mid-write, or a speculative attempt racing the original, can only
-  ever leave a dot-prefixed temp, which ``binaryFile`` and Spark's file
-  index skip — never a torn shard under a final name, where a streaming
-  file source would take it for a complete file.  Racing attempts each
-  rename a COMPLETE payload over the same final name.
+  ever leave a dot-prefixed temp, which Spark's file index skips — never
+  a torn shard under a final name, where a streaming file source would
+  take it for a complete file.  Racing attempts each rename a COMPLETE
+  payload over the same final name.
 - **count**: :func:`shard_sink` returns ``(rows, shards)``: the sum of the
   encoders' ``n`` and the number of shards committed.
 
+Read side, :func:`shard_source`:
+
+- **listing**: ``binaryFile`` with a ``pathGlobFilter`` on the format's
+  extensions (a stray ``notes.md`` is not a shard); the file index skips
+  the dot-prefixed temps.  :func:`local_shards` is the same rule.
+- **decode**: one ``mapInArrow`` (:func:`decode_shards`, also over the
+  streaming WARC file stream) calls the format's ``decode(shard_name,
+  blob)`` and casts each Arrow batch it yields to the target schema;
+  columns go by name, a missing one is null as in Spark's file sources.
+- **schema inference** reads the header of the first listed shard, and
+  only its path reaches the driver.
+- **corrupt shards**: any decode failure fails the read with one
+  ``ValueError`` naming the format and the shard; no skip mode.
+
 Targets a POSIX-visible directory; an object-store deployment would swap
 ``open``/``os.rename`` for an fsspec or Hadoop-FS stream and committer,
-with every encoder unchanged.
+with every encoder and decoder unchanged.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import uuid
 from collections.abc import Callable, Iterator
 from typing import BinaryIO
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-__all__ = ["shard_sink", "prepare_shard_dir", "write_shard"]
+__all__ = [
+    "shard_sink", "prepare_shard_dir", "write_shard",
+    "shard_source", "shard_glob", "local_shards", "decode_shards", "decode_shard",
+]
+
+#: a format's shard extension(s), without the dot: ``"avro"``, ``("warc", "warc.gz")``
+Ext = str | tuple[str, ...]
 
 
 def prepare_shard_dir(path: str, mode: str, sweep_suffixes: tuple[str, ...]) -> str | None:
@@ -122,3 +146,104 @@ def shard_sink(
 
     counts = [r.n for r in df.mapInArrow(task, "n long").collect()]
     return sum(counts), sum(1 for n in counts if n)
+
+
+# ------------------------------------------------------------------ read side
+
+
+def _exts(ext: Ext) -> tuple[str, ...]:
+    return (ext,) if isinstance(ext, str) else ext
+
+
+def shard_glob(ext: Ext) -> str:
+    """The listing rule as a ``pathGlobFilter``: ``*.{avro}``."""
+    return "*.{" + ",".join(_exts(ext)) + "}"
+
+
+def local_shards(path: str, ext: Ext) -> list[str]:
+    """The listing rule for a reader that lists on its own: the files in
+    directory (or glob) ``path`` named ``*.<ext>``, minus the dot- and
+    underscore-prefixed names Spark's file index skips."""
+    found = glob.glob(os.path.join(path, "*") if os.path.isdir(path) else path)
+    if not found and not os.path.isdir(path):
+        raise FileNotFoundError(f"no such shard path: {path}")
+    suffixes = tuple(f".{e}" for e in _exts(ext))
+    return sorted(
+        p for p in found
+        if p.endswith(suffixes) and not os.path.basename(p).startswith("_")
+    )
+
+
+def decode_shard(fmt: str, name: str, blob: bytes, decode: Callable, target) -> Iterator:
+    """Task-side read of one shard: each non-empty batch of
+    ``decode(name, blob)`` cast to the Arrow schema ``target`` (columns by
+    name, a missing one null).  Any failure is the corrupt-shard error."""
+    import pyarrow as pa
+
+    try:
+        for b in decode(name, blob):
+            if not b.num_rows:
+                continue
+            if not b.schema.equals(target):
+                cols = [
+                    b.column(f.name) if f.name in b.schema.names else pa.nulls(b.num_rows)
+                    for f in target
+                ]
+                b = pa.RecordBatch.from_arrays(
+                    [c.cast(f.type) for c, f in zip(cols, target)], schema=target
+                )
+            yield b
+    except Exception as e:
+        raise _corrupt(fmt, name, e) from e
+
+
+def _corrupt(fmt: str, name: str, e: Exception) -> ValueError:
+    return ValueError(f"{fmt}: corrupt shard {name}: {type(e).__name__}: {e}")
+
+
+def decode_shards(
+    files: DataFrame, ext: Ext, decode: Callable, schema: StructType | str
+) -> DataFrame:
+    """The read-side map over a batch or streaming ``binaryFile`` frame:
+    one ``mapInArrow`` running :func:`decode_shard` on each shard."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    fmt, target = _exts(ext)[0], to_arrow_schema(schema)
+
+    def task(batches: Iterator) -> Iterator:
+        for fb in batches:
+            # one shard's bytes at a time: an input batch can hold many
+            for name, blob in zip(fb.column(0).to_pylist(), fb.column(1)):
+                yield from decode_shard(fmt, name, blob.as_py(), decode, target)
+
+    return files.select("path", "content").mapInArrow(task, schema)
+
+
+def shard_source(
+    spark: SparkSession, path: str, ext: Ext, decode: Callable,
+    schema: StructType | str | Callable[[str], StructType],
+) -> DataFrame:
+    """Read the ``*.<ext>`` shards at ``path`` (directory, file or glob;
+    protocol in the module docstring).  ``decode(shard_name, blob)``
+    yields a shard's Arrow batches.  ``schema`` is a ``StructType``, DDL,
+    or a function reading it from one local shard file's header."""
+    fmt = _exts(ext)[0]
+    files = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", shard_glob(ext))
+        .load(path)
+    )
+    if callable(schema):
+        # only the PATH reaches the driver: a shard can be GBs
+        first = files.select("path").limit(1).collect()
+        if not first:
+            raise ValueError(f"cannot infer {fmt} schema from an empty directory")
+        p = first[0].path.removeprefix("file:")
+        if "://" in p:
+            raise ValueError(f"cannot infer {fmt} schema from remote path {p!r}: pass schema=")
+        try:
+            schema = schema(p)
+        except Exception as e:
+            raise _corrupt(fmt, p, e) from e
+    return decode_shards(files, ext, decode, schema)

@@ -14,10 +14,9 @@ Spark mapping:
 - **one shard = one task** (tar is not splittable, exactly like gzip text;
   the WebDataset contract is "make many shards", and thousands of shards
   at 100 TB give the scheduler all the parallelism it needs);
-- ``read_tar_members`` is ``binaryFile`` → Arrow-batched ``mapInPandas``
-  over the stdlib ``tarfile`` walk — members stream out as
-  ``(shard, sample, field, payload)`` rows, schema-first like every other
-  source here;
+- ``read_tar_members`` walks each shard with stdlib ``tarfile`` inside
+  the shared shard source — members stream out as
+  ``(shard, sample, field, payload)`` rows;
 - ``webdataset_samples`` regroups members into one row per sample with a
   ``field → payload`` map (sorted entries, so downstream hashing is
   deterministic);
@@ -102,6 +101,32 @@ def write_tar_shards(
     return shard_sink(selected, path, "tar", mode, encode)[1]
 
 
+def _walk(shard: str, blob: bytes) -> Iterator:
+    import tarfile
+
+    import pyarrow as pa
+
+    # keyed dict => within-shard LAST occurrence wins (tar append
+    # semantics); insertion order keeps first-seen member order otherwise
+    rows: dict[tuple[str, str], bytes] = {}
+    with tarfile.open(fileobj=io.BytesIO(blob)) as tf:
+        for m in tf:
+            if not m.isfile():
+                continue
+            payload = tf.extractfile(m).read()
+            sample, _, field = m.name.rsplit("/", 1)[-1].partition(".")
+            rows[(sample, field)] = payload
+        # tarfile ends the walk quietly at a header cut short after the
+        # first member: only the two zero blocks that end a complete
+        # archive tell a whole shard from one cut at a member boundary
+        tf.fileobj.seek(tf.offset)
+        if tf.fileobj.read(2 * tarfile.BLOCKSIZE) != bytes(2 * tarfile.BLOCKSIZE):
+            raise ValueError(f"no end-of-archive marker after {len(rows)} members")
+    yield pa.RecordBatch.from_pylist(
+        [{"shard": shard, "sample": s, "field": f, "payload": p} for (s, f), p in rows.items()]
+    )
+
+
 def read_tar_members(spark: SparkSession, path: str) -> DataFrame:
     """Stream every member of every ``.tar`` shard under ``path`` as
     ``(shard string, sample string, field string, payload binary)`` —
@@ -113,47 +138,15 @@ def read_tar_members(spark: SparkSession, path: str) -> DataFrame:
     silently dropped; filter ``field = ''`` upstream to exclude them).
     A name appearing more than once WITHIN a shard keeps the LAST
     occurrence — GNU/POSIX append (``tar -r``) semantics, matching what
-    ``tar -x`` would leave on disk.  Corrupt archives raise ``ValueError``
-    (wrap with a dead-letter pattern upstream if shards may be damaged)."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tar")
-        .load(path)
-        .select("path", "content")
-    )
+    ``tar -x`` would leave on disk.  A corrupt or truncated shard (no
+    end-of-archive marker after its last member) fails the read with a
+    ``ValueError`` naming it (wrap with a dead-letter pattern upstream if
+    shards may be damaged)."""
+    from ironbeam_spark.sources.shards import shard_source
 
-    def walk(batches: Iterator) -> Iterator:
-        import tarfile
-
-        import pandas as pd
-
-        for pdf in batches:
-            # one yielded frame PER SHARD: peak executor memory stays at a
-            # single shard's members even when binaryFile packs many whole
-            # shards into one Arrow batch
-            for shard, blob in zip(pdf["path"], pdf["content"]):
-                # keyed dict => within-shard LAST occurrence wins (tar
-                # append semantics); dict preserves insertion order so
-                # first-seen member order is otherwise kept
-                rows: dict[tuple[str, str], bytes] = {}
-                try:
-                    with tarfile.open(fileobj=io.BytesIO(bytes(blob))) as tf:
-                        for m in tf:
-                            if not m.isfile():
-                                continue
-                            payload = tf.extractfile(m).read()
-                            name = m.name.rsplit("/", 1)[-1]
-                            sample, _, field = name.partition(".")
-                            rows[(sample, field)] = payload
-                except tarfile.TarError as e:
-                    raise ValueError(f"tar: corrupt shard {shard}: {e}") from e
-                yield pd.DataFrame(
-                    [(shard, s, f, p) for (s, f), p in rows.items()],
-                    columns=["shard", "sample", "field", "payload"],
-                )
-
-    return files.mapInPandas(
-        walk, "shard string, sample string, field string, payload binary"
+    return shard_source(
+        spark, path, "tar", _walk,
+        "shard string, sample string, field string, payload binary",
     )
 
 

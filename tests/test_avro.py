@@ -194,6 +194,34 @@ def test_deflate_codec_reads(spark, tmp_path):
     assert [r["x"] for r in recs] == list(range(1000))
 
 
+def test_every_truncation_raises():
+    """A shard cut short anywhere raises ValueError, never reads back as
+    fewer records or a bare IndexError.  The one exception is the cut just
+    after the header's sync marker: that is a complete container with no
+    blocks (what Java's DataFileWriter writes for zero records)."""
+    import io as _io
+
+    from pyspark.sql.types import StructType
+
+    from ironbeam_spark.sources.avro import write_ocf
+
+    sj = avro_schema_of(
+        StructType.fromDDL("id long, s string, v double, flag boolean, b binary, xs array<int>")
+    )
+    rows = [[i, f"doc {i}", i / 3, i % 2 == 0, bytes([i]), [i, None]] for i in range(6)]
+    sync = b"0123456789abcdef"
+    buf = _io.BytesIO()
+    write_ocf(buf, rows, sj, sync)
+    data = buf.getvalue()
+    header_end = data.index(sync) + len(sync)
+    assert len(list(read_ocf(data)[1])) == 6
+    assert list(read_ocf(data[:header_end])[1]) == []
+    for n in range(len(data)):
+        if n != header_end:
+            with pytest.raises(ValueError):
+                list(read_ocf(data[:n])[1])
+
+
 def test_events_aggregate_through_avro_matches_parquet(spark, tmp_path):
     """End-to-end: events → avro shards → read back → aggregate equals the
     same aggregate straight from parquet (the q_msgpack pattern)."""

@@ -1,7 +1,8 @@
 """The shared shard protocol (``sources/shards.py``) as every partition-
-parallel file sink sees it: a crashed attempt's hidden temp is invisible
-to the format's reader, overwrite sweeps it, and a successful write leaves
-no temp behind."""
+parallel file sink and its reader see it: a crashed attempt's hidden temp
+is invisible to the format's reader, overwrite sweeps it, a successful
+write leaves no temp behind, a file of another format beside the shards
+is never read, and a corrupt shard fails the read with its name."""
 
 from __future__ import annotations
 
@@ -12,7 +13,12 @@ from pyspark.sql import functions as F
 
 from ironbeam_spark.sources.arrow_ipc import read_arrow_ipc_py, write_arrow_ipc_py
 from ironbeam_spark.sources.avro import read_avro_py, write_avro_py
-from ironbeam_spark.sources.compression import read_lines, write_lines
+from ironbeam_spark.sources.compression import (
+    read_csv_compressed,
+    read_lines,
+    write_csv_compressed,
+    write_lines,
+)
 from ironbeam_spark.sources.custom import register_msgpack_format
 from ironbeam_spark.sources.msgpack import read_msgpack, write_msgpack
 from ironbeam_spark.sources.safetensors import (
@@ -67,12 +73,33 @@ SINKS = {
         lambda df, out, mode: write_lines(df.select("text"), out, "gzip", mode),
         lambda spark, out: read_lines(spark, out, "gzip"),
     ),
+    "csv_xz": (
+        lambda df, out, mode: write_csv_compressed(
+            df.select("id", "text"), out, "xz", mode=mode
+        ),
+        lambda spark, out: read_csv_compressed(
+            spark, out, schema="id long, text string", codec="xz"
+        ),
+    ),
     "custom": (_write_custom, _read_custom),
 }
+
+# the format each reader names in its corrupt-shard error (its extension)
+FORMAT_NAME = {"arrow_ipc": "arrow", "lines": "gz", "csv_xz": "xz", "custom": "msgpack"}
 
 
 def _hidden(out):
     return sorted(f for f in os.listdir(out) if f.startswith("."))
+
+
+def _frame(spark):
+    """Four rows in two partitions, with a column for every sink."""
+    return spark.range(0, 4, 1, 2).select(
+        "id",
+        F.concat(F.lit("doc "), F.col("id").cast("string")).alias("text"),
+        F.concat(F.lit("http://example.com/"), F.col("id").cast("string")).alias("uri"),
+        F.array(F.col("id").cast("float"), F.lit(1.0).cast("float")).alias("embedding"),
+    )
 
 
 @pytest.mark.parametrize("sink", sorted(SINKS))
@@ -81,12 +108,7 @@ def test_torn_inprogress_shard_is_invisible(spark, tmp_path, sink):
     temp name: the format's reader never decodes it, overwrite sweeps it,
     and a successful write commits every temp it opened."""
     write, read = SINKS[sink]
-    df = spark.range(0, 4, 1, 2).select(
-        "id",
-        F.concat(F.lit("doc "), F.col("id").cast("string")).alias("text"),
-        F.concat(F.lit("http://example.com/"), F.col("id").cast("string")).alias("uri"),
-        F.array(F.col("id").cast("float"), F.lit(1.0).cast("float")).alias("embedding"),
-    )
+    df = _frame(spark)
     out = str(tmp_path / sink)
     write(df, out, "overwrite")
     assert _hidden(out) == []
@@ -110,3 +132,36 @@ def test_failed_encode_leaves_no_temp(spark, tmp_path):
     with pytest.raises(Exception, match="ragged"):
         write_safetensors_py(ragged, out)
     assert os.listdir(out) == []
+
+
+@pytest.mark.parametrize("fmt", sorted(SINKS))
+def test_foreign_file_is_not_listed(spark, tmp_path, fmt):
+    """A file without the format's extension beside the shards (here a
+    ``notes.md``) is not a shard: the reader neither decodes it nor takes
+    its schema from it."""
+    write, read = SINKS[fmt]
+    out = str(tmp_path / fmt)
+    write(_frame(spark), out, "overwrite")
+    with open(os.path.join(out, "notes.md"), "w") as f:
+        f.write("# notes on this dataset\n")
+    assert read(spark, out).count() == 4
+
+
+@pytest.mark.parametrize("fmt", sorted(SINKS))
+def test_corrupt_shard_names_itself(spark, tmp_path, fmt):
+    """Garbage under a final shard name fails the read with one
+    ``ValueError`` that names the format and the shard file, never a raw
+    codec error and never a short read."""
+    write, read = SINKS[fmt]
+    out = str(tmp_path / fmt)
+    write(_frame(spark), out, "overwrite")
+    shard = sorted(f for f in os.listdir(out) if not f.startswith("."))[0]
+    with open(os.path.join(out, shard), "wb") as f:
+        f.write(b"garbage " * 64)
+    with pytest.raises(Exception) as err:
+        read(spark, out).collect()
+    # a driver-side failure (schema inference) is the ValueError itself;
+    # a task-side one arrives wrapped with its traceback
+    msg = f"{type(err.value).__name__}: {err.value}"
+    assert f"ValueError: {FORMAT_NAME.get(fmt, fmt)}: corrupt shard" in msg
+    assert shard in msg

@@ -73,6 +73,36 @@ def test_tar_corrupt_shard_raises(spark, tmp_path):
         read_tar_members(spark, out).collect()
 
 
+def test_tar_truncated_shard_raises(spark, tmp_path):
+    """A shard cut at, or a few bytes into, a member header is not read
+    as a shorter archive: without the two zero blocks that end a complete
+    archive the read fails and names the shard.  A cut inside the padding
+    after those blocks loses nothing and still reads."""
+    import io
+
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w") as tf:
+        for i in range(20):
+            payload = f"doc {i}".encode()
+            info = tarfile.TarInfo(name=f"s{i}.txt")
+            info.size = len(payload)
+            tf.addfile(info, io.BytesIO(payload))
+    data = buf.getvalue()
+    assert len(data) == 30_720  # 20 x (header + one data block) + end + padding
+
+    def shard(cut):
+        out = tmp_path / f"cut{cut}"
+        out.mkdir()
+        (out / "part-00000.tar").write_bytes(data[:cut])
+        return str(out)
+
+    for cut in (len(data), 21_504):  # whole; cut right after the end marker
+        assert read_tar_members(spark, shard(cut)).count() == 20
+    for cut in (15_360, 16_387, 20_992):  # 15 members; 16 + 3 bytes; half a marker
+        with pytest.raises(Exception, match="tar: corrupt shard .*part-00000.tar"):
+            read_tar_members(spark, shard(cut)).collect()
+
+
 def test_tar_multidot_field_names(spark, tmp_path):
     """sample.field splits at the FIRST dot — multi-dot fields (e.g.
     'seg.json') stay intact per the WebDataset convention."""
