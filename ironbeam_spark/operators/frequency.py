@@ -5,21 +5,17 @@ Exact per-element counts (``count_per_element`` + top-k, reference
 item — fine until the domain is billions of tokens/URLs at 100 TB.  This
 module adds the sketch tier the reference lacks: a **mergeable Misra-Gries
 summary** (Agarwal et al., "Mergeable Summaries", PODS'12) with capacity
-``m``:
+``m``, written as a :class:`MisraGries` CombineFn and run through the
+``combine_globally`` tree (the result stays a lazy DataFrame):
 
-- per partition (Arrow-batched ``mapInPandas``): exact-count each batch,
-  merge into the running summary, trim to ``m`` entries by subtracting the
+- per partition: exact-count each Arrow batch (``pyarrow.compute``), merge
+  into the running summary, trim to ``m`` entries by subtracting the
   (m+1)-th largest count from all and dropping the non-positive — the
   classic MG step, with the subtracted offsets accumulated as the summary's
   error bound;
 - merge: same sum+trim over the per-partition summaries, as a two-level
   tree — an intermediate ``repartition(merge_fanout)`` merge round, then a
-  final ``repartition(1)`` over ≤ merge_fanout·(m+1) tiny rows (the
-  ``combine_globally`` shape — the result stays a lazy DataFrame).
-
-Error transport is batch-safe: each summary emits its accumulated offset on
-ONE sentinel row (null item) and zero on item rows, so the merger can simply
-sum the ``err`` column no matter how Arrow re-batches the stream.
+  final ``repartition(1)`` over ≤ merge_fanout pickled summaries.
 
 Guarantees (the testable contract): for every item, ``est ≤ true_count ≤
 est + err``, and any item with ``true_count > err`` is present in the
@@ -30,12 +26,14 @@ booleans and in pytest.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections import Counter
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["approx_heavy_hitters", "cms_estimates", "collocations_pmi"]
+from ironbeam_spark.operators.combinefn import CombineFn, combine_globally
+
+__all__ = ["MisraGries", "approx_heavy_hitters", "cms_estimates", "collocations_pmi"]
 
 
 def _trim(counts: dict, m: int) -> tuple[dict, int]:
@@ -47,68 +45,64 @@ def _trim(counts: dict, m: int) -> tuple[dict, int]:
     return {k: v - pivot for k, v in counts.items() if v > pivot}, pivot
 
 
+_NAN = float("nan")
+
+
+class MisraGries(CombineFn):
+    """Misra-Gries summary of column ``col`` with capacity ``m``.  The
+    accumulator is ``(counts, err)``; null items are never counted, NaN is
+    one item.  Output: ``hh`` (``array<struct<item, est>>``) and ``err``."""
+
+    def __init__(self, col: str, m: int):
+        self.col, self.m = col, m
+
+    def create_accumulator(self):
+        return {}, 0
+
+    def add_batch(self, acc, batch):
+        import pyarrow.compute as pc
+
+        # one batch's exact counts are a summary with err 0
+        vc = pc.value_counts(pc.drop_null(batch.column(self.col)))
+        exact = dict(zip(vc.field("values").to_pylist(), vc.field("counts").to_pylist()))
+        return self.merge_accumulators([acc, (exact, 0)])
+
+    def merge_accumulators(self, accs):
+        counts: Counter = Counter()
+        for part, _ in accs:
+            # NaN != NaN: key every NaN by one object, as Spark groups them
+            counts.update({_NAN if k != k else k: c for k, c in part.items()})
+        counts, off = _trim(counts, self.m)
+        return counts, sum(e for _, e in accs) + off
+
+    def extract_output(self, acc):
+        counts, err = acc
+        return {"hh": [{"item": k, "est": v} for k, v in counts.items()], "err": err}
+
+
 def approx_heavy_hitters(
     df: DataFrame, item_col: str, m: int = 256, merge_fanout: int = 32
 ) -> DataFrame:
     """Frequent-items summary of ``item_col``: ≤ m rows ``(item, est, err)``
     with ``est ≤ true_count ≤ est + err`` for present items and every item
     of ``true_count > err`` guaranteed present.  Memory is O(m) per task and
-    the shuffle moves ≤ partitions·(m+1) summary rows — never one row per
+    the shuffle moves one pickled summary per partition — never one row per
     distinct item.
 
-    The merge is a two-level tree (the reference's O(log n) Rayon reduction,
-    ``src/runner.rs:802-810``): an intermediate ``repartition(merge_fanout)``
-    merge round so no single task ever sees more than ~P/merge_fanout
-    summaries, then the final single-partition merge over ≤
-    merge_fanout·(m+1) rows.  MG summaries are mergeable at any fan-in
-    (sum + trim, offsets accumulate into ``err``), so splitting one
-    partition's summary rows across intermediate mergers preserves the
-    guarantee."""
-    import pandas as pd
-
-    def summarize(batches: Iterator["pd.DataFrame"], is_merge: bool) -> Iterator["pd.DataFrame"]:
-        counts: dict = {}
-        err = 0
-        for pdf in batches:
-            if is_merge:
-                err += int(pdf["err"].sum())
-                items, ests = pdf["item"], pdf["est"]
-                for item, c in zip(items, ests):
-                    if item is not None and not pd.isna(item):
-                        counts[item] = counts.get(item, 0) + int(c)
-            else:
-                for item, c in pdf[item_col].value_counts().items():
-                    counts[item] = counts.get(item, 0) + int(c)
-            counts, off = _trim(counts, m)
-            err += off
-        out = pd.DataFrame(
-            {
-                "item": list(counts) + [None],  # sentinel row carries err
-                "est": list(counts.values()) + [0],
-                "err": [0] * len(counts) + [err],
-            }
-        )
-        yield out
-
-    def partial(batches):
-        yield from summarize(batches, is_merge=False)
-
-    def merge(batches):
-        yield from summarize(batches, is_merge=True)
-
+    The merge is ``combine_globally``'s two-level tree (the reference's
+    O(log n) Rayon reduction, ``src/runner.rs:802-810``): an intermediate
+    ``repartition(merge_fanout)`` merge round so no single task ever sees
+    more than ~P/merge_fanout summaries, then the final single-partition
+    merge.  MG summaries are mergeable at any fan-in (sum + trim, offsets
+    accumulate into ``err``), so the guarantee survives every level."""
     item_type = df.schema[item_col].dataType.simpleString()
-    schema = f"item {item_type}, est long, err long"
-    partials = df.select(item_col).mapInPandas(partial, schema)
-    intermediate = partials.repartition(merge_fanout).mapInPandas(merge, schema)
-    merged = intermediate.repartition(1).mapInPandas(merge, schema)
-    # publish the total bound on every item row; drop the sentinel (the
-    # window is over the ≤ m+1 merged rows — trivial, not a data shuffle)
-    total_err = F.max(F.col("err")).over(Window.partitionBy())
-    return (
-        merged.withColumn("err", total_err)
-        .where(F.col("item").isNotNull())
-        .select("item", "est", "err")
+    summary = combine_globally(
+        df.select(item_col),
+        MisraGries(item_col, m),
+        f"hh array<struct<item:{item_type},est:bigint>>, err bigint",
+        merge_fanout,
     )
+    return summary.select(F.inline("hh"), "err")
 
 
 def cms_estimates(

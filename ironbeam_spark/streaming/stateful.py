@@ -22,12 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-__all__ = [
-    "stream_dedup_first",
-    "stream_running_count",
-    "stream_running_count_tws",
-    "tws_available",
-]
+__all__ = ["stream_dedup_first", "stream_running_count"]
 
 
 def stream_dedup_first(
@@ -94,65 +89,6 @@ def stream_running_count(sdf: DataFrame, key_cols: list[str]) -> DataFrame:
         stateStructType="n long",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas — Spark 4's arbitrary-stateful API
-# ---------------------------------------------------------------------------
-
-
-def tws_available() -> bool:
-    """``transformWithStateInPandas`` drives its state server over protobuf;
-    without the ``protobuf`` package the streaming Python runner crashes at
-    startup.  Runtime-gated like the avro source (sources/io.py)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def stream_running_count_tws(sdf: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Per-key running count via ``transformWithStateInPandas`` — same
-    semantics as :func:`stream_running_count`, expressed in Spark 4's
-    ``StatefulProcessor`` API (typed value state, timers available, state
-    schema evolution; RocksDB provider required — pair with
-    :class:`rocksdb_state_store`).
-
-    Preferred over ``applyInPandasWithState`` on clusters that have protobuf:
-    the processor handle supports value/list/map state and timers instead of
-    a single tuple, so complex operators don't have to pack state manually.
-    """
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the protobuf package"
-        )
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    key_ddl = _key_ddl(sdf, key_cols)
-
-    class _RunningCount(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._n = handle.getValueState("n", "n long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n = self._n.get()[0] if self._n.exists() else 0
-            for pdf in rows:
-                n += len(pdf)
-            self._n.update((n,))
-            yield pd.DataFrame([{**dict(zip(key_cols, key)), "running_n": n}])
-
-        def close(self) -> None:
-            pass
-
-    return sdf.groupBy(*key_cols).transformWithStateInPandas(
-        _RunningCount(),
-        outputStructType=f"{key_ddl}, running_n long",
-        outputMode="Update",
-        timeMode="None",
     )
 
 

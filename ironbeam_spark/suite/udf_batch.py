@@ -66,11 +66,11 @@ def _weighted_avg_price() -> CombineFn:
             q = int(row["l_quantity"] + 0.5)
             return (acc[0] + pc * q, acc[1] + q)
 
-        def add_batch(self, acc, pdf):
+        def add_batch(self, acc, batch):
             import numpy as np
 
-            pc = np.floor(pdf["l_extendedprice"].to_numpy() * 100 + 0.5).astype("int64")
-            q = np.floor(pdf["l_quantity"].to_numpy() + 0.5).astype("int64")
+            pc = np.floor(batch.column("l_extendedprice").to_numpy() * 100 + 0.5).astype("int64")
+            q = np.floor(batch.column("l_quantity").to_numpy() + 0.5).astype("int64")
             return (acc[0] + int((pc * q).sum()), acc[1] + int(q.sum()))
 
         def merge_accumulators(self, accs):
@@ -92,7 +92,7 @@ def _weighted_avg_price() -> CombineFn:
     GROUP BY l_returnflag
     ORDER BY l_returnflag
     """,
-    doc="user CombineFn via applyInPandas: create/add_batch/merge/extract protocol (ref CombineFn, src/collection.rs:333-360)",
+    doc="user CombineFn via applyInArrow (iterator form): create/add_batch/merge/extract protocol (ref CombineFn, src/collection.rs:333-360)",
 )
 def q_combinefn_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")

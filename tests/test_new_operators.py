@@ -14,7 +14,7 @@ from ironbeam_spark.operators.side_inputs import filter_with_side, with_side_map
 from tests.conftest import SF_SMOKE
 
 
-def _sum_count() -> CombineFn:
+def _sum_count(skip_null: bool = False) -> CombineFn:
     # defined inside a function so cloudpickle serializes the class by value
     # (executors cannot import the tests package)
     class SumCount(CombineFn):
@@ -22,6 +22,8 @@ def _sum_count() -> CombineFn:
             return (0, 0)
 
         def add_input(self, acc, row):
+            if skip_null and row["v"] is None:
+                return acc
             return (acc[0] + row["v"], acc[1] + 1)
 
         def merge_accumulators(self, accs):
@@ -37,11 +39,27 @@ def test_combinefn_per_key(spark):
     df = spark.createDataFrame(
         [("a", 1), ("a", 2), ("b", 10), ("b", 20), ("b", 30)], "k string, v long"
     )
-    out = {
-        r.k: (r.total, r.n)
-        for r in combine_per_key(df, ["k"], _sum_count(), "k string, total long, n long").collect()
-    }
+    combined = combine_per_key(df, ["k"], _sum_count(), "k string, total long, n long")
+    out = {r.k: (r.total, r.n) for r in combined.collect()}
     assert out == {"a": (3, 2), "b": (60, 3)}
+    plan = _final_plan(combined)  # one Arrow fold per key group, no pandas frame
+    assert "FlatMapGroupsInArrow" in plan and "FlatMapGroupsInPandas" not in plan, plan
+
+
+@pytest.mark.parametrize("how", ["globally", "per_key"])
+def test_combinefn_sees_exact_ints_and_none(spark, how):
+    """The fold receives exact Python ints and None for nulls: a bigint
+    above 2**53 keeps its low bit, and a null-skipping add_input skips."""
+    df = spark.createDataFrame(
+        [("a", 2**53 + 1), ("a", None), ("a", 2)], "k string, v long"
+    )
+    if how == "globally":
+        row = combine_globally(df, _sum_count(skip_null=True), "total long, n long").collect()[0]
+    else:
+        (row,) = combine_per_key(
+            df, ["k"], _sum_count(skip_null=True), "k string, total long, n long"
+        ).collect()
+    assert (row.total, row.n) == (9007199254740995, 2)
 
 
 def test_combinefn_globally_and_empty(spark):
@@ -75,14 +93,15 @@ def _final_plan(df) -> str:
 def test_combinefn_globally_tree_merge_stages(spark):
     """The global combine is a two-level tree: partial -> intermediate merge
     (repartition(merge_fanout)) -> final merge.  The executed plan must show
-    three MapInPandas stages and two exchanges, so no single merge task ever
+    three MapInArrow stages and two exchanges, so no single merge task ever
     sees all P partial accumulators."""
     df = spark.createDataFrame([(i,) for i in range(100)], "v long").repartition(8)
     out = combine_globally(df, _sum_count(), "total long, n long", merge_fanout=4)
     row = out.collect()[0]
     assert (row.total, row.n) == (sum(range(100)), 100)
     plan = _final_plan(out)
-    assert plan.count("MapInPandas") == 3, plan
+    assert plan.count("MapInArrow") == 3, plan
+    assert "MapInPandas" not in plan, plan
     assert plan.count("RoundRobinPartitioning(4)") == 1, plan  # intermediate
     assert plan.count("Exchange SinglePartition") == 1, plan  # final
 
@@ -101,7 +120,8 @@ def test_heavy_hitters_tree_merge_stages(spark):
     est, err = got["hot"]
     assert est <= 60 <= est + err  # MG guarantee across both merge levels
     plan = _final_plan(out)
-    assert plan.count("MapInPandas") == 3, plan
+    assert plan.count("MapInArrow") == 3, plan
+    assert "MapInPandas" not in plan, plan
     assert plan.count("RoundRobinPartitioning(4)") == 1, plan  # intermediate
     assert plan.count("Exchange SinglePartition") == 1, plan  # final
 
@@ -611,6 +631,40 @@ def test_heavy_hitters_exact_when_capacity_suffices(spark):
     ).repartition(4)
     got = {r.item: (r.est, r.err) for r in approx_heavy_hitters(df, "item_in", m=8).collect()}
     assert got == {"a": (50, 0), "b": (30, 0), "c": (20, 0)}
+
+
+def test_heavy_hitters_bigint_items_exact(spark):
+    """A bigint item above 2**53 comes back exact (no float round trip)."""
+    from ironbeam_spark.operators.frequency import approx_heavy_hitters
+
+    df = spark.createDataFrame(
+        [(2**53 + 1,)] * 5 + [(7,)] * 3, "item_in long"
+    ).repartition(4)
+    got = {r.item: (r.est, r.err) for r in approx_heavy_hitters(df, "item_in", m=8).collect()}
+    assert got == {2**53 + 1: (5, 0), 7: (3, 0)}
+
+
+def test_heavy_hitters_ignores_null_items(spark):
+    """Null items are never counted or reported; the other counts stay exact."""
+    from ironbeam_spark.operators.frequency import approx_heavy_hitters
+
+    df = spark.createDataFrame(
+        [(x,) for x in ["a"] * 4 + [None] * 6 + ["b"] * 2], "item_in string"
+    ).repartition(3)
+    got = {r.item: (r.est, r.err) for r in approx_heavy_hitters(df, "item_in", m=8).collect()}
+    assert got == {"a": (4, 0), "b": (2, 0)}
+
+
+def test_heavy_hitters_counts_nan_as_one_item(spark):
+    """NaN is one item, as in Spark's groupBy, however the batches split it."""
+    from ironbeam_spark.operators.frequency import approx_heavy_hitters
+
+    df = spark.createDataFrame(
+        [(float("nan"),)] * 6 + [(1.5,)] * 3, "item_in double"
+    ).repartition(3)
+    got = [(r.item, r.est, r.err) for r in approx_heavy_hitters(df, "item_in", m=8).collect()]
+    nan = [(est, err) for item, est, err in got if item != item]
+    assert nan == [(6, 0)] and (1.5, 3, 0) in got, got
 
 
 def test_merge_upsert_semantics(spark):

@@ -159,44 +159,6 @@ def test_stream_dedup_rocksdb_state_store_matches_default(spark):
     assert got == expected
 
 
-def test_transform_with_state_running_count_or_gated(spark):
-    """Spark 4 transformWithStateInPandas running count: batch-equivalent when
-    protobuf is present; otherwise the declared NotImplementedError gate fires
-    (this container ships no protobuf — the operator is still the real
-    implementation, same pattern as the avro source gate)."""
-    import pytest
-
-    from ironbeam_spark.streaming.stateful import (
-        rocksdb_state_store,
-        stream_running_count_tws,
-        tws_available,
-    )
-
-    sdf, static = _events_stream(spark)
-    keyed = sdf.select(F.col("event_type").cast("string").alias("event_type"))
-    if not tws_available():
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            stream_running_count_tws(keyed, ["event_type"])
-        return
-    with rocksdb_state_store(spark):  # TWS requires the RocksDB provider
-        out = stream_running_count_tws(keyed, ["event_type"])
-        _run_to_memory(out, "t_tws_count", "update")
-    got = {
-        r.event_type: r.running_n
-        for r in spark.table("t_tws_count")
-        .groupBy("event_type")
-        .agg(F.max("running_n").alias("running_n"))
-        .collect()
-    }
-    expected = {
-        r.event_type: r.n
-        for r in static.groupBy(F.col("event_type").cast("string").alias("event_type"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == expected
-
-
 def test_stream_interval_join_matches_batch(spark):
     """Stream-stream interval join (watermarked both sides, time-range
     condition so state evicts) equals the batch join under AvailableNow."""
