@@ -29,20 +29,28 @@ runs, which the driver contract forbids.
 from __future__ import annotations
 
 import functools
+import threading
+from collections import OrderedDict
 from typing import Any, Callable, TypeVar
 from weakref import WeakKeyDictionary
 
 _F = TypeVar("_F", bound=Callable)
 
-# (module, qualname, args, kwargs) -> constructed expression artifact
-_EXPR_MEMO: dict[tuple, Any] = {}
+# (module, qualname, args, kwargs) -> constructed expression artifact, in
+# least-recently-used order.  The bound keeps driver memory fixed when a
+# caller builds expressions from an open-ended set of literals; the suite's
+# own working set is far smaller, so it never evicts there.
+_EXPR_MEMO_SIZE = 1024
+_EXPR_MEMO: "OrderedDict[tuple, Any]" = OrderedDict()
+_EXPR_LOCK = threading.Lock()
 
 # session -> {key -> DataFrame plan}; weak keys let dead sessions drop
 _SESSION_MEMO: "WeakKeyDictionary[Any, dict]" = WeakKeyDictionary()
 
 
 def memo_expr(fn: _F) -> _F:
-    """Memoize a pure Column-builder on its (hashable) arguments.
+    """Memoize a pure Column-builder on its (hashable) arguments, keeping
+    the ``_EXPR_MEMO_SIZE`` most recently used results.
 
     Unhashable arguments — Columns, lists, DataFrames — bypass the cache
     and build normally, so ``Column | str`` builder signatures keep
@@ -56,9 +64,16 @@ def memo_expr(fn: _F) -> _F:
             hash(key)
         except TypeError:
             return fn(*args, **kwargs)
-        hit = _EXPR_MEMO.get(key)
-        if hit is None:
-            hit = _EXPR_MEMO[key] = fn(*args, **kwargs)
+        with _EXPR_LOCK:
+            hit = _EXPR_MEMO.get(key)
+            if hit is not None:
+                _EXPR_MEMO.move_to_end(key)
+                return hit
+        hit = fn(*args, **kwargs)
+        with _EXPR_LOCK:
+            _EXPR_MEMO[key] = hit
+            if len(_EXPR_MEMO) > _EXPR_MEMO_SIZE:
+                _EXPR_MEMO.popitem(last=False)
         return hit
 
     return wrapper  # type: ignore[return-value]
@@ -79,7 +94,8 @@ def session_memo(spark, key: tuple, build: Callable[[], Any]):
 
 def clear_plan_caches() -> int:
     """Drop every cached artifact (tests / JVM restarts)."""
-    n = len(_EXPR_MEMO) + sum(len(v) for v in _SESSION_MEMO.values())
-    _EXPR_MEMO.clear()
+    with _EXPR_LOCK:
+        n = len(_EXPR_MEMO) + sum(len(v) for v in _SESSION_MEMO.values())
+        _EXPR_MEMO.clear()
     _SESSION_MEMO.clear()
     return n

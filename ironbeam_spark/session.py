@@ -19,10 +19,12 @@ deterministic, scale-safe, and oracle-comparable:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "DEFAULT_SHUFFLE_PARTITIONS"]
+__all__ = ["get_spark", "scoped_conf", "DEFAULT_SHUFFLE_PARTITIONS"]
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -76,6 +78,25 @@ def get_spark(
     spark = builder.getOrCreate()
     _ship_package(spark)
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[SparkSession]:
+    """Set ``conf`` on ``spark`` for the ``with`` body, then restore every
+    key, also when the body raises: a key that was set before gets its old
+    value back, and a key that was unset is unset again, so the session's
+    explicitly set conf is the same after the block as before it."""
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield spark
+    finally:
+        for k, old in saved.items():
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, old)
 
 
 def _ship_package(spark: SparkSession) -> None:

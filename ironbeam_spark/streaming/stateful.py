@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ironbeam_spark.session import scoped_conf
+
 __all__ = ["stream_dedup_first", "stream_running_count"]
 
 
@@ -101,9 +103,10 @@ ROCKSDB_PROVIDER = (
 )
 
 
-class rocksdb_state_store:
+def rocksdb_state_store(spark):
     """Context manager that runs streaming queries against the RocksDB state
-    store provider instead of the default in-memory HDFS-backed one.
+    store provider instead of the default in-memory HDFS-backed one; the
+    session conf is restored on exit (:func:`ironbeam_spark.session.scoped_conf`).
 
     At 100 TB the per-key state of a dedup or running-aggregate stream does
     not fit on the executor heap; RocksDB keeps it on local SSD with
@@ -111,29 +114,10 @@ class rocksdb_state_store:
     snapshot.  Local-mode behavior is identical — tests assert batch
     equivalence under both providers.
     """
-
-    _KEYS = {
-        "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
-    }
-
-    def __init__(self, spark):
-        self._spark = spark
-        self._saved: dict[str, str | None] = {}
-
-    def __enter__(self):
-        for k, v in self._KEYS.items():
-            try:
-                self._saved[k] = self._spark.conf.get(k)
-            except Exception:
-                self._saved[k] = None
-            self._spark.conf.set(k, v)
-        return self._spark
-
-    def __exit__(self, *exc):
-        for k, old in self._saved.items():
-            if old is None:
-                self._spark.conf.unset(k)
-            else:
-                self._spark.conf.set(k, old)
-        return False
+    return scoped_conf(
+        spark,
+        {
+            "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
+            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+        },
+    )

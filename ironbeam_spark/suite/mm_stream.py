@@ -33,7 +33,7 @@ from ironbeam_spark.operators.multimodal import (
 )
 from ironbeam_spark.operators.windowing import to_event_time
 from ironbeam_spark.sources.io import read_table, read_table_stream
-from ironbeam_spark.streaming import run_to_memory
+from ironbeam_spark.streaming import run_foreach_batch, run_to_memory
 from ironbeam_spark.suite.registry import query
 
 
@@ -1014,18 +1014,8 @@ def q_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdf = read_table_stream(spark, sf_dir, "events")
     out = tempfile.mkdtemp(prefix="ironbeam_q_sink_")
     sink = IdempotentParquetSink(out)
-    # the read-back below is lazy over ``out``, which therefore stays; the
-    # checkpoint is single-use scratch (see streaming.run_to_memory)
-    with tempfile.TemporaryDirectory(
-        prefix="ironbeam_q_sink_ck_", ignore_cleanup_errors=True
-    ) as ckpt:
-        q = (
-            sdf.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    # the read-back below is lazy over ``out``, which therefore stays
+    run_foreach_batch(sdf, sink)
     back = spark.read.parquet(f"{out}/batch-*")
     return (
         back.groupBy((F.col("user_id") % 7).alias("shard"))

@@ -45,6 +45,32 @@ def test_memo_expr_caches_hashable_and_bypasses_columns(spark):
     assert len(calls) == 4
 
 
+def test_memo_expr_is_lru_bounded(spark, monkeypatch):
+    """Inserting past the memo's bound evicts the least recently used
+    entry, and a recently used one is still a hit."""
+    from ironbeam_spark import plancache
+
+    plancache.clear_plan_caches()
+    monkeypatch.setattr(plancache, "_EXPR_MEMO_SIZE", 3)
+    calls = []
+
+    @plancache.memo_expr
+    def build(name):
+        calls.append(name)
+        return F.col(name)
+
+    a, b = build("a"), build("b")
+    build("c")
+    assert build("a") is a  # hit; "a" becomes the most recently used
+    build("d")  # past the bound: evicts "b", the least recently used
+    assert len(plancache._EXPR_MEMO) == 3
+    assert build("a") is a
+    assert calls == ["a", "b", "c", "d"]
+    assert build("b") is not b  # evicted, so rebuilt
+    assert calls == ["a", "b", "c", "d", "b"]
+    plancache.clear_plan_caches()
+
+
 def test_session_memo_plans_hold_no_materialized_state(spark):
     """The memoized base-table scan is a LAZY plan: not persisted, no
     InMemoryRelation — every action recomputes from parquet (the driver

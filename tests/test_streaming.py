@@ -3,11 +3,14 @@ first-seen dedup and running counts over the events table, AvailableNow."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 import pyspark.sql.functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from ironbeam_spark.sources.io import read_table
+from ironbeam_spark.streaming import run_to_memory
 from ironbeam_spark.streaming.stateful import stream_dedup_first, stream_running_count
 from tests.conftest import SF_SMOKE
 
@@ -21,21 +24,6 @@ def _events_stream(spark):
     ), static
 
 
-def _run_to_memory(sdf, name, mode):
-    # also called inside a hypothesis body, where tmp_path is not reset per
-    # example: the checkpoint lives exactly as long as the query
-    with tempfile.TemporaryDirectory(prefix="ironbeam_state_") as ckpt:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-
 def test_stream_dedup_first_matches_batch_winner(spark):
     sdf, static = _events_stream(spark)
     out = stream_dedup_first(
@@ -43,7 +31,7 @@ def test_stream_dedup_first_matches_batch_winner(spark):
         ["user_id", "event_type"],
         "event_id",
     )
-    _run_to_memory(out, "t_stream_dedup", "append")
+    run_to_memory(out, "t_stream_dedup", "append")
     got = {
         (r.user_id, r.event_type): r.event_id for r in spark.table("t_stream_dedup").collect()
     }
@@ -62,7 +50,7 @@ def test_stream_running_count_single_batch(spark):
         sdf.select(F.col("event_type").cast("string").alias("event_type")),
         ["event_type"],
     )
-    _run_to_memory(out, "t_stream_counts", "update")
+    run_to_memory(out, "t_stream_counts", "update")
     got = {r.event_type: r.running_n for r in spark.table("t_stream_counts").collect()}
     expected = {
         r.event_type: r.n
@@ -77,7 +65,7 @@ def test_stream_running_count_bigint_key(spark):
     sdf, static = _events_stream(spark)
     out = stream_running_count(sdf.select("user_id"), ["user_id"])
     assert dict(out.dtypes)["user_id"] == "bigint"
-    _run_to_memory(out, "t_stream_counts_big", "update")
+    run_to_memory(out, "t_stream_counts_big", "update")
     got = {r.user_id: r.running_n for r in spark.table("t_stream_counts_big").collect()}
     expected = {
         r.user_id: r.n
@@ -102,7 +90,7 @@ def test_stream_sliding_and_session_match_batch(spark):
         to_ts(sdf), "event_time", 3_600_000, 1_800_000, ["event_type"],
         F.count(F.lit(1)).alias("n"),
     )
-    _run_to_memory(slid, "t_slide", "complete")
+    run_to_memory(slid, "t_slide", "complete")
     got = {
         (r.event_type, r.window_start): r.n for r in spark.table("t_slide").collect()
     }
@@ -117,7 +105,7 @@ def test_stream_sliding_and_session_match_batch(spark):
         to_ts(sdf.where("user_id < 5")), "event_time", 600_000, ["user_id"],
         F.count(F.lit(1)).alias("n"),
     )
-    _run_to_memory(sess, "t_sess", "complete")
+    run_to_memory(sess, "t_sess", "complete")
     got_s = {
         (r.user_id, r.session_start, r.session_end): r.n
         for r in spark.table("t_sess").collect()
@@ -138,6 +126,7 @@ def test_stream_dedup_rocksdb_state_store_matches_default(spark):
     from ironbeam_spark.streaming.stateful import ROCKSDB_PROVIDER, rocksdb_state_store
 
     sdf, static = _events_stream(spark)
+    before = spark.conf.getAll
     with rocksdb_state_store(spark):
         assert spark.conf.get("spark.sql.streaming.stateStore.providerClass") == ROCKSDB_PROVIDER
         out = stream_dedup_first(
@@ -145,7 +134,8 @@ def test_stream_dedup_rocksdb_state_store_matches_default(spark):
             ["user_id", "event_type"],
             "event_id",
         )
-        _run_to_memory(out, "t_stream_dedup_rocks", "append")
+        run_to_memory(out, "t_stream_dedup_rocks", "append")
+    assert spark.conf.getAll == before  # keys unset before are unset again
     got = {
         (r.user_id, r.event_type): r.event_id
         for r in spark.table("t_stream_dedup_rocks").collect()
@@ -188,7 +178,7 @@ def test_stream_interval_join_matches_batch(spark):
         upper_ms=3_600_000,
         watermark_ms=600_000,
     ).select("user_id", "err_id", "click_id")
-    _run_to_memory(s_out, "t_stream_ij", "append")
+    run_to_memory(s_out, "t_stream_ij", "append")
     got = {(r.user_id, r.err_id, r.click_id) for r in spark.table("t_stream_ij").collect()}
 
     b_out = stream_interval_join(
@@ -222,7 +212,7 @@ def test_stream_distinct_and_within_watermark_dedup(spark):
     }
 
     out = stream_distinct(sdf, ["user_id", "event_type"])
-    _run_to_memory(out, "t_stream_distinct", "append")
+    run_to_memory(out, "t_stream_distinct", "append")
     got = {
         (r.user_id, r.event_type) for r in spark.table("t_stream_distinct").collect()
     }
@@ -236,7 +226,7 @@ def test_stream_distinct_and_within_watermark_dedup(spark):
         "event_time",
         "10 minutes",
     )
-    _run_to_memory(wm, "t_stream_wm_dedup", "append")
+    run_to_memory(wm, "t_stream_wm_dedup", "append")
     rows = spark.table("t_stream_wm_dedup").collect()
     assert {(r.user_id, r.event_type) for r in rows} == expected
     assert len(rows) == len(expected)  # no key emitted twice
@@ -318,7 +308,7 @@ def test_rocksdb_changelog_batch_equivalence_property(spark):
                         ["user_id"],
                         "event_id",
                     )
-                    _run_to_memory(d, f"t_prop_d_{tag}_{provider}", "append")
+                    run_to_memory(d, f"t_prop_d_{tag}_{provider}", "append")
                     got_d = {
                         r.user_id: r.event_id
                         for r in spark.table(f"t_prop_d_{tag}_{provider}").collect()
@@ -339,7 +329,7 @@ def test_rocksdb_changelog_batch_equivalence_property(spark):
                         F.count(F.lit(1)).alias("n"),
                         watermark_ms=0,
                     )
-                    _run_to_memory(s, f"t_prop_s_{tag}_{provider}", "complete")
+                    run_to_memory(s, f"t_prop_s_{tag}_{provider}", "complete")
                     got_s = {
                         (r.user_id, r.session_start, r.session_end): r.n
                         for r in spark.table(f"t_prop_s_{tag}_{provider}").collect()
@@ -396,7 +386,7 @@ def test_stream_interval_join_rocksdb_matches_default(spark):
                 upper_ms=3_600_000,
                 watermark_ms=600_000,
             ).select("user_id", "err_id", "click_id")
-            _run_to_memory(out, f"t_ij_{provider}", "append")
+            run_to_memory(out, f"t_ij_{provider}", "append")
             return {
                 (r.user_id, r.err_id, r.click_id)
                 for r in spark.table(f"t_ij_{provider}").collect()
@@ -446,7 +436,7 @@ def test_stream_interval_left_outer_join_matches_batch(spark):
         how="left_outer",
         **args,
     ).select("user_id", "err_time", "err_id", "click_id")
-    _run_to_memory(s_out, "t_stream_loj", "append")
+    run_to_memory(s_out, "t_stream_loj", "append")
 
     # closed region: strictly more than (watermark + upper) before the
     # stream's final watermark.  The watermark is computed per SIDE from
@@ -481,3 +471,72 @@ def test_stream_interval_left_outer_join_matches_batch(spark):
     expected = {(r.user_id, r.err_id, r.click_id) for r in b_out.collect()}
     assert got == expected
     assert any(c is None for _, _, c in expected)  # real outer rows exist
+
+
+class _StatePartitions(StreamingQueryListener):
+    """Collects ``numShufflePartitions`` of every state operator in the
+    progress events of the queries that run while it is registered."""
+
+    def __init__(self):
+        self.seen: set[int] = set()
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        self.seen.update(s.numShufflePartitions for s in event.progress.stateOperators)
+
+    def onQueryTerminated(self, event):
+        pass
+
+
+def _state_partitions(spark, name: str) -> set[int]:
+    """State-store partition counts of a streaming distinct over the smoke
+    ``events`` table run through ``run_to_memory``."""
+    from ironbeam_spark.streaming.dedup import stream_distinct
+
+    sdf, _ = _events_stream(spark)
+    listener = _StatePartitions()
+    spark.streams.addListener(listener)
+    try:
+        run_to_memory(stream_distinct(sdf, ["user_id", "event_type"]), name, "append")
+        # progress reaches the listener through the async listener bus
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    finally:
+        spark.streams.removeListener(listener)
+    return listener.seen
+
+
+def test_run_to_memory_sizes_state_partitions_to_input(spark):
+    """The state store gets ceil(input bytes / advisoryPartitionSizeInBytes)
+    partitions, clamped to [1, spark.sql.shuffle.partitions]."""
+    from ironbeam_spark.session import scoped_conf
+
+    session_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert session_n > 2
+    # the smoke events file is far below the default 64 MB advisory size
+    assert _state_partitions(spark, "t_parts_small") == {1}
+
+    size = os.path.getsize(os.path.join(SF_SMOKE, "events.parquet"))
+    advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    with scoped_conf(spark, {advisory: f"{size // 2 + 1}b"}):
+        assert _state_partitions(spark, "t_parts_two") == {2}
+    with scoped_conf(spark, {advisory: f"{size // (4 * session_n)}b"}):
+        assert _state_partitions(spark, "t_parts_full") == {session_n}
+
+
+def test_run_to_memory_leaves_session_conf_unchanged(spark):
+    """The chosen count applies to the started query only: the session's
+    conf is the same after a call as before it, also when ``.start()``
+    raises (complete mode needs a streaming aggregation)."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    before = spark.conf.getAll
+    sdf, _ = _events_stream(spark)
+    run_to_memory(sdf.select("user_id"), "t_conf_ok", "append")
+    assert spark.conf.getAll == before
+
+    with pytest.raises(AnalysisException):
+        run_to_memory(sdf.select("user_id"), "t_conf_bad", "complete")
+    assert spark.conf.getAll == before
