@@ -25,8 +25,8 @@ Scale notes (100 TB design intent)
 Everything here stays inside Catalyst: fusion, predicate pushdown, partial
 aggregation, AQE re-planning are delegated (SURVEY §4: zero custom optimizer
 rules needed).  The only operators that leave the JVM are the explicitly
-Python-flavored escape hatches (``map_batches_pandas``, ``combine_custom``),
-which use Arrow-batched Pandas UDFs.
+Python-flavored escape hatches (``map_batches``, ``map_values_batches``,
+``batch_by_size``), which cross on Arrow (``mapInArrow``/``applyInArrow``).
 """
 
 from __future__ import annotations
@@ -571,28 +571,30 @@ class PCollection:
         return self._with(self.df.cache() if cache else self.df)
 
     # ----------------------------------------------------------- batching
-    def map_batches_pandas(self, fn, schema) -> "PCollection":
-        """Arrow-batched per-partition transform (reference ``map_batches``,
-        ``src/helpers/batches.rs:64``) — ``mapInPandas``: the pandas batch IS
-        the batch.  Slow path; prefer native expressions."""
-        return self._with(self.df.mapInPandas(fn, schema))
-
-    def map_batches_arrow(self, fn, schema) -> "PCollection":
-        """Per-partition transform over raw Arrow RecordBatches (reference
-        ``apply_transform`` custom ``DynOp``, ``src/collection.rs:151`` —
-        partition-in/partition-out).  ``mapInArrow`` skips the pandas
-        conversion entirely: the fastest Python escape hatch."""
+    def map_batches(self, fn, schema) -> "PCollection":
+        """Per-partition batch transform (reference ``map_batches``,
+        ``src/helpers/batches.rs:64``) on ``mapInArrow``: ``fn`` maps an
+        iterator of ``pyarrow.RecordBatch`` to ``schema``-shaped batches."""
         return self._with(self.df.mapInArrow(fn, schema))
 
     def map_values_batches(self, fn, out_schema: str) -> "PCollection":
         """Arity-preserving batch transform of a key's values (reference
-        ``map_values_batches``, ``src/helpers/batches.rs:231``; the reference
-        asserts ``len(out) == len(chunk)``): ``applyInPandas`` per key group —
-        ``fn(pdf) -> pdf`` must return one output row per input row, keys
-        included in ``out_schema``."""
+        ``map_values_batches``, ``src/helpers/batches.rs:231``):
+        ``applyInArrow`` per key group, ``fn(pyarrow.Table) -> pyarrow.Table``
+        with keys in ``out_schema``.  Like the reference's ``len(out) ==
+        len(chunk)`` assert, a group whose row count changes raises
+        ``ValueError``."""
         self._require_keys()
+
+        def apply(table):
+            out = fn(table)
+            if out.num_rows != table.num_rows:
+                raise ValueError(f"map_values_batches: fn returned "
+                                 f"{out.num_rows} rows for a group of {table.num_rows}")
+            return out
+
         return self._with(
-            self.df.groupBy(*self.key_cols).applyInPandas(fn, out_schema),
+            self.df.groupBy(*self.key_cols).applyInArrow(apply, out_schema),
             self.key_cols,
         )
 
@@ -605,29 +607,27 @@ class PCollection:
         ``max_bytes``; an oversize element is emitted alone.  ``size_col``
         holds each row's byte size (e.g. ``octet_length(to_json(struct(*)))``).
 
-        Greedy sequential state can't be a window expression; a mapInPandas
-        pass assigns batch ids per partition (streaming through Arrow chunks,
-        O(1) state), then one groupBy forms the arrays."""
+        Greedy sequential state can't be a window expression; a mapInArrow
+        pass appends a batch id to each partition's Arrow batches (O(1)
+        state), then one groupBy forms the arrays."""
         df = self.df.withColumn("_pid", F.spark_partition_id())
         cols = df.columns
 
         def assign(batches):
-            running = {"bid": 0, "acc": 0}
+            import pyarrow as pa
 
-            def bid_of(size):
-                if running["acc"] > 0 and running["acc"] + size > max_bytes:
-                    running["bid"] += 1
-                    running["acc"] = 0
-                running["acc"] += size
-                return running["bid"]
+            bid, acc = 0, 0
+            for rb in batches:
+                bids = []
+                for size in rb.column(size_col).to_pylist():
+                    if acc > 0 and acc + size > max_bytes:
+                        bid, acc = bid + 1, 0
+                    acc += size
+                    bids.append(bid)
+                yield rb.append_column("_bid", pa.array(bids, pa.int64()))
 
-            for pdf in batches:
-                out = pdf.copy()
-                out["_bid"] = [bid_of(s) for s in pdf[size_col]]
-                yield out
-
-        schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-        assigned = df.mapInPandas(assign, f"{schema}, _bid long")
+        bid_field = _types.StructField("_bid", _types.LongType())
+        assigned = df.mapInArrow(assign, _types.StructType([*df.schema, bid_field]))
         elem = F.struct(*[F.col(c) for c in cols if c != "_pid"])
         out = (
             assigned.groupBy("_pid", "_bid")

@@ -20,8 +20,8 @@ does this one — which is exactly what makes the algorithm scale:
   rounds.
 - Segmentation (:func:`bpe_segment`) applies the trained merge ranks
   with the standard lowest-rank-first loop — inherently per-word
-  sequential, so it runs as an Arrow-batched ``mapInPandas`` over the
-  corpus (the sanctioned Python tier), never row-at-a-time.
+  sequential, so it runs as one ``mapInArrow`` pass over the corpus (the
+  sanctioned Python tier), never row-at-a-time.
 
 Merge application uses the standard left-to-right non-overlapping
 greedy semantics (``a a a`` under merge ``(a, a)`` → ``aa a``), and the
@@ -157,7 +157,8 @@ def bpe_segment(
     merges: list[tuple[str, str]],
 ) -> DataFrame:
     """Segment every document with trained merges (standard lowest-rank-
-    first application per word) — Arrow-batched ``mapInPandas``.  Returns
+    first application per word) — one ``mapInArrow`` pass, ``id_col``
+    passed through as its input Arrow array.  Returns
     ``(id, n_words, n_bpe_tokens, first_tokens)`` where ``first_tokens``
     is the pipe-joined segmentation of the first word (a stable probe of
     the merge table's effect)."""
@@ -189,27 +190,24 @@ def bpe_segment(
         return syms
 
     def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+        import pyarrow as pa
 
         cache: dict = {}
-        for pdf in batches:
-            rows = []
-            for rid, text in zip(pdf[id_col], pdf[text_col]):
-                ws = [w for w in (text or "").split(" ") if w]
-                n_tok = 0
-                first = ""
-                for k, w in enumerate(ws):
-                    s = seg_word(w, cache)
-                    n_tok += len(s)
-                    if k == 0:
-                        first = "|".join(s)
-                rows.append((rid, len(ws), n_tok, first))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "n_words", "n_bpe_tokens", "first_tokens"]
+        for rb in batches:
+            n_words, n_toks, firsts = [], [], []
+            for text in rb.column(1).to_pylist():
+                segs = [seg_word(w, cache) for w in (text or "").split(" ") if w]
+                n_words.append(len(segs))
+                n_toks.append(sum(map(len, segs)))
+                firsts.append("|".join(segs[0]) if segs else "")
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0), pa.array(n_words, pa.int64()),
+                 pa.array(n_toks, pa.int64()), pa.array(firsts, pa.string())],
+                names=[id_col, "n_words", "n_bpe_tokens", "first_tokens"],
             )
 
     id_dt = docs.schema[id_col].dataType.simpleString()
-    return docs.select(id_col, text_col).mapInPandas(
+    return docs.select(id_col, text_col).mapInArrow(
         run,
         f"{id_col} {id_dt}, n_words long, n_bpe_tokens long, first_tokens string",
     )

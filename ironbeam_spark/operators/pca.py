@@ -47,10 +47,10 @@ def scaled_gram(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
 
     def per_batch(batches):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            vecs = pdf[vec_col].tolist()
+        for rb in batches:
+            vecs = rb.column(0).to_pylist()
             if not vecs:
                 continue
             m = np.array(vecs, dtype=np.float64)
@@ -73,15 +73,12 @@ def scaled_gram(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
                 )
             g = q.T @ q
             iu, ju = np.triu_indices(dim)
-            rows = [
-                (int(i) + 1, int(j) + 1, int(g[i, j])) for i, j in zip(iu, ju)
-            ]
-            sums = q.sum(axis=0)
-            rows += [(int(i) + 1, 0, int(s)) for i, s in enumerate(sums)]
-            rows.append((0, 0, int(q.shape[0])))
-            yield pd.DataFrame(rows, columns=["i", "j", "s"])
+            i = np.concatenate([iu + 1, np.arange(1, dim + 1), [0]]).astype(np.int32)
+            j = np.concatenate([ju + 1, np.zeros(dim), [0]]).astype(np.int32)
+            s = np.concatenate([g[iu, ju], q.sum(axis=0), [q.shape[0]]])
+            yield pa.RecordBatch.from_pydict({"i": i, "j": j, "s": s})
 
-    parts = df.select(vec_col).mapInPandas(per_batch, "i int, j int, s long")
+    parts = df.select(vec_col).mapInArrow(per_batch, "i int, j int, s long")
     # the cell total stays DECIMAL(38,0): per-row diagonal terms reach
     # ~2^40, so a long total overflows near 10^9 rows — narrowing here
     # would silently destroy the exactness this pass exists for; callers
@@ -129,23 +126,24 @@ def pca_fit(gram_rows, dim: int, k: int):
 def pca_project(
     df: DataFrame, vec_col: str, components, id_col: str
 ) -> DataFrame:
-    """``(id, proj)`` — row-local Arrow-batched matmul, no shuffle."""
+    """``(id, proj)`` — row-local Arrow-batched matmul, no shuffle.  ``id``
+    is ``id_col`` passed through as its input Arrow array, any type."""
     import numpy as np
 
     comp = np.asarray(components, dtype=np.float64)
 
     def per_batch(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            if len(pdf) == 0:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            m = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            m = np.array(rb.column(1).to_pylist(), dtype=np.float64)
             p = m @ comp.T
-            yield pd.DataFrame(
-                {"id": pdf[id_col].values, "proj": list(map(list, p))}
-            )
+            proj = pa.array(p.tolist(), pa.list_(pa.float64()))
+            yield pa.RecordBatch.from_arrays([rb.column(0), proj], names=["id", "proj"])
 
-    return df.select(id_col, vec_col).mapInPandas(
-        per_batch, "id long, proj array<double>"
+    id_dt = df.schema[id_col].dataType.simpleString()
+    return df.select(id_col, vec_col).mapInArrow(
+        per_batch, f"id {id_dt}, proj array<double>"
     )

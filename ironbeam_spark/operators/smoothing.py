@@ -6,13 +6,14 @@ blessed Spark paths for order-dependent per-key math:
 
 - :func:`ewma_per_key` — exponentially-weighted moving average, the
   classic recurrence ``s_1 = x_1; s_i = alpha*x_i + (1-alpha)*s_{i-1}``.
-  Inherently sequential per key, so it runs as an Arrow-batched
-  ``applyInPandas`` (ONE shuffle on the key, linear work, state = one
+  Inherently sequential per key, so it runs as a per-group
+  ``applyInArrow`` (ONE shuffle on the key, linear work, state = one
   float per key) — the custom-stateful-operator escape hatch, used only
   because no built-in expresses a recurrence.  The arithmetic is pinned to
   ``alpha*x + (1-alpha)*s`` (two mults, one add, in that association) so a
-  prefix-fold SQL oracle replays it bit for bit — numpy float64, JVM
-  doubles and DuckDB doubles are the same IEEE lattice.
+  prefix-fold SQL oracle replays it bit for bit — Python floats, JVM
+  doubles and DuckDB doubles are the same IEEE lattice.  Input columns go
+  back out as their (sorted) input Arrow arrays, exact for every type.
 
 - :func:`rolling_zscore` — rolling-window z-score anomaly detection,
   expression-only (no Python): the value is scaled to exact int64 cents,
@@ -24,10 +25,10 @@ blessed Spark paths for order-dependent per-key math:
   ``var = (n*sxx - sx^2) / (n*(n-1))`` over the trailing ``window`` rows.
 
 Scale shape: both are one shuffle on the entity key.  The EWMA's per-key
-group must fit a pandas batch (fine for per-entity event streams; for
+group must fit one Arrow table (fine for per-entity event streams; for
 million-row keys, pre-aggregate or split by session first — documented
-limit, same as every applyInPandas operator).  The z-score is a pure
-window chain: Exchange + sort once, then frame aggregates.
+limit, same as every whole-group ``applyInArrow`` operator).  The z-score
+is a pure window chain: Exchange + sort once, then frame aggregates.
 """
 
 from __future__ import annotations
@@ -37,6 +38,9 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+from pyspark.sql.types import DoubleType, StructField, StructType
+
+from ironbeam_spark.operators.windowing import to_epoch_us
 
 __all__ = ["ewma_per_key", "rolling_zscore"]
 
@@ -53,32 +57,26 @@ def ewma_per_key(
     ``(ts, tiebreak)`` order.  ``value_col`` must be non-null."""
     if not 0.0 < alpha <= 1.0:
         raise ValueError("ewma_per_key: alpha must be in (0, 1]")
-    from ironbeam_spark.operators.windowing import to_epoch_us
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     staged = df.withColumn("_us", to_epoch_us(df, ts_col)).drop(ts_col)
     order_cols = ["_us", *tiebreak_cols]
-    out_schema = StructType(
-        list(staged.schema.fields) + [StructField("ewma", DoubleType())]
-    )
+    out_schema = StructType([*staged.schema, StructField("ewma", DoubleType())])
     a = float(alpha)
     b = 1.0 - a
 
-    def smooth(pdf):
-        pdf = pdf.sort_values(order_cols, kind="mergesort")
-        s = None
-        out = []
-        # plain Python floats ARE IEEE doubles; the loop replays the exact
-        # association the oracle's list_reduce uses: a*x + b*s
-        for x in pdf[value_col].astype(float):
-            s = x if s is None else a * x + b * s
-            out.append(s)
-        pdf = pdf.copy()
-        pdf["ewma"] = out
-        return pdf
+    def smooth(table):
+        from itertools import accumulate
 
-    return staged.groupBy(*key_cols).applyInPandas(smooth, out_schema)
+        import pyarrow as pa
+
+        # stable, nulls last: equal (ts, tiebreak) rows keep input order
+        table = table.sort_by([(c, "ascending") for c in order_cols])
+        xs = map(float, table.column(value_col).to_pylist())
+        # plain Python floats ARE IEEE doubles; s_1 = x_1, then the exact
+        # association the oracle's list_reduce uses: a*x + b*s
+        out = accumulate(xs, lambda s, x: a * x + b * s)
+        return table.append_column("ewma", pa.array(list(out), pa.float64()))
+
+    return staged.groupBy(*key_cols).applyInArrow(smooth, out_schema)
 
 
 def rolling_zscore(
@@ -96,8 +94,6 @@ def rolling_zscore(
     Emits every row with ``z`` (NULL until the frame is full or when the
     window variance is zero) — filter ``abs(z) > t`` downstream for
     anomalies.  ``scale`` fixes the decimal resolution (100 = cents)."""
-    from ironbeam_spark.operators.windowing import to_epoch_us
-
     staged = df.withColumn("_us", to_epoch_us(df, ts_col)).drop(ts_col)
     order = [F.col("_us"), *[F.col(c) for c in tiebreak_cols]]
     w = (

@@ -8,10 +8,10 @@ checks — silently misses pairs unless the corpus is normalized first.
 (Standard Unicode algorithm, UAX #15 — public spec; no reference
 analogue.)
 
-Spark has no built-in normalizer, so this is an Arrow-batched
-``pandas_udf`` over ``unicodedata.normalize`` — the vectorized slow-path
-escape hatch, used because the semantics genuinely aren't expressible in
-Catalyst.  Cross-engine exactness holds because CPython's unicodedata and
+Spark has no built-in normalizer, so this is an ``arrow_udf`` over
+``unicodedata.normalize`` — the Arrow-batched slow-path escape hatch, used
+because the semantics genuinely aren't expressible in Catalyst.
+Cross-engine exactness holds because CPython's unicodedata and
 DuckDB's ``nfc_normalize`` (utf8proc) implement the same stable canonical
 composition; the registry oracle pins it on constructed
 combining-sequence inputs.
@@ -23,9 +23,10 @@ UDFs).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 __all__ = ["unicode_normalize", "with_normalized"]
 
@@ -37,13 +38,12 @@ def unicode_normalize(col: Column | str, form: str = "NFC") -> Column:
     if form not in _FORMS:
         raise ValueError(f"unicode_normalize: form must be one of {_FORMS}")
 
-    @pandas_udf("string")
-    def _norm(s):
+    @arrow_udf("string")
+    def _norm(s: pa.Array) -> pa.Array:
         import unicodedata
 
-        return s.map(
-            lambda x: unicodedata.normalize(form, x) if x is not None else None
-        )
+        norm = [None if x is None else unicodedata.normalize(form, x) for x in s.to_pylist()]
+        return pa.array(norm, pa.string())
 
     return _norm(F.col(col) if isinstance(col, str) else col)
 

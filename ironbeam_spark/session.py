@@ -11,7 +11,7 @@ deterministic, scale-safe, and oracle-comparable:
   ``src/planner.rs:1155``).
 - **UTC session timezone** so timestamp arithmetic matches the DuckDB oracle
   bit-for-bit.
-- **Arrow enabled** so the Pandas-UDF slow path is at least Arrow-batched.
+- **Arrow enabled** so ``toPandas`` and pandas ``createDataFrame`` use Arrow.
 - **Bloom runtime filters on** — the Spark-native analogue of the
   reference's Bloom semi-join pre-filter (``src/bloom_filter.rs``).
 """

@@ -13,8 +13,8 @@ planner, which is the operation that matters at 100 TB: skipping whole
 objects, not row groups.)
 
 Index build is DISTRIBUTED: one pass with ``input_file_name()`` +
-``mapInPandas`` builds each file's bit array from the rows of that file
-(Arrow-batched md5 double-hashing), then per-file fragments OR together
+``mapInArrow`` builds each file's bit array from the rows of that file
+(md5 double-hashing over Arrow batches), then per-file fragments OR together
 in a tiny driver-side reduce (``n_files × m/8`` bytes — metadata-sized,
 the same class as a file listing).  The sidecar is a plain JSON file next
 to the data: engine-neutral, versioned, hash-scheme-pinned.
@@ -82,11 +82,9 @@ def build_bloom_index(
     ``df_path``; returns the sidecar path."""
     raw = spark.read.parquet(df_path)
     # canonicalize to STRING on the JVM side (fingerprint's cross-engine
-    # cast contract; rejects floats/binary).  Casting before mapInPandas
-    # also sidesteps pandas' nullable-int64 -> float64 coercion: a batch
-    # with one NULL would otherwise deliver 777 as 777.0, whose hash never
-    # matches the probe's '777' — a false NEGATIVE, the one failure the
-    # format forbids
+    # cast contract; rejects floats/binary), so the build hashes exactly
+    # the string the probe's _canon forms — any other spelling of 777
+    # would be a false NEGATIVE, the one failure the format forbids
     from ironbeam_spark.operators.fingerprint import _canon as _canon_expr
 
     df = raw.select(
@@ -95,22 +93,23 @@ def build_bloom_index(
     )
 
     def per_batch(batches):
-        import pandas as pd
+        import pyarrow as pa
 
         acc: dict[str, bytearray] = {}
-        for pdf in batches:
-            for fname, v in zip(pdf["_file"], pdf["_v"]):
+        for rb in batches:
+            for fname, v in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist()):
                 if v is None:
                     continue
                 bits = acc.setdefault(fname, bytearray(m_bits // 8))
                 for h in _hashes(v, m_bits, k):
                     bits[h >> 3] |= 1 << (h & 7)
-        yield pd.DataFrame(
-            [(f, bytes(b)) for f, b in acc.items()],
-            columns=["file", "bits"],
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(list(acc), pa.string()),
+             pa.array([bytes(b) for b in acc.values()], pa.binary())],
+            names=["file", "bits"],
         )
 
-    frags = df.mapInPandas(per_batch, "file string, bits binary").collect()
+    frags = df.mapInArrow(per_batch, "file string, bits binary").collect()
     merged: dict[str, bytearray] = {}
     for r in frags:  # tiny: n_files x (m/8) bytes of metadata
         b = merged.setdefault(r["file"], bytearray(m_bits // 8))

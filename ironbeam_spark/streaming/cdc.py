@@ -20,6 +20,10 @@ the key's winner changed; downstream sinks keyed on ``key`` converge to
 the batch snapshot.  ``_deleted`` is surfaced as a column (not an absent
 row) because streaming sinks need the retraction signal — a batch consumer
 filters ``NOT _deleted``.
+
+Why pandas: the kernel stays on ``applyInPandasWithState`` because Spark
+4.1.2's Arrow-native stateful API (``transformWithState``) imports
+``google.protobuf``, which is not installed.
 """
 
 from __future__ import annotations

@@ -15,6 +15,10 @@ cluster), partitioned by the grouping key — the same hash-partitioning story
 as a batch groupBy.  Arrow batches bound memory per call.  Both functions are
 top-level module functions so cloudpickle ships them by reference and the
 session factory's addPyFile zip resolves them on executors.
+
+Why pandas: these kernels (and ``cdc.stream_apply_changes``) stay on
+``applyInPandasWithState`` because Spark 4.1.2's Arrow-native stateful API
+(``transformWithState``) imports ``google.protobuf``, which is not installed.
 """
 
 from __future__ import annotations

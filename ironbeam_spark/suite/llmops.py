@@ -1390,7 +1390,7 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
            md5(nfc_normalize(raw)) AS norm_md5
     FROM r ORDER BY doc_id
     """,
-    doc="NFC unicode normalization (operators/unicode_norm — UAX #15 canonical composition, the pass exact-match dedup/contamination needs first): Arrow-batched pandas_udf over unicodedata (no Catalyst normalizer exists; stateless row-local map, no shuffle, pipelined with the scan); oracle constructs decomposed combining sequences and pins CPython/utf8proc agreement (north-star text hygiene)",
+    doc="NFC unicode normalization (operators/unicode_norm — UAX #15 canonical composition, the pass exact-match dedup/contamination needs first): arrow_udf over unicodedata (no Catalyst normalizer exists; stateless row-local map, no shuffle, pipelined with the scan); oracle constructs decomposed combining sequences and pins CPython/utf8proc agreement (north-star text hygiene)",
 )
 def q_unicode_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ironbeam_spark.operators.unicode_norm import unicode_normalize

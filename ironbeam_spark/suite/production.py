@@ -591,7 +591,7 @@ def q_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents WHERE doc_id < 200
     ORDER BY doc_id
     """,
-    doc="WebDataset-style tar-shard ingestion (the de-facto layout for large multimodal training corpora): one shard per partition with atomic commit, stdlib-tar member walk via Arrow-batched mapInPandas, sample regrouping into a field->payload map; per-sample byte/field stats verified against the source table (sources/tar.py; north-star sources)",
+    doc="WebDataset-style tar-shard ingestion (the de-facto layout for large multimodal training corpora): one shard per partition with atomic commit, stdlib-tar member walk in the shared shard source (sources/shards.shard_source, one mapInArrow), sample regrouping into a field->payload map; per-sample byte/field stats verified against the source table (sources/tar.py; north-star sources)",
 )
 def q_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile

@@ -39,7 +39,7 @@ def query(name: str, oracle: str | None, bench: bool = False, doc: str = ""):
     def deco(fn: QueryFn) -> QueryFn:
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the harness may hand us a bare SparkSession (not from
-            # get_spark): ship the package zip so pandas-UDF closures
+            # get_spark): ship the package zip so Python-map closures
             # resolve on executor workers regardless of driver cwd
             from ironbeam_spark.session import _ship_package
 

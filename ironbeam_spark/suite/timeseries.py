@@ -133,7 +133,7 @@ def q_ts_motif(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ewma",
     # the oracle replays the recurrence as a per-prefix list_reduce fold —
-    # O(n^2) in SQL but exact; the engine's applyInPandas loop is the O(n)
+    # O(n^2) in SQL but exact; the engine's applyInArrow loop is the O(n)
     # scale path with the identical a*x + (1-a)*s association
     """
     WITH e AS (SELECT user_id, epoch_us(ts) AS us, event_id, value
@@ -150,7 +150,7 @@ def q_ts_motif(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT user_id, us, event_id, value, ewma
     FROM x ORDER BY user_id, us, event_id
     """,
-    doc="per-user EWMA of event values, alpha=0.25 (operators/smoothing.ewma_per_key): the inherently-sequential recurrence s_i = a*x_i + (1-a)*s_(i-1) as an Arrow-batched applyInPandas — ONE entity-keyed shuffle, linear work, the blessed custom-stateful path used only because no built-in expresses a recurrence; association pinned so numpy/JVM/DuckDB doubles agree bit for bit (reference has tumble windows only, src/operators/windowing.rs)",
+    doc="per-user EWMA of event values, alpha=0.25 (operators/smoothing.ewma_per_key): the inherently-sequential recurrence s_i = a*x_i + (1-a)*s_(i-1) as a per-group applyInArrow (stable Arrow sort on (us, event_id)) — ONE entity-keyed shuffle, linear work, the blessed custom-stateful path used only because no built-in expresses a recurrence; association pinned so Python/JVM/DuckDB doubles agree bit for bit (reference has tumble windows only, src/operators/windowing.rs)",
 )
 def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ironbeam_spark.operators.smoothing import ewma_per_key

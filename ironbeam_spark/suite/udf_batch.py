@@ -27,24 +27,25 @@ from ironbeam_spark.suite.registry import _t, query
     WHERE l_quantity >= 30
     ORDER BY l_orderkey, l_linenumber
     """,
-    doc="map_batches via mapInPandas: Arrow batch in, vectorized numpy compute, batch out (ref map_batches, src/helpers/batches.rs:64)",
+    doc="map_batches via mapInArrow: Arrow RecordBatch in, vectorized numpy compute, batch out with the key columns passed through as their input arrays (ref map_batches, src/helpers/batches.rs:64)",
 )
 def q_map_batches_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= 30)
 
     def batch_fn(batches):
         import numpy as np
+        import pyarrow as pa
 
-        for pdf in batches:
+        for rb in batches:
             # exact cents: floor(x+0.5) == round-half-up for positive values,
             # matching Spark/DuckDB round() on exact-cent doubles
-            price_c = np.floor(pdf["l_extendedprice"].to_numpy() * 100 + 0.5).astype("int64")
-            disc_c = np.floor(pdf["l_discount"].to_numpy() * 100 + 0.5).astype("int64")
-            out = pdf[["l_orderkey", "l_linenumber"]].copy()
-            out["disc_price"] = price_c * (100 - disc_c) / 10000.0
-            yield out
+            price_c = np.floor(rb.column("l_extendedprice").to_numpy() * 100 + 0.5).astype("int64")
+            disc_c = np.floor(rb.column("l_discount").to_numpy() * 100 + 0.5).astype("int64")
+            disc_price = pa.array(price_c * (100 - disc_c) / 10000.0)
+            keys = rb.select(["l_orderkey", "l_linenumber"])
+            yield keys.append_column("disc_price", disc_price)
 
-    out = li.map_batches_pandas(
+    out = li.map_batches(
         batch_fn, "l_orderkey long, l_linenumber int, disc_price double"
     )
     return out.df.orderBy("l_orderkey", "l_linenumber")

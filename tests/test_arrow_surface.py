@@ -1,4 +1,5 @@
-"""Registry-wide Arrow-surface VALUE sweep as a gated pytest.
+"""The Arrow surface: the registry-wide VALUE sweep as a gated pytest, and
+a guard that every Python map of the engine crosses on Arrow.
 
 ``tools/arrow_check.py`` closed the last known local blind spot (both
 engines fetched AS ARROW TABLES and compared dtype-sensitively — the
@@ -12,11 +13,17 @@ It is parametrized per query so a failure names the exact query, and
 env-gated because the full registry takes several minutes at sf0.001 —
 the per-round verification routine (``.claude/skills/verify/SKILL.md``)
 runs it once before shipping; the default fast suite skips it.
+
+The guard (:func:`test_python_maps_cross_on_arrow`) is not gated: it scans
+the package source for pandas round trips, so a new one fails the fast
+suite.
 """
 
 from __future__ import annotations
 
+import ast
 import os
+from pathlib import Path
 
 import pytest
 
@@ -29,7 +36,7 @@ _GATE = os.environ.get("IRONBEAM_ARROW_SWEEP", "").strip().lower() not in (
     "no",
 )
 
-pytestmark = pytest.mark.skipif(
+_sweep_gate = pytest.mark.skipif(
     not _GATE,
     reason="registry-wide Arrow value sweep (~minutes): set "
     "IRONBEAM_ARROW_SWEEP=1 — run once per round before shipping",
@@ -57,6 +64,7 @@ def duck_smoke():
     yield con
 
 
+@_sweep_gate
 @pytest.mark.parametrize("name", _query_names())
 def test_arrow_surface_value_match(name, spark, duck_smoke):
     from ironbeam_spark.suite import QUERIES
@@ -73,6 +81,34 @@ def test_arrow_surface_value_match(name, spark, duck_smoke):
     if sn != dn:
         diffs = [(a, b) for a, b in zip(sn, dn) if a != b][:2]
         pytest.fail(f"Arrow-surface value mismatch: {diffs}")
+
+
+_PKG = Path(__file__).resolve().parent.parent / "ironbeam_spark"
+
+
+def test_python_maps_cross_on_arrow():
+    """No stateless pandas map is left, and ``applyInPandasWithState`` is
+    called only by the three stateful streaming kernels (Spark's Arrow
+    stateful API needs ``google.protobuf``, which is not installed)."""
+    stateful = []
+    for path in sorted(_PKG.rglob("*.py")):
+        src = path.read_text()
+        rel = path.relative_to(_PKG).as_posix()
+        for name in ("mapInPandas(", "applyInPandas(", "pandas_udf"):
+            assert name not in src, f"{rel} uses {name}"
+        # every use, named by its top-level definition (None at module level)
+        for top in ast.parse(src).body:
+            stateful += [
+                (rel, getattr(top, "name", None))
+                for node in ast.walk(top)
+                if isinstance(node, ast.Attribute)
+                and node.attr == "applyInPandasWithState"
+            ]
+    assert sorted(stateful) == [
+        ("streaming/cdc.py", "stream_apply_changes"),
+        ("streaming/stateful.py", "stream_dedup_first"),
+        ("streaming/stateful.py", "stream_running_count"),
+    ]
 
 
 @pytest.fixture(scope="module", autouse=True)

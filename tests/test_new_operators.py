@@ -302,15 +302,78 @@ def test_map_values_batches_arity_preserving(spark):
         spark, [("a", 1), ("a", 2), ("b", 5)], "k string, v long"
     ).key_by("k")
 
-    def double(pdf):
-        out = pdf.copy()
-        out["v"] = out["v"] * 2
-        return out
+    def double(table):
+        from pyarrow.compute import multiply
+
+        i = table.schema.get_field_index("v")
+        return table.set_column(i, "v", multiply(table.column("v"), 2))
 
     got = sorted(
         tuple(r) for r in pc.map_values_batches(double, "k string, v long").collect()
     )
     assert got == [("a", 2), ("a", 4), ("b", 10)]
+
+
+def test_map_values_batches_rejects_row_count_change(spark):
+    """The arity promise is checked, not trusted: a group whose fn drops a
+    row fails with both row counts named."""
+    from ironbeam_spark.collection import from_vec
+
+    pc = from_vec(
+        spark, [("a", 1), ("a", 2), ("b", 5)], "k string, v long"
+    ).key_by("k")
+    with pytest.raises(Exception, match="returned 1 rows for a group of 2"):
+        pc.map_values_batches(lambda t: t.slice(0, 1), "k string, v long").collect()
+
+
+_BIG = [2**53 + 1, None, 2**53 + 3]  # not representable as float64
+
+
+def _big_batch_by_size(spark):
+    from ironbeam_spark.collection import from_vec
+
+    pc = from_vec(spark, [(x, 1) for x in _BIG], "x long, sz long").reshuffle(1)
+    return [e.x for r in pc.batch_by_size(100, "sz").collect() for e in r.batch]
+
+
+def _big_map_values_batches(spark):
+    from ironbeam_spark.collection import from_vec
+
+    pc = from_vec(spark, [("a", x) for x in _BIG], "k string, x long").key_by("k")
+    return [r.x for r in pc.map_values_batches(lambda t: t, "k string, x long").collect()]
+
+
+def _big_ewma_per_key(spark):
+    from ironbeam_spark.operators.smoothing import ewma_per_key
+
+    df = spark.createDataFrame(
+        [(1, i * 1000, i, 1.0, x) for i, x in enumerate(_BIG)],
+        "key long, ts long, seq long, value double, x long",
+    )
+    out = ewma_per_key(df, ["key"], "ts", "value", 0.5, tiebreak_cols=["seq"])
+    return [r.x for r in out.collect()]
+
+
+def _big_bpe_segment(spark):
+    from ironbeam_spark.operators.bpe import bpe_segment
+
+    df = spark.createDataFrame(
+        [(x, "ab") for x in _BIG], "id long, text string"
+    ).coalesce(1)  # one batch, so the NULL sits beside the big ints
+    return [r.id for r in bpe_segment(df, "id", "text", []).collect()]
+
+
+@pytest.mark.parametrize(
+    "run",
+    [_big_batch_by_size, _big_map_values_batches, _big_ewma_per_key, _big_bpe_segment],
+    ids=["batch_by_size", "map_values_batches", "ewma_per_key", "bpe_segment"],
+)
+def test_pass_through_bigint_is_exact(spark, run):
+    """A nullable bigint column passed through a Python batch map comes back
+    as the exact ints (a float64 detour would round both above 2**53)."""
+    from collections import Counter
+
+    assert Counter(run(spark)) == Counter(_BIG)
 
 
 def test_batch_by_size_greedy(spark):
@@ -432,20 +495,21 @@ def test_kv_swap_and_constant_key(spark):
 
 
 def test_map_batches_arrow_recordbatch(spark):
-    """mapInArrow custom physical op (ref apply_transform/DynOp,
-    src/collection.rs:151): RecordBatch in, RecordBatch out, no pandas."""
+    """map_batches on mapInArrow (ref map_batches, src/helpers/batches.rs:64):
+    RecordBatch in, RecordBatch out, no pandas."""
     from ironbeam_spark.collection import from_vec
 
     pc = from_vec(spark, [(i,) for i in range(10)], "x long")
 
     def double(batches):
         import pyarrow as pa
+        from pyarrow.compute import multiply
 
         for b in batches:
-            arr = pa.compute.multiply(b.column("x"), 2)
+            arr = multiply(b.column("x"), 2)
             yield pa.RecordBatch.from_arrays([arr], names=["x"])
 
-    got = sorted(r.x for r in pc.map_batches_arrow(double, "x long").collect())
+    got = sorted(r.x for r in pc.map_batches(double, "x long").collect())
     assert got == [i * 2 for i in range(10)]
 
 

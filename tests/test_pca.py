@@ -86,3 +86,13 @@ def test_dim_mismatch_and_tiny_input_rejected(spark):
     rows = scaled_gram(_df(spark, np.zeros((1, DIM))), "vec", DIM).collect()
     with pytest.raises(ValueError):
         pca_fit(rows, DIM, 2)
+
+
+def test_project_passes_string_ids_through(spark):
+    """The id column keeps its input type: string ids come back as-is."""
+    df = spark.createDataFrame(
+        [("a", [1.0, 0.0]), ("b", [0.0, 2.0])], "doc string, vec array<double>"
+    )
+    swap = np.array([[0.0, 1.0], [1.0, 0.0]])
+    got = {r["id"]: r["proj"] for r in pca_project(df, "vec", swap, "doc").collect()}
+    assert got == {"a": [0.0, 1.0], "b": [2.0, 0.0]}
