@@ -254,7 +254,7 @@ def main() -> None:
     # lesson: q_token_packing led the list and its cold number tripled).
     t0 = time.perf_counter()
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    spark.createDataFrame([(1,)], "a int").mapInPandas(
+    spark.createDataFrame([(1,)], "a int").mapInArrow(
         lambda it: it, "a int"
     ).count()
     print(f"# session bring-up: {time.perf_counter() - t0:.3f}s", file=sys.stderr)

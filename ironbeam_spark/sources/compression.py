@@ -97,6 +97,17 @@ def codec_for(name_or_path: str) -> Codec | None:
     return None
 
 
+# the one CSV write dialect of both write paths (``write_csv`` and
+# :func:`write_csv_compressed`): Spark's defaults keep milliseconds only
+# and trim leading/trailing whitespace, so neither would read back exact
+CSV_OPTIONS = {
+    "timestampFormat": "yyyy-MM-dd HH:mm:ss.SSSSSS",
+    "timestampNTZFormat": "yyyy-MM-dd HH:mm:ss.SSSSSS",
+    "ignoreLeadingWhiteSpace": "false",
+    "ignoreTrailingWhiteSpace": "false",
+}
+
+
 register_codec("gzip", "gz", _gzip.compress, _gzip.decompress)
 register_codec("bz2", "bz2", _bz2.compress, _bz2.decompress)
 register_codec("xz", "xz", _lzma.compress, _lzma.decompress)
@@ -157,24 +168,28 @@ def read_lines(spark: SparkSession, path: str, codec: str | None = None) -> Data
     return shard_source(spark, path, c.extension, _line_decoder(c), "value string")
 
 
-def _codec_sink(df: DataFrame, path: str, codec: str, mode: str, render) -> int:
-    """Compressed text through the shared shard protocol
-    (:mod:`ironbeam_spark.sources.shards`): ``render(batches, buf) -> n``
-    writes a partition's Arrow batches as text into ``buf``, which is
-    compressed executor-side into one ``part-NNNNN.<ext>``.  Returns the
+def _codec_sink(df: DataFrame, path: str, codec: str, mode: str, head: str = "") -> int:
+    """The lines of ``df``'s one string column through the shared shard
+    protocol (:mod:`ironbeam_spark.sources.shards`): each partition's
+    text, after ``head``, is compressed executor-side into one
+    ``part-NNNNN.<ext>``; a NULL line is written empty.  Returns the
     number of shards written.
 
     ``overwrite`` removes shards of EVERY registered codec extension, not
     just the current one — readers decode every file in the directory with
     one codec, so a leftover shard from a previous codec (or a hand-copied
     ``data.gz``) would silently poison later reads."""
-    c = codec_for(codec)
-    if c is None:
-        raise ValueError(f"unknown codec {codec!r}; registered: {sorted(_REGISTRY)}")
+    c = _resolve(path, codec)
 
     def encode(batches, fh) -> int:
         buf = io.StringIO()
-        n = render(batches, buf)
+        buf.write(head)
+        n = 0
+        for batch in batches:
+            for line in batch.column(0).to_pylist():
+                buf.write("" if line is None else str(line))
+                buf.write("\n")
+                n += 1
         fh.write(c.compress(buf.getvalue().encode("utf-8")))
         return n
 
@@ -190,17 +205,7 @@ def write_lines(
     string column.  Returns the number of shards written."""
     if len(df.columns) != 1:
         raise ValueError(f"write_lines wants a single-column frame, got {df.columns}")
-
-    def render(batches, buf) -> int:
-        n = 0
-        for batch in batches:
-            for line in batch.column(0).to_pylist():
-                buf.write("" if line is None else str(line))
-                buf.write("\n")
-                n += 1
-        return n
-
-    return _codec_sink(df, path, codec, mode, render)
+    return _codec_sink(df, path, codec, mode)
 
 
 def read_jsonl_compressed(
@@ -258,12 +263,7 @@ def read_csv_compressed(
         "value string, header string" if keep else "value string",
     )
     if schema is not None:
-        if hasattr(schema, "fields"):  # StructType -> "name type, ..." DDL
-            ddl = ", ".join(
-                f"{f.name} {f.dataType.simpleString()}" for f in schema.fields
-            )
-        else:
-            ddl = schema
+        ddl = schema.toDDL() if hasattr(schema, "toDDL") else schema
         return lines.select(F.from_csv("value", ddl).alias("c")).select("c.*")
     # inference path needs the decoded lines THREE times (header probe,
     # inference scan, final parse) — persist so non-splittable shards
@@ -279,37 +279,27 @@ def read_csv_compressed(
     return spark.read.option("header", "false").option("inferSchema", "true").csv(rdd)
 
 
+def _csv_field(name: str) -> str:
+    """A header field as ``to_csv`` writes a value: quoted when it holds a
+    delimiter, a quote or a line break, backslash-escaping ``\\`` and ``"``."""
+    if not any(ch in name for ch in ',"\r\n'):
+        return name
+    return '"' + name.replace("\\", "\\\\").replace('"', '\\"') + '"'
+
+
 def write_csv_compressed(
     df: DataFrame, path: str, codec: str, header: bool = True, mode: str = "overwrite"
 ) -> int:
-    """CSV lines built per-partition with pandas ``to_csv`` (proper quoting)
-    then compressed shard-parallel; each shard carries the header so shards
-    stay independently readable (Spark's own csv writer contract)."""
-    want_header = header
+    """CSV lines rendered JVM-side by ``to_csv`` in :data:`CSV_OPTIONS`
+    (the dialect of the native ``write_csv``), then compressed
+    shard-parallel; each shard carries the header, rendered on the driver
+    in the same dialect, so shards stay independently readable (Spark's
+    own csv writer contract).
 
-    def render(batches, buf) -> int:
-        import pandas as pd
-
-        n = 0
-        first = True
-        for batch in batches:
-            # the batch as mapInPandas hands it over: dates as
-            # datetime.date, timestamps as naive session-zone wall clock
-            pdf = batch.to_pandas(date_as_object=True, coerce_temporal_nanoseconds=True)
-            for c in pdf.columns:
-                if isinstance(pdf[c].dtype, pd.DatetimeTZDtype):
-                    pdf[c] = pdf[c].dt.tz_localize(None)
-            # Spark's CSV parser defaults to backslash-escaped quotes;
-            # pandas defaults to RFC doubled quotes — write Spark's dialect
-            pdf.to_csv(
-                buf,
-                index=False,
-                header=want_header and first,
-                doublequote=False,
-                escapechar="\\",
-            )
-            first = False
-            n += len(pdf)
-        return n
-
-    return _codec_sink(df, path, codec, mode, render)
+    A row whose only column is NULL is written ``""``, like an empty
+    string (``to_csv`` itself fails on that row)."""
+    line = F.to_csv(F.struct(*df.columns), CSV_OPTIONS)
+    if len(df.columns) == 1:
+        line = F.when(F.col(df.columns[0]).isNull(), F.lit('""')).otherwise(line)
+    head = ",".join(_csv_field(c) for c in df.columns) + "\n" if header else ""
+    return _codec_sink(df.select(line.alias("value")), path, codec, mode, head)

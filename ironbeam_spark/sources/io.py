@@ -119,13 +119,16 @@ def write_csv(
     header: bool = True,
     compression: str | None = None,
 ) -> None:
+    """Both write paths, native and codec-registry, write one dialect
+    (:data:`~ironbeam_spark.sources.compression.CSV_OPTIONS`), which
+    :func:`read_csv` reads back exactly."""
+    from ironbeam_spark.sources.compression import CSV_OPTIONS, write_csv_compressed
+
     d = df.df if isinstance(df, PCollection) else df
     if compression and _registry_codec(compression) is not None:
-        from ironbeam_spark.sources.compression import write_csv_compressed
-
         write_csv_compressed(d, path, compression, header=header, mode=mode)
         return
-    w = d.write.mode(mode).option("header", str(header).lower())
+    w = d.write.mode(mode).option("header", str(header).lower()).options(**CSV_OPTIONS)
     if compression:
         w = w.option("compression", compression)
     w.csv(path)

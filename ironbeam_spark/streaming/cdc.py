@@ -21,9 +21,13 @@ the batch snapshot.  ``_deleted`` is surfaced as a column (not an absent
 row) because streaming sinks need the retraction signal — a batch consumer
 filters ``NOT _deleted``.
 
-Why pandas: the kernel stays on ``applyInPandasWithState`` because Spark
-4.1.2's Arrow-native stateful API (``transformWithState``) imports
-``google.protobuf``, which is not installed.
+Why pandas: Spark has no native operator for this rule.  A native
+update-mode ``max(struct(us, *ties, deleted, *vals))`` per key re-emits the
+unchanged winner for every batch that touches the key, a late, older row
+included, and keeps the whole winning row as state.  Spark 4.1.2's
+Arrow-native ``transformWithState`` needs ``google.protobuf``, which is not
+installed.  ``stateful._exact_bigints`` keeps the kernel's top-level bigints
+exact; nested ones are not covered.
 """
 
 from __future__ import annotations
@@ -32,6 +36,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ironbeam_spark.streaming.stateful import _exact_bigints
 
 __all__ = ["stream_apply_changes"]
 
@@ -57,21 +63,12 @@ def stream_apply_changes(
     ties = list(tiebreak_cols)
     dels = set(delete_ops)
 
-    def _ddl(cols):
-        return ", ".join(
-            f"{c} {sdf.schema[c].dataType.simpleString()}" for c in cols
-        )
-
     out_cols = [*keys, us_col, *ties, *vals]
-    out_ddl = f"{_ddl(out_cols)}, _deleted boolean"
-    # state: the winner's ordering position + payload as one JSON-free
-    # tuple; ordering position alone decides replacement
-    state_ddl = f"{_ddl([us_col])}, {_ddl(ties)}, deleted boolean" if ties else f"{_ddl([us_col])}, deleted boolean"
+    order_cols = [us_col, *ties]
 
     import pandas as pd
 
     def fn(key, pdfs, state: GroupState):
-        order_cols = [us_col, *ties]
         best = None  # (order_tuple of python scalars, row, is_delete)
         for pdf in pdfs:
             if len(pdf) == 0:
@@ -97,10 +94,18 @@ def stream_apply_changes(
         out["_deleted"] = bool(best[2])
         yield pd.DataFrame([out])
 
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_ddl,
-        stateStructType=state_ddl,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    def kernel(df: DataFrame) -> DataFrame:
+        def ddl(cols):
+            return ", ".join(f"{c} {df.schema[c].dataType.simpleString()}" for c in cols)
+
+        # state: the winner's ordering position + delete flag; the
+        # ordering position alone decides replacement
+        return df.groupBy(*keys).applyInPandasWithState(
+            fn,
+            outputStructType=f"{ddl(out_cols)}, _deleted boolean",
+            stateStructType=f"{ddl(order_cols)}, deleted boolean",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+
+    return _exact_bigints(sdf, keys, kernel)

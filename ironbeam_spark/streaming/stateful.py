@@ -1,6 +1,6 @@
-"""Custom stateful streaming operators via ``applyInPandasWithState``
-(north-star extension — the reference is batch-only and explicitly excludes
-stateful DoFn/timers, reference ``FEATURE_PARITY_PLAN.md:6-11``).
+"""Stateful streaming operators (north-star extension — the reference is
+batch-only and explicitly excludes stateful DoFn/timers, reference
+``FEATURE_PARITY_PLAN.md:6-11``).
 
 Two canonical LLM-pipeline shapes:
 
@@ -8,27 +8,51 @@ Two canonical LLM-pipeline shapes:
   deterministic winner (min by ``order_col``) the first time the key appears,
   drop every later occurrence — exact dedup over an unbounded stream.
 - **streaming running count**: per-key cumulative counts across micro-batches
-  (update-mode output).
+  (update-mode output), a native streaming aggregation.
 
 Scale notes: state lives in the state store (RocksDB-backed on a real
 cluster), partitioned by the grouping key — the same hash-partitioning story
-as a batch groupBy.  Arrow batches bound memory per call.  Both functions are
-top-level module functions so cloudpickle ships them by reference and the
-session factory's addPyFile zip resolves them on executors.
+as a batch groupBy.
 
-Why pandas: these kernels (and ``cdc.stream_apply_changes``) stay on
-``applyInPandasWithState`` because Spark 4.1.2's Arrow-native stateful API
-(``transformWithState``) imports ``google.protobuf``, which is not installed.
+Why pandas: no native operator keeps first-seen dedup's winner (the
+min-``order_col`` row of the key's first micro-batch), so that kernel, like
+``cdc.stream_apply_changes``, stays on ``applyInPandasWithState``: Spark
+4.1.2's Arrow-native ``transformWithState`` needs ``google.protobuf``, which
+is not installed.  Both kernels run through :func:`_exact_bigints`, since
+pandas holds a bigint column with a NULL as float64.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable, Sequence
+
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import LongType
 
 from ironbeam_spark.session import scoped_conf
 
 __all__ = ["stream_dedup_first", "stream_running_count"]
+
+
+def _exact_bigints(
+    sdf: DataFrame, key_cols: Sequence[str], kernel: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """Run a pandas state ``kernel`` with its bigints exact: top-level
+    ``bigint`` non-key columns are cast to ``decimal(20,0)`` going in (pandas
+    holds them as exact ``Decimal`` objects, NULL as ``None``) and back to
+    ``bigint`` coming out.  The kernel derives its output and state schemas
+    from the frame it is given.  Key columns need no cast: a group holds one
+    key value.  Bigints nested in structs, arrays or maps are not covered."""
+    wide = [
+        f.name for f in sdf.schema.fields
+        if f.name not in key_cols and isinstance(f.dataType, LongType)
+    ]
+
+    def cast(df: DataFrame, to: str) -> DataFrame:
+        return df.withColumns({c: F.col(c).cast(to) for c in df.columns if c in wide})
+
+    return cast(kernel(cast(sdf, "decimal(20,0)")), "bigint")
 
 
 def stream_dedup_first(
@@ -37,7 +61,6 @@ def stream_dedup_first(
     """Exact streaming dedup: first-seen key wins (deterministically: the
     min-``order_col`` row within the key's first micro-batch), duplicates in
     all later batches are dropped via one boolean of per-key state."""
-    out_schema = sdf.schema
 
     def fn(key, pdfs, state: GroupState):
         import pandas as pd
@@ -56,46 +79,22 @@ def stream_dedup_first(
             state.update((True,))
             yield best
 
-    return sdf.groupBy(*key_cols).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="seen boolean",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    def kernel(df: DataFrame) -> DataFrame:
+        return df.groupBy(*key_cols).applyInPandasWithState(
+            fn,
+            outputStructType=df.schema,
+            stateStructType="seen boolean",
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
 
-
-def _key_ddl(sdf: DataFrame, key_cols: list[str]) -> str:
-    """Output-schema DDL for the grouping keys, derived from the input
-    schema — hardcoding ``string`` would mismatch non-string keys (e.g. a
-    bigint ``event_id``) and fail or silently cast at runtime."""
-    return ", ".join(
-        f"{c} {sdf.schema[c].dataType.simpleString()}" for c in key_cols
-    )
+    return _exact_bigints(sdf, key_cols, kernel)
 
 
 def stream_running_count(sdf: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Per-key cumulative count across micro-batches (update mode): emits one
-    row per key per batch with the running total."""
-    key_ddl = _key_ddl(sdf, key_cols)
-
-    def fn(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        n = state.get[0] if state.exists else 0
-        batch_n = sum(len(p) for p in pdfs)
-        if batch_n:
-            n += batch_n
-            state.update((n,))
-            yield pd.DataFrame([{**dict(zip([c for c in key_cols], key)), "running_n": n}])
-
-    return sdf.groupBy(*key_cols).applyInPandasWithState(
-        fn,
-        outputStructType=f"{key_ddl}, running_n long",
-        stateStructType="n long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    """Per-key cumulative count across micro-batches: in update mode, one
+    row per key touched by a batch, carrying its running total."""
+    return sdf.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("running_n"))
 
 
 # ---------------------------------------------------------------------------

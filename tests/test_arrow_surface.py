@@ -87,14 +87,15 @@ _PKG = Path(__file__).resolve().parent.parent / "ironbeam_spark"
 
 
 def test_python_maps_cross_on_arrow():
-    """No stateless pandas map is left, and ``applyInPandasWithState`` is
-    called only by the three stateful streaming kernels (Spark's Arrow
-    stateful API needs ``google.protobuf``, which is not installed)."""
+    """No pandas map or conversion is left, and ``applyInPandasWithState``
+    is called only by the two stateful streaming kernels with no native
+    operator (Spark's Arrow stateful API needs ``google.protobuf``, which
+    is not installed)."""
     stateful = []
     for path in sorted(_PKG.rglob("*.py")):
         src = path.read_text()
         rel = path.relative_to(_PKG).as_posix()
-        for name in ("mapInPandas(", "applyInPandas(", "pandas_udf"):
+        for name in ("mapInPandas(", "applyInPandas(", "pandas_udf", "to_pandas("):
             assert name not in src, f"{rel} uses {name}"
         # every use, named by its top-level definition (None at module level)
         for top in ast.parse(src).body:
@@ -107,7 +108,6 @@ def test_python_maps_cross_on_arrow():
     assert sorted(stateful) == [
         ("streaming/cdc.py", "stream_apply_changes"),
         ("streaming/stateful.py", "stream_dedup_first"),
-        ("streaming/stateful.py", "stream_running_count"),
     ]
 
 

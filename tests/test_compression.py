@@ -87,6 +87,19 @@ def test_csv_xz_inference(spark, tmp_path):
     assert sorted((r.a, r.b) for r in back.collect()) == [(1, "x"), (2, "y")]
 
 
+def test_csv_xz_nullable_bigint_is_exact(spark, tmp_path):
+    """A nullable bigint above 2**53 is written as an integer, so it reads
+    back exact and as bigint, with a schema and by inference (one partition:
+    the NULL and the big value share a batch)."""
+    out = str(tmp_path / "big.csv.xz")
+    df = spark.createDataFrame([(5,), (None,), (2**53 + 1,)], "a bigint").coalesce(1)
+    write_csv(df, out, compression="xz")
+    inferred = read_csv(spark, out).df
+    assert inferred.dtypes == [("a", "bigint")]
+    for back in (read_csv(spark, out, schema="a bigint").df, inferred):
+        assert [r.a for r in back.orderBy("a").collect()] == [None, 5, 2**53 + 1]
+
+
 def test_register_custom_codec_roundtrip(spark, tmp_path):
     # a toy reversible codec: xor every byte with 0x5A
     def enc(b: bytes) -> bytes:

@@ -66,6 +66,23 @@ def test_csv_roundtrip(spark, sample, tmp_path):
     assert _sorted(back) == _sorted(sample)
 
 
+def test_csv_roundtrip_keeps_microseconds_and_edge_spaces(spark, tmp_path):
+    """Both write_csv paths, native and codec registry, keep a timestamp's
+    microseconds (with and without time zone) and a string's leading and
+    trailing spaces."""
+    df = spark.createDataFrame([(" a b ",)], "s string").select(
+        "s",
+        F.to_timestamp(F.lit("2024-01-02 03:04:05.123456")).alias("ts"),
+        F.to_timestamp_ntz(F.lit("2024-01-02 03:04:05.123456")).alias("ntz"),
+    )
+    for compression, name in ((None, "t.csv"), ("xz", "t.csv.xz")):
+        p = str(tmp_path / name)
+        write_csv(df, p, compression=compression)
+        back = read_csv(spark, p, has_headers=True, schema=df.schema).df
+        assert _sorted(back) == _sorted(df), compression
+        assert read_csv(spark, p).df.first().ts == df.first().ts  # inference
+
+
 def test_glob_read(spark, sample, tmp_path):
     """Glob expansion is native in Spark paths (ref expand_glob, src/io/glob.rs:71)."""
     write_parquet(sample, str(tmp_path / "g1.parquet"))

@@ -10,6 +10,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window as W
 
 from ironbeam_spark.operators.cdc import apply_changes
+from ironbeam_spark.streaming import run_to_memory
 from ironbeam_spark.streaming.cdc import stream_apply_changes
 
 SCHEMA = "key long, us long, seq long, op string, val string"
@@ -95,3 +96,18 @@ def test_stream_converges_to_batch_apply(spark, tmp_path):
     batches = [rows[0:40], rows[40:80], rows[80:120]]
     snap, _ = _run_stream(spark, tmp_path, batches)
     assert snap == _batch_snap(spark, rows)
+
+
+def test_bigint_values_stay_exact(spark, tmp_path):
+    """A bigint value above 2**53 comes out exact when a NULL of the same
+    column shares its group (pandas would hold the column as float64); an
+    input bigint the output leaves out (``n``) is dropped as before."""
+    schema = "key long, us long, x long, n long"
+    rows = [(1, 1, 2**53 + 1, 0), (1, 0, None, 0), (2, 0, None, 0), (2, 1, 2**53 + 3, 0)]
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+    out = stream_apply_changes(spark.readStream.schema(schema).parquet(src), ["key"], "us", ["x"])
+    assert out.dtypes == [("key", "bigint"), ("us", "bigint"), ("x", "bigint"), ("_deleted", "boolean")]
+    run_to_memory(out, "t_cdc_exact", "update")
+    got = {r.key: (r.us, r.x, r._deleted) for r in spark.table("t_cdc_exact").collect()}
+    assert got == {1: (1, 2**53 + 1, False), 2: (1, 2**53 + 3, False)}

@@ -44,6 +44,20 @@ def test_stream_dedup_first_matches_batch_winner(spark):
     assert got == expected  # one winner per key, deterministic min-by
 
 
+def test_stream_dedup_first_keeps_bigints_exact(spark, tmp_path):
+    """A non-key bigint above 2**53 comes out exact when a NULL of the same
+    column shares its group (pandas would hold the column as float64)."""
+    schema = "k long, o long, x long"
+    rows = [(1, 0, 2**53 + 1), (1, 1, None), (2, 1, None), (2, 0, 2**53 + 3)]
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+    out = stream_dedup_first(spark.readStream.schema(schema).parquet(src), ["k"], "o")
+    assert out.dtypes == [("k", "bigint"), ("o", "bigint"), ("x", "bigint")]
+    run_to_memory(out, "t_stream_dedup_exact", "append")
+    got = {r.k: (r.o, r.x) for r in spark.table("t_stream_dedup_exact").collect()}
+    assert got == {1: (0, 2**53 + 1), 2: (0, 2**53 + 3)}
+
+
 def test_stream_running_count_single_batch(spark):
     sdf, static = _events_stream(spark)
     out = stream_running_count(

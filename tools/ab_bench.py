@@ -48,7 +48,7 @@ def main() -> int:
 
     # session bring-up outside the numbers, as in bench.py
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
-    spark.createDataFrame([(1,)], "a int").mapInPandas(lambda it: it, "a int").count()
+    spark.createDataFrame([(1,)], "a int").mapInArrow(lambda it: it, "a int").count()
 
     out: dict[str, float | None] = {}
     for name in names:
