@@ -11,8 +11,8 @@ The returned plan is lazy, so the code that built it cannot release it.
 When release happens: :func:`release_all_caches` unpersists and drops
 every held frame.  The process that runs a query calls it once the result
 is materialized (collected, counted or written): ``bench.py`` and
-``perfbench`` between queries, ``tools/check.py`` and
-``tools/arrow_check.py`` after each compare.  Results stay correct after
+``perfbench`` between queries, and ``tools/check.py`` after each
+compare.  Results stay correct after
 release because every consumer replays lineage
 (``tests/test_recompute.py``).
 
@@ -21,8 +21,8 @@ plans structurally, so an entry that outlives its query is reused by the
 next structurally equal plan — in this run or a later one in the same
 session.  That is a result cache across invocations, which
 ``plancache``'s contract forbids, and it pins executor storage the next
-query needs.  ``tests/test_oracle_dtypes.py`` asserts that every oracle
-query leaves CacheManager empty after release.  localCheckpoint blocks
+query needs.  ``tools/check.py`` fails a query that leaves CacheManager
+non-empty after release, so every registry query is checked for it.  localCheckpoint blocks
 are not in CacheManager (``unpersist`` is a no-op for them); they free
 once the last reference is garbage-collected, which dropping them here
 allows.

@@ -533,7 +533,7 @@ QUERIES["q_token_counts"].oracle = _tc_oracle()
     # NOTE the ::BIGINT on the window sum: DuckDB types sum(BIGINT) OVER as
     # HUGEINT, which its Arrow surface emits as decimal128(38,0) while Spark
     # emits int64 — a dtype-sensitive comparison then fails on TYPE with
-    # equal values (tests/test_oracle_dtypes.py lints the whole registry
+    # equal values (tools/check.py's dtype lint checks the whole registry
     # against this class).
     """
     SELECT o_orderkey, o_custkey AS v,

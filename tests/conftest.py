@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -14,6 +15,17 @@ from ironbeam_spark.session import get_spark  # noqa: E402
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
+# The registry-wide sweeps (every query on the Arrow surface, every query
+# under two shuffle widths) take several minutes at sf0.001, so the default
+# suite skips them; run them once before shipping:
+#     IRONBEAM_ARROW_SWEEP=1 python -m pytest tests/test_suite_oracle.py \
+#         tests/test_partition_invariance.py -q
+sweep_gate = pytest.mark.skipif(
+    os.environ.get("IRONBEAM_ARROW_SWEEP", "").strip().lower()
+    in ("", "0", "false", "no"),
+    reason="registry-wide sweep (~minutes): set IRONBEAM_ARROW_SWEEP=1",
+)
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -24,40 +36,6 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    import duckdb
+    from tools.check import oracle_connection
 
-    con = duckdb.connect()
-    from ironbeam_spark.sources.io import TPCH_TABLES
-
-    for t in TPCH_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_SMOKE}/{t}.parquet')"
-        )
-    yield con
-
-
-def assert_df_equals_oracle(df, duck_con, sql: str):
-    """Differential assertion: Spark DataFrame vs DuckDB SQL, order-insensitive,
-    exact values (pytest analogue of the reference's PAssert layer,
-    reference src/testing/assertions.rs:71-514)."""
-    rel = duck_con.execute(sql)
-    d_cols = [d[0] for d in rel.description]
-    d_rows = rel.fetchall()
-    s_cols = df.columns
-    s_rows = [tuple(r) for r in df.collect()]
-    assert sorted(s_cols) == sorted(d_cols), f"schema: {s_cols} vs {d_cols}"
-    assert len(s_rows) == len(d_rows), f"rowcount: {len(s_rows)} vs {len(d_rows)}"
-
-    def norm(rows, cols):
-        order = sorted(range(len(cols)), key=lambda i: cols[i])
-
-        def canon(v):
-            if isinstance(v, float):
-                return repr(v)
-            if isinstance(v, list):
-                return tuple(canon(x) for x in v)
-            return str(v)
-
-        return sorted(tuple(canon(r[i]) for i in order) for r in rows)
-
-    assert norm(s_rows, s_cols) == norm(d_rows, d_cols)
+    yield oracle_connection(SF_SMOKE)

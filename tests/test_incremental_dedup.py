@@ -15,12 +15,20 @@ from ironbeam_spark.operators.incremental import (
     minhash_index,
     minhash_index_admit,
 )
+from ironbeam_spark.session import scoped_conf
+from tests.conftest import SF_SMOKE
 
 # Long repeated-text docs so 3-word shingle Jaccard is 1.0 for exact copies
 # and ~0 for unrelated text.
 _A = "the quick brown fox jumps over the lazy dog again and again " * 5
 _B = "entirely different content about distributed query planning engines " * 5
 _C = "a third unrelated document concerning parquet footer statistics " * 5
+
+# sort-merge mode: the bucketed-layout tests need a shuffle join
+_NO_BROADCAST = {
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+}
 
 
 def _classify(spark, corpus_rows, batch_rows, threshold=0.5):
@@ -435,49 +443,36 @@ def test_bucketed_index_table_joins_without_index_side_exchange(spark):
     idx = minhash_index(corpus, "doc_id", "text")
     spark.sql("DROP TABLE IF EXISTS t_mh_idx_bucketed")
     write_minhash_index_table(idx, "t_mh_idx_bucketed", buckets=4)
-    prior = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-        )
-    }
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        out = minhash_dedup_incremental(
-            batch, spark.table("t_mh_idx_bucketed"), corpus, "doc_id", "text",
-            max_band_bucket=10_000,
-        )
-        got = {r.doc_id: r.status for r in out.collect()}
-        assert got == {10: "dup_of_corpus", 11: "unique"}
+        with scoped_conf(spark, _NO_BROADCAST):
+            out = minhash_dedup_incremental(
+                batch, spark.table("t_mh_idx_bucketed"), corpus, "doc_id", "text",
+                max_band_bucket=10_000,
+            )
+            got = {r.doc_id: r.status for r in out.collect()}
+            assert got == {10: "dup_of_corpus", 11: "unique"}
 
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        final = plan.split("== Initial Plan ==")[0]
-        assert "Bucketed: true" in final, final[:3000]
-        import re
-        n_bk_exchanges = len(
-            re.findall(r"Exchange hashpartitioning\(band_key", final)
-        )
-        assert n_bk_exchanges == 1, (
-            f"expected only the delta side to shuffle on band_key, found "
-            f"{n_bk_exchanges} exchanges:\n{final[:3000]}"
-        )
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            final = plan.split("== Initial Plan ==")[0]
+            assert "Bucketed: true" in final, final[:3000]
+            import re
+            n_bk_exchanges = len(
+                re.findall(r"Exchange hashpartitioning\(band_key", final)
+            )
+            assert n_bk_exchanges == 1, (
+                f"expected only the delta side to shuffle on band_key, found "
+                f"{n_bk_exchanges} exchanges:\n{final[:3000]}"
+            )
 
-        # identical classification via the plain (unbucketed) index
-        plain = {
-            r.doc_id: r.status
-            for r in minhash_dedup_incremental(
-                batch, idx, corpus, "doc_id", "text", max_band_bucket=10_000
-            ).collect()
-        }
-        assert plain == got
+            # identical classification via the plain (unbucketed) index
+            plain = {
+                r.doc_id: r.status
+                for r in minhash_dedup_incremental(
+                    batch, idx, corpus, "doc_id", "text", max_band_bucket=10_000
+                ).collect()
+            }
+            assert plain == got
     finally:
-        for k, v in prior.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
         spark.sql("DROP TABLE IF EXISTS t_mh_idx_bucketed")
 
 
@@ -503,49 +498,36 @@ def test_bucketed_index_also_serves_the_streaming_admission_join(spark, tmp_path
     idx = minhash_index(corpus, "doc_id", "text")
     spark.sql("DROP TABLE IF EXISTS t_mh_sidx")
     write_minhash_index_table(idx, "t_mh_sidx", buckets=4)
-    prior = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-        )
-    }
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        ver = minhash_verify_table(corpus, "doc_id", "text")
-        sdf = (
-            spark.readStream.schema(static.schema)
-            .option("pathGlobFilter", "documents.parquet")
-            .parquet("/root/testdata/sf0.001")
-            .where(F.col("doc_id") % 3 == 1)
-            .select("doc_id", "text")
-        )
-        matches = stream_dedup_against_index(
-            sdf, spark.table("t_mh_sidx"), ver, "doc_id", "text"
-        )
-        ckpt = str(tmp_path / "ckpt")
-        q = (
-            matches.writeStream.format("memory")
-            .queryName("t_mh_sidx_out")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        assert spark.table("t_mh_sidx_out").count() > 0
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            q.explain()
-        plan = buf.getvalue()
-        assert "Bucketed: true" in plan, plan[:3000]
-        n = len(re.findall(r"Exchange hashpartitioning\(band_key", plan))
-        assert n == 1, f"expected only the stream side to shuffle, got {n}:\n{plan[:3000]}"
+        with scoped_conf(spark, _NO_BROADCAST):
+            ver = minhash_verify_table(corpus, "doc_id", "text")
+            sdf = (
+                spark.readStream.schema(static.schema)
+                .option("pathGlobFilter", "documents.parquet")
+                .parquet(SF_SMOKE)
+                .where(F.col("doc_id") % 3 == 1)
+                .select("doc_id", "text")
+            )
+            matches = stream_dedup_against_index(
+                sdf, spark.table("t_mh_sidx"), ver, "doc_id", "text"
+            )
+            ckpt = str(tmp_path / "ckpt")
+            q = (
+                matches.writeStream.format("memory")
+                .queryName("t_mh_sidx_out")
+                .outputMode("complete")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            assert spark.table("t_mh_sidx_out").count() > 0
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                q.explain()
+            plan = buf.getvalue()
+            assert "Bucketed: true" in plan, plan[:3000]
+            n = len(re.findall(r"Exchange hashpartitioning\(band_key", plan))
+            assert n == 1, f"expected only the stream side to shuffle, got {n}:\n{plan[:3000]}"
     finally:
-        for k, v in prior.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
         spark.sql("DROP TABLE IF EXISTS t_mh_sidx")

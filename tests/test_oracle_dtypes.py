@@ -1,59 +1,25 @@
-"""Registry-wide oracle output-dtype lint (round-8 gate).
+"""Unit tests for the oracle output-dtype lint (``tools/oracle_dtypes.py``).
 
 Four rounds of ``q_prefix_scan``/``q_token_packing`` driver-red taught
 that value-equal results can still hash-mismatch on TYPE: DuckDB's
-Python ``fetchall()`` coerces HUGEINT to ``int`` (so the local value
-compare passes) while its Arrow surface types the same column
-``decimal128(38,0)`` where Spark emits ``int64``.  This test closes the
-class: every oracle's Arrow schema must canonically equal the Spark
-query's result schema, column by column (tools/oracle_dtypes.py).
-
-The Spark side needs only ``.schema`` and the DuckDB side a ``LIMIT 0``
-type-check, so the registry-wide sweep is cheap.  (Not strictly job-free:
-iterative queries run bounded setup jobs — a node ``count()``, eager
-policy checkpoints — during DataFrame CONSTRUCTION, and several hold
-frames through ``caches.hold``; each case releases them so the sweep's
-storage stays bounded by one query's working set, and asserts that the
-release left no CacheManager entry behind.)
+Python ``fetchall()`` coerces HUGEINT to ``int`` (so the rows compare
+passes) while its Arrow surface types the same column
+``decimal128(38,0)`` where Spark emits ``int64``.  The lint requires every
+oracle's Arrow schema to canonically equal the Spark result schema,
+column by column; ``tools/check.py`` runs it on every query, so
+``tests/test_suite_oracle.py`` applies it registry-wide.
 """
 
 from __future__ import annotations
 
 import duckdb
-import pytest
 
-from tests.conftest import SF_SMOKE
 from tools.oracle_dtypes import (
     arrow_canon,
     dtype_mismatches,
     oracle_arrow_schema,
     spark_canon,
 )
-
-from ironbeam_spark.suite import QUERIES
-
-
-def _oracle_names():
-    return [n for n, q in QUERIES.items() if q.oracle is not None]
-
-
-@pytest.mark.parametrize("name", _oracle_names())
-def test_oracle_dtypes_match_spark(name, spark, duck):
-    from ironbeam_spark.caches import release_all_caches
-
-    cache_manager = spark._jsparkSession.sharedState().cacheManager()
-    spark.catalog.clearCache()  # entries left by other tests are not this query's
-    q = QUERIES[name]
-    try:
-        sschema = q.fn(spark, SF_SMOKE).schema
-        mm = dtype_mismatches(sschema, oracle_arrow_schema(duck, q.oracle))
-        assert not mm, f"{name}: oracle output dtype drift: {mm}"
-    finally:
-        release_all_caches()
-    # a persist that caches.hold does not own outlives its query, and since
-    # CacheManager matches plans structurally, the next run of the same
-    # query would reuse its result
-    assert cache_manager.isEmpty(), f"{name}: CacheManager entry left after release"
 
 
 def test_lint_fires_on_uncast_hugeint(spark, duck):

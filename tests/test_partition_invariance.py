@@ -10,17 +10,19 @@ with a potential partitioning dependence: the two-level bucketed scan and
 its dependents (prefix scan / packing / sharding), iterative graph
 algebra (pagerank, triangles), banded minhash + connected components,
 order-statistics sketches (KMV), seeded sampling (priority reservoir,
-weighted systematic), and a partial+final TPC-H aggregate.
+weighted systematic), and a partial+final TPC-H aggregate.  Under
+``IRONBEAM_ARROW_SWEEP=1`` the same compare runs over the whole registry.
+Each run goes through ``tools/check.py``'s runner, so the two widths are
+two conf variants of one query and ``diff`` compares them.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_SMOKE
-from tools.check import normalize
+from tests.conftest import SF_SMOKE, sweep_gate
+from tools.check import diff, run_query
 
-from ironbeam_spark.caches import release_all_caches
 from ironbeam_spark.suite import QUERIES
 
 REPRESENTATIVES = [
@@ -123,20 +125,26 @@ def test_headline_set_is_fully_covered(spark):
     assert bench <= set(REPRESENTATIVES), sorted(bench - set(REPRESENTATIVES))
 
 
-def _canon(df):
-    return normalize([tuple(r) for r in df.collect()], df.columns)
+def _assert_invariant(spark, name):
+    """Run the query at 1 and at 7 shuffle partitions; the two canonical
+    results must be equal and neither run may leave state behind."""
+    results, msgs = [], []
+    for n in ("1", "7"):
+        _, result, left = run_query(
+            spark, SF_SMOKE, name, conf={"spark.sql.shuffle.partitions": n}
+        )
+        results.append(result)
+        msgs += left
+    msgs += diff(*results, labels=("1 partition", "7 partitions"))
+    assert not msgs, f"{name}: " + "; ".join(msgs[:6])
 
 
 @pytest.mark.parametrize("name", REPRESENTATIVES)
 def test_query_invariant_under_shuffle_parallelism(name, spark):
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "1")
-        seq = _canon(QUERIES[name].fn(spark, SF_SMOKE))
-        release_all_caches()
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        par = _canon(QUERIES[name].fn(spark, SF_SMOKE))
-        release_all_caches()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    assert seq == par, f"{name}: results depend on shuffle partitioning"
+    _assert_invariant(spark, name)
+
+
+@sweep_gate
+@pytest.mark.parametrize("name", list(QUERIES))
+def test_registry_invariant_under_shuffle_parallelism(name, spark):
+    _assert_invariant(spark, name)

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from ironbeam_spark.plans.explain import plan_report
+from ironbeam_spark.session import scoped_conf
 from ironbeam_spark.suite import QUERIES
 from tests.conftest import SF_SMOKE
 
@@ -101,10 +102,7 @@ def test_runtime_bloom_filter_injected_on_shuffle_join(spark):
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
     }
-    saved = {k: spark.conf.get(k, None) for k in tuned}
-    try:
-        for k, v in tuned.items():
-            spark.conf.set(k, v)
+    with scoped_conf(spark, tuned):
         orders = read_table(spark, SF_SMOKE, "orders").where(
             F.col("o_orderpriority") == "1-URGENT"
         )
@@ -116,12 +114,6 @@ def test_runtime_bloom_filter_injected_on_shuffle_join(spark):
         )
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "might_contain" in plan, plan[:2000]
-    finally:
-        for k, old in saved.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
 
 
 def test_asof_join_single_exchange_no_nested_loop(spark):
@@ -275,16 +267,13 @@ def test_minhash_guard_band_key_exchange_is_reused_in_smj_mode(spark):
     from ironbeam_spark.operators.dedup import minhash_candidates, minhash_signature
     from ironbeam_spark.sources.io import read_table
 
-    prior = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-        )
-    }
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+        },
+    ):
         docs = read_table(spark, SF_SMOKE, "documents")
         sh = docs.select(
             "doc_id",
@@ -306,12 +295,6 @@ def test_minhash_guard_band_key_exchange_is_reused_in_smj_mode(spark):
             f"expected 1 real + 1 reused band_key exchange, got {real} real / "
             f"{reused} reused:\n{final[:3000]}"
         )
-    finally:
-        for k, v in prior.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_crawl_to_shards_plan_census(spark):

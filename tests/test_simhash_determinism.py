@@ -16,6 +16,7 @@ import pytest
 
 from ironbeam_spark.functions.text import token_int, tokens
 from ironbeam_spark.operators.dedup import simhash
+from ironbeam_spark.session import scoped_conf
 
 LITERALS = [
     "hello",
@@ -100,20 +101,13 @@ def test_simhash_conf_invariant(spark):
         ("spark.sql.ansi.enabled", ["true", "false"]),
         ("spark.sql.legacy.sizeOfNull", ["true", "false"]),
     ]:
-        original = spark.conf.get(conf, None)
-        try:
-            for v in values:
-                spark.conf.set(conf, v)
+        for v in values:
+            with scoped_conf(spark, {conf: v}):
                 got = {
                     r["doc_id"]: r["fp"]
                     for r in df.select("doc_id", simhash("text").alias("fp")).collect()
                 }
-                assert got == baseline, f"simhash drifted under {conf}={v}"
-        finally:
-            if original is None:
-                spark.conf.unset(conf)
-            else:
-                spark.conf.set(conf, original)
+            assert got == baseline, f"simhash drifted under {conf}={v}"
 
 
 @pytest.mark.parametrize("text", ["", " ", "   "])

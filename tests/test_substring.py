@@ -14,7 +14,6 @@ from ironbeam_spark.operators.substring import (
     duplicated_ngram_spans,
     scrub_duplicated_spans,
 )
-from tests.conftest import assert_df_equals_oracle
 
 
 def _ref_spans(corpus, n, keep_first=True):
@@ -152,10 +151,3 @@ def test_scrub_against_reference(spark):
     got = {r["doc_id"]: (r["text_clean"], r["n_tokens"], r["n_removed"]) for r in rows}
     assert got == want
 
-
-def test_suite_query_matches_oracle_at_smoke(spark, duck):
-    from ironbeam_spark.suite import QUERIES
-    from tests.conftest import SF_SMOKE
-
-    q = QUERIES["q_substring_spans"]
-    assert_df_equals_oracle(q.fn(spark, SF_SMOKE), duck, q.oracle)

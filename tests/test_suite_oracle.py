@@ -1,50 +1,37 @@
-"""Differential test: every suite query with an oracle must match DuckDB at
-sf0.001 (fast smoke; tools/check.py covers sf0.01 — the driver's gate)."""
+"""Every suite query against its DuckDB oracle at sf0.001, through the one
+differential runner (``tools/check.py``; its CLI covers sf0.01, the driver's
+gate).  Each case also runs the oracle dtype lint, and fails if the query
+leaves a CacheManager entry or a streaming checkpoint behind.  The ``rows``
+surface runs by default; the ``arrow`` surface runs the same compare on
+Arrow tables under ``IRONBEAM_ARROW_SWEEP=1``."""
 
 from __future__ import annotations
-
-import os
-import tempfile
 
 import pytest
 
 from ironbeam_spark.suite import QUERIES
-from tests.conftest import SF_SMOKE, assert_df_equals_oracle
-
-ORACLE_QUERIES = [n for n, q in QUERIES.items() if q.oracle is not None]
-
-
-@pytest.fixture(autouse=True)
-def no_streaming_checkpoint_left(monkeypatch, tmp_path):
-    """Every query's temp dirs land in ``tmp_path``; afterwards none of them
-    may still hold a streaming checkpoint (``offsets/`` or ``commits/``): a
-    bounded replay's checkpoint is removed when its query ends."""
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    yield
-    left = [
-        root
-        for root, dirs, _ in os.walk(tmp_path)
-        if "offsets" in dirs or "commits" in dirs
-    ]
-    assert not left, f"streaming checkpoints left behind: {left}"
+from tests.conftest import SF_SMOKE, sweep_gate
+from tools.check import check_query
 
 
-@pytest.mark.parametrize("name", ORACLE_QUERIES)
+def test_every_query_has_an_oracle():
+    assert [n for n, q in QUERIES.items() if not q.oracle] == []
+
+
+def _assert_matches(spark, duck, name, surface):
+    _, msgs = check_query(spark, duck, SF_SMOKE, name, surface)
+    assert not msgs, f"{name} ({surface}): " + "; ".join(msgs[:6])
+
+
+@pytest.mark.parametrize("name", list(QUERIES))
 def test_query_matches_oracle(spark, duck, name):
-    q = QUERIES[name]
-    df = q.fn(spark, SF_SMOKE)
-    assert_df_equals_oracle(df, duck, q.oracle)
+    _assert_matches(spark, duck, name, "rows")
 
 
-NON_ORACLE = [n for n, q in QUERIES.items() if q.oracle is None]
-
-
-@pytest.mark.parametrize("name", NON_ORACLE)
-def test_query_runs(spark, name):
-    q = QUERIES[name]
-    df = q.fn(spark, SF_SMOKE)
-    assert df.count() >= 0
-    assert len(df.schema.fields) > 0
+@sweep_gate
+@pytest.mark.parametrize("name", list(QUERIES))
+def test_query_matches_oracle_on_arrow(spark, duck, name):
+    _assert_matches(spark, duck, name, "arrow")
 
 
 def test_kmv_setops_estimates_are_accurate(spark):

@@ -15,9 +15,9 @@ empirical baseline (round 8, every registry oracle at sf0.001) is that the
 registry satisfies STRICT equality — only five pairs occur:
 ``bigint==int64``, ``int==int32``, ``double==float64``,
 ``string==string``, ``boolean==bool`` — so anything looser would only
-mask future bugs.  Used by ``tools/check.py`` (per-query, via a
+mask future bugs.  Used by ``tools/check.py`` on every query, via a
 ``LIMIT 0`` re-execution that type-checks the oracle without re-running
-it) and ``tests/test_oracle_dtypes.py`` (registry-wide pytest gate).
+it.
 """
 
 from __future__ import annotations
