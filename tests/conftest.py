@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import functools
 import os
 import sys
 from pathlib import Path
@@ -39,3 +40,14 @@ def duck():
     from tools.check import oracle_connection
 
     yield oracle_connection(SF_SMOKE)
+
+
+@pytest.fixture(scope="session")
+def oracle_check(spark, duck):
+    """``check_query``'s problems for one query on the ``rows`` surface at
+    sf0.001, memoized for the session: the registry tests in
+    ``test_oracle_dtypes.py`` and ``test_suite_oracle.py`` each assert their
+    part of the same run, so every query is built and run once."""
+    from tools.check import check_query
+
+    return functools.cache(lambda name: check_query(spark, duck, SF_SMOKE, name)[1])

@@ -1,4 +1,5 @@
-"""Unit tests for the oracle output-dtype lint (``tools/oracle_dtypes.py``).
+"""The oracle output-dtype lint (``tools/oracle_dtypes.py``): its verdict
+on every suite query, and its unit tests.
 
 Four rounds of ``q_prefix_scan``/``q_token_packing`` driver-red taught
 that value-equal results can still hash-mismatch on TYPE: DuckDB's
@@ -6,20 +7,30 @@ Python ``fetchall()`` coerces HUGEINT to ``int`` (so the rows compare
 passes) while its Arrow surface types the same column
 ``decimal128(38,0)`` where Spark emits ``int64``.  The lint requires every
 oracle's Arrow schema to canonically equal the Spark result schema,
-column by column; ``tools/check.py`` runs it on every query, so
-``tests/test_suite_oracle.py`` applies it registry-wide.
+column by column.  ``tools/check.py`` runs it on every query, next to the
+value compare; the registry case here asserts the lint's part of that run
+(shared with ``tests/test_suite_oracle.py`` through the ``oracle_check``
+fixture, so no query is built twice) and the runner's CacheManager check.
 """
 
 from __future__ import annotations
 
 import duckdb
+import pytest
 
+from ironbeam_spark.suite import QUERIES
 from tools.oracle_dtypes import (
     arrow_canon,
     dtype_mismatches,
     oracle_arrow_schema,
     spark_canon,
 )
+
+
+@pytest.mark.parametrize("name", list(QUERIES))
+def test_oracle_dtypes_match_spark(oracle_check, name):
+    drift = [m for m in oracle_check(name) if m.startswith(("dtype", "cache"))]
+    assert not drift, f"{name}: " + "; ".join(drift)
 
 
 def test_lint_fires_on_uncast_hugeint(spark, duck):

@@ -18,20 +18,17 @@ def test_every_query_has_an_oracle():
     assert [n for n, q in QUERIES.items() if not q.oracle] == []
 
 
-def _assert_matches(spark, duck, name, surface):
-    _, msgs = check_query(spark, duck, SF_SMOKE, name, surface)
-    assert not msgs, f"{name} ({surface}): " + "; ".join(msgs[:6])
-
-
 @pytest.mark.parametrize("name", list(QUERIES))
-def test_query_matches_oracle(spark, duck, name):
-    _assert_matches(spark, duck, name, "rows")
+def test_query_matches_oracle(oracle_check, name):
+    msgs = oracle_check(name)
+    assert not msgs, f"{name} (rows): " + "; ".join(msgs[:6])
 
 
 @sweep_gate
 @pytest.mark.parametrize("name", list(QUERIES))
 def test_query_matches_oracle_on_arrow(spark, duck, name):
-    _assert_matches(spark, duck, name, "arrow")
+    _, msgs = check_query(spark, duck, SF_SMOKE, name, "arrow")
+    assert not msgs, f"{name} (arrow): " + "; ".join(msgs[:6])
 
 
 def test_kmv_setops_estimates_are_accurate(spark):
