@@ -101,9 +101,12 @@ def _acc_batch(acc: Any) -> pa.RecordBatch:
     return pa.RecordBatch.from_pydict({"acc": [pickle.dumps(acc)]})
 
 
-def combine_globally(
-    df: DataFrame, fn: CombineFn, out_schema: str, merge_fanout: int = 32
-) -> DataFrame:
+# Tasks in combine_globally's intermediate merge round: with P partial
+# accumulators no merge task sees more than ~P/_MERGE_FANOUT of them.
+_MERGE_FANOUT = 32
+
+
+def combine_globally(df: DataFrame, fn: CombineFn, out_schema: str) -> DataFrame:
     """Global combine (reference ``combine_globally``,
     ``src/helpers/combine_global.rs:50``).  Three-phase tree aggregation —
     the reference's O(log n) Rayon reduction (``src/runner.rs:802-810``)
@@ -112,12 +115,12 @@ def combine_globally(
 
     1. per-partition partial accumulators via ``mapInArrow`` (parallel, no
        shuffle) — one pickled accumulator row per partition;
-    2. intermediate merge: ``repartition(merge_fanout)`` spreads the partial
-       rows over ``merge_fanout`` tasks, each merging its share into ONE
+    2. intermediate merge: ``repartition(_MERGE_FANOUT)`` spreads the
+       partial rows over 32 tasks, each merging its share into ONE
        accumulator — so with P scan partitions no single task ever sees more
-       than ~P/merge_fanout accumulators (at ~800k scan partitions the old
-       single ``repartition(1)`` merge saw all 800k rows in one task);
-    3. ``repartition(1)`` moves the ≤ merge_fanout survivors (this is exactly
+       than ~P/32 accumulators (at ~800k scan partitions the old single
+       ``repartition(1)`` merge saw all 800k rows in one task);
+    3. ``repartition(1)`` moves the ≤ 32 survivors (this is exactly
        ``treeAggregate``'s final exchange; ``coalesce(1)`` would instead
        collapse upstream parallelism), then a final ``mapInArrow`` merges
        and extracts.
@@ -140,7 +143,7 @@ def combine_globally(
         yield pa.RecordBatch.from_pylist([out], schema=target)
 
     partials = df.mapInArrow(partial, "acc binary")
-    intermediate = partials.repartition(merge_fanout).mapInArrow(
+    intermediate = partials.repartition(_MERGE_FANOUT).mapInArrow(
         merge_level, "acc binary"
     )
     return intermediate.repartition(1).mapInArrow(final, out_schema)

@@ -517,10 +517,11 @@ def minhash_pairs_from_shingles(
     return verified
 
 
-# symmetrized edge rows; ~1 MB collected worst case.  Sized so the label
+# dedup_components solves on the driver when the edge table has at most this
+# many symmetrized edge rows; ~1 MB collected worst case.  Sized so the label
 # LITERAL stays cheap to analyze (≤ ~20k structs — measured ~0.2 s to
 # build + fold at 5k rows, superlinear past ~40k), not by driver memory.
-_LOCAL_SOLVE_DEFAULT = 10000
+_LOCAL_SOLVE_MAX_EDGES = 10000
 
 
 def _local_component_labels(spark, rows, node_type: str) -> DataFrame:
@@ -586,8 +587,6 @@ def dedup_components(
     id_b: str = "id_b",
     max_iter: int = 25,
     checkpoint_policy=None,
-    dedup_edges: bool = True,
-    local_solve_max_edges: int = _LOCAL_SOLVE_DEFAULT,
 ) -> DataFrame:
     """Duplicate *groups* from near-dup pairs: connected components by
     iterative min-label propagation.  Output: ``(node, component)`` where
@@ -625,10 +624,10 @@ def dedup_components(
     the rare case), yet the iterative path pays 1 blocking Spark job per
     round REGARDLESS of size.  The first action here is therefore a
     bounded ``limit(B+1).collect()`` probe of the (lazily checkpointed)
-    edge table: when every edge fits under ``local_solve_max_edges``
-    (default 10,000 symmetrized rows ≈ 1 MB collected; 0 disables), the
-    components are solved on the driver with union-find — bit-identical
-    min-id labels, pinned by ``test_dedup_components_local_solve_*`` —
+    edge table: when every edge fits under ``_LOCAL_SOLVE_MAX_EDGES``
+    (10,000 symmetrized rows ≈ 1 MB collected), the components are solved
+    on the driver with union-find — bit-identical min-id labels, pinned by
+    ``test_dedup_components_local_solve_*`` —
     and returned as one pure-JVM literal frame, replacing R blocking
     round-jobs with ONE bounded action.  Above the bound (or for id
     types whose ordering Python cannot replicate, or NULL endpoints) the
@@ -649,14 +648,9 @@ def dedup_components(
     # scale it removes an entire pass over the verification join.
     # Optimization r12, guide §2.4.)
     #
-    # ``dedup_edges=False`` skips the ``distinct()`` shuffle: min-label
-    # propagation is value-identical under duplicate edges (min over a
-    # multiset), so the distinct is purely an edge-table size/perf knob.
-    # Callers whose pairs are already distinct canonical (a < b) rows —
-    # every verified-candidate pipeline in this package; pinned by
-    # ``minhash_candidates``'s own distinct — pass False and save a full
-    # shuffle of the edge set per invocation (optimization r12, guide
-    # §2.4: "a distinct on data that is already unique").  The in-row
+    # The edge table is never de-duplicated: min-label propagation takes a
+    # min over a multiset, so duplicate edges cannot change a label, and a
+    # distinct() would cost a full shuffle of the edge set.  The in-row
     # array_distinct still collapses a self-loop's two mirrored structs.
     sym = pairs.select(
         F.explode(
@@ -668,8 +662,6 @@ def dedup_components(
             )
         ).alias("_e")
     ).select(F.col("_e.src").alias("src"), F.col("_e.dst").alias("dst"))
-    if dedup_edges:
-        sym = sym.distinct()
     # LAZY checkpoint: the first action (the local-solve probe below, or
     # round 1's convergence count) is the materializing action, so the
     # edge derivation and the first aggregate run as ONE job instead of
@@ -678,11 +670,9 @@ def dedup_components(
 
     # -- local-solve short-circuit (see docstring) ----------------------
     node_type = edges.schema["src"].dataType.simpleString()
-    if local_solve_max_edges > 0 and node_type in (
-        "tinyint", "smallint", "int", "bigint", "string"
-    ):
-        probe = edges.limit(local_solve_max_edges + 1).collect()
-        if len(probe) <= local_solve_max_edges and all(
+    if node_type in ("tinyint", "smallint", "int", "bigint", "string"):
+        probe = edges.limit(_LOCAL_SOLVE_MAX_EDGES + 1).collect()
+        if len(probe) <= _LOCAL_SOLVE_MAX_EDGES and all(
             r[0] is not None and r[1] is not None for r in probe
         ):
             return _local_component_labels(
@@ -937,6 +927,14 @@ def prefix_filter_candidates(
     )
 
 
+# set_similarity_join: a block of at most this many rows takes the direct
+# within-block join (≤ cap²/2 pairs); a larger one takes the prefix filter.
+_SMALL_BLOCK_CAP = 512
+# set_similarity_search: a query side of at most this many set elements in
+# total (~tens of MB) is broadcast; a larger one takes the prefix plan.
+_BROADCAST_TOKEN_CAP = 2_000_000
+
+
 def set_similarity_join(
     sets: DataFrame,
     id_col: str,
@@ -944,7 +942,6 @@ def set_similarity_join(
     threshold: float,
     block_cols: tuple[str, ...] = (),
     sim_col: str = "jaccard_sim",
-    small_block_cap: int = 512,
 ) -> DataFrame:
     """Exact self set-similarity join: all pairs with Jaccard ≥ ``threshold``
     (and equal ``block_cols``), as ``(id_a, id_b, sim)`` with ``id_a < id_b``.
@@ -955,7 +952,7 @@ def set_similarity_join(
 
     Strategy is size-routed, the AQE-skew-handling idea applied to
     similarity: a tiny (broadcast) per-block row count splits blocks at
-    ``small_block_cap``.  Small blocks take the direct within-block join —
+    ``_SMALL_BLOCK_CAP`` rows.  Small blocks take the direct within-block join —
     bounded quadratic (≤ cap²/2 pairs per block), cheapest when blocks are
     modest because it needs no posting-list shuffles.  Large blocks — the
     ones where quadratic explodes at 100 TB — go through
@@ -991,12 +988,12 @@ def set_similarity_join(
     # reuse the cache-scan→broadcast-join→filter pipeline across those
     # consumers — each was re-planned and re-executed (measured 5×).
     small = caches.hold(
-        tagged.where(F.col("_bn") <= small_block_cap)
+        tagged.where(F.col("_bn") <= _SMALL_BLOCK_CAP)
         .drop("_bn")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     large = caches.hold(
-        tagged.where(F.col("_bn") > small_block_cap)
+        tagged.where(F.col("_bn") > _SMALL_BLOCK_CAP)
         .drop("_bn")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -1040,8 +1037,6 @@ def set_similarity_search(
     set_col: str,
     block_cols: tuple[str, ...] = (),
     sim_col: str = "jaccard_sim",
-    strategy: str = "auto",
-    broadcast_token_cap: int = 2_000_000,
 ) -> DataFrame:
     """Exact R-S set-similarity SEARCH (not self-join): every
     ``(query_id, corpus_id)`` pair with Jaccard ≥ ``threshold`` and equal
@@ -1065,10 +1060,11 @@ def set_similarity_search(
     - ``prefix`` (both sides large): two-sided prefix filter under a shared
       rarest-first order — linear shuffles, never |Q|·|C| (details below).
 
-    ``strategy='auto'`` probes the query side's total token count (one
-    cheap job over the small side only) and routes to ``broadcast`` iff it
-    is ≤ ``broadcast_token_cap`` (~tens of MB broadcast).  Both paths prune
-    only pairs that provably cannot reach ``threshold``: identical output.
+    The route is picked by probing the query side's total token count (one
+    cheap job over the small side only): ``broadcast`` iff it is ≤
+    ``_BROADCAST_TOKEN_CAP`` (~tens of MB broadcast), else ``prefix``.  Both
+    paths prune only pairs that provably cannot reach ``threshold``:
+    identical output.
 
     The two-sided prefix guarantee: under ANY total order shared by both
     sides, a pair with overlap ≥ α shares an element within the first
@@ -1083,23 +1079,18 @@ def set_similarity_search(
     """
     from pyspark.sql import Window as W
 
-    if strategy not in ("auto", "broadcast", "prefix"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-
     blocks = list(block_cols)
     if not blocks:
         queries = queries.withColumn("_blk", F.lit(1))
         corpus = corpus.withColumn("_blk", F.lit(1))
         blocks = ["_blk"]
 
-    if strategy == "auto":
-        qtoks = queries.select(
-            F.coalesce(F.sum(F.size(set_col)), F.lit(0)).alias("n")
-        ).first()["n"]
-        strategy = "broadcast" if qtoks <= broadcast_token_cap else "prefix"
-    if strategy == "broadcast":
+    qtoks = queries.select(
+        F.coalesce(F.sum(F.size(set_col)), F.lit(0)).alias("n")
+    ).first()["n"]
+    if qtoks <= _BROADCAST_TOKEN_CAP:
         t = F.lit(float(threshold))
-        # Persist the QUERY side only (small by the broadcast_token_cap
+        # Persist the QUERY side only (small by the _BROADCAST_TOKEN_CAP
         # routing; beyond reuse, the cache is a predicate-pushdown barrier
         # for its set expression — see minhash_dedup_pairs).  The CORPUS
         # side is the 100-TB-class input: pinning a corpus-sized cache

@@ -14,8 +14,8 @@ summary** (Agarwal et al., "Mergeable Summaries", PODS'12) with capacity
   classic MG step, with the subtracted offsets accumulated as the summary's
   error bound;
 - merge: same sum+trim over the per-partition summaries, as a two-level
-  tree — an intermediate ``repartition(merge_fanout)`` merge round, then a
-  final ``repartition(1)`` over ≤ merge_fanout pickled summaries.
+  tree — an intermediate 32-task merge round, then a final
+  ``repartition(1)`` over ≤ 32 pickled summaries.
 
 Guarantees (the testable contract): for every item, ``est ≤ true_count ≤
 est + err``, and any item with ``true_count > err`` is present in the
@@ -80,9 +80,7 @@ class MisraGries(CombineFn):
         return {"hh": [{"item": k, "est": v} for k, v in counts.items()], "err": err}
 
 
-def approx_heavy_hitters(
-    df: DataFrame, item_col: str, m: int = 256, merge_fanout: int = 32
-) -> DataFrame:
+def approx_heavy_hitters(df: DataFrame, item_col: str, m: int = 256) -> DataFrame:
     """Frequent-items summary of ``item_col``: ≤ m rows ``(item, est, err)``
     with ``est ≤ true_count ≤ est + err`` for present items and every item
     of ``true_count > err`` guaranteed present.  Memory is O(m) per task and
@@ -91,16 +89,14 @@ def approx_heavy_hitters(
 
     The merge is ``combine_globally``'s two-level tree (the reference's
     O(log n) Rayon reduction, ``src/runner.rs:802-810``): an intermediate
-    ``repartition(merge_fanout)`` merge round so no single task ever sees
-    more than ~P/merge_fanout summaries, then the final single-partition
-    merge.  MG summaries are mergeable at any fan-in (sum + trim, offsets
+    32-task merge round so no single task ever sees more than ~P/32
+    summaries, then the final single-partition merge.  MG summaries are mergeable at any fan-in (sum + trim, offsets
     accumulate into ``err``), so the guarantee survives every level."""
     item_type = df.schema[item_col].dataType.simpleString()
     summary = combine_globally(
         df.select(item_col),
         MisraGries(item_col, m),
         f"hh array<struct<item:{item_type},est:bigint>>, err bigint",
-        merge_fanout,
     )
     return summary.select(F.inline("hh"), "err")
 

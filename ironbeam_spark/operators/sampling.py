@@ -173,10 +173,7 @@ def leakage_safe_split(
     """
     from ironbeam_spark.operators.dedup import dedup_components
 
-    # pairs contract (docstring): a verified near-dup pair table — distinct
-    # canonical (a < b) rows by construction, so the edge-dedup shuffle in
-    # dedup_components is redundant (values identical either way; opt r12)
-    comp = dedup_components(pairs, dedup_edges=False).withColumnRenamed("node", id_col)
+    comp = dedup_components(pairs).withColumnRenamed("node", id_col)
     joined = docs.join(comp, on=id_col, how="left").withColumn(
         group_col, F.coalesce(F.col("component"), F.col(id_col))
     ).drop("component")

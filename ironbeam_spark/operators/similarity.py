@@ -229,22 +229,20 @@ def arrow_pair_cosine(
 _SCORER_DEFAULT_BYTES = 16 * 1024 * 1024
 
 
-def _auto_pair_impl(joined: DataFrame, impl: str) -> str:
-    """Resolve ``impl='auto'`` for a joined pair frame: pick the vectorized
-    Arrow scorer when the ESTIMATED pair bytes per task clear the measured
-    Python-boundary crossover, else the interpreted expression fold.
+def _auto_pair_impl(joined: DataFrame) -> str:
+    """Pick the scorer for a joined pair frame: the vectorized Arrow scorer
+    when the ESTIMATED pair bytes per task clear the measured
+    Python-boundary crossover ``_SCORER_DEFAULT_BYTES``, else the
+    interpreted expression fold.
 
     Both scorers are bit-identical after ranking (differential-test
     pinned), so this is purely a throughput choice — the r12 crossover
     measurement showed each side wins by >1.5x on its own side of ~3k
     pairs/task, and a fixed default is wrong at one scale or the other
     (guide §1.2: the bench layout sits at ~600 pairs/task, production
-    shards at 10^4-10^6).  An explicit ``impl=`` argument wins; otherwise
-    the size estimate comes from the optimized plan's stats (driver-side,
-    no job).  Estimator failure falls back to Arrow — the scale-safe
-    side."""
-    if impl in ("expr", "arrow"):
-        return impl
+    shards at 10^4-10^6).  The size estimate comes from the optimized
+    plan's stats (driver-side, no job).  Estimator failure falls back to
+    Arrow — the scale-safe side."""
     try:
         size = int(
             joined._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -255,11 +253,11 @@ def _auto_pair_impl(joined: DataFrame, impl: str) -> str:
         return "arrow"
 
 
-def _score_pairs(joined: DataFrame, impl: str) -> DataFrame:
+def _score_pairs(joined: DataFrame) -> DataFrame:
     """Cosine-score the ``(query_id, q_vec, neighbor_id, c_vec)`` pairs of
     ``joined`` into ``(query_id, neighbor_id, cos_sim)`` with the scorer
-    :func:`_auto_pair_impl` resolves ``impl`` to."""
-    if _auto_pair_impl(joined, impl) == "expr":
+    :func:`_auto_pair_impl` picks."""
+    if _auto_pair_impl(joined) == "expr":
         return joined.select(
             "query_id",
             "neighbor_id",
@@ -301,25 +299,24 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    impl: str = "auto",
 ) -> DataFrame:
     """Exact cosine top-k neighbors for each query vector (self-match
     excluded).
 
-    ``impl='arrow'`` scores the joined pairs in an Arrow-batched
-    ``mapInArrow`` using ``np.add.accumulate`` — a SEQUENTIAL fold, so the
-    doubles are bit-identical to the Catalyst ``aggregate`` fold (and the
-    SQL oracle's ``list_sum``) while running vectorized C instead of
-    interpreted higher-order lambdas (~10× on the |Q|·|C| hot loop — the
-    baseline's cost is genuinely linear in |C|, so the constant IS the
-    scale story).  ``impl='expr'`` keeps the pure-expression path
-    (``cosine_safe``, so degenerate vectors score NULL exactly like the
-    arrow path instead of raising under ANSI).  ``impl='auto'`` (default)
-    picks per the measured pairs-per-task crossover — see
-    :func:`_auto_pair_impl` (optimization r13; the r12 crossover
-    measurement showed the flat Python-boundary cost loses below ~3k
-    pairs/task and wins increasingly above it).  All paths share the same
-    plan shape: broadcast queries × corpus, window top-k.
+    The joined pairs are scored by one of two bit-identical scorers, picked
+    by :func:`_auto_pair_impl` from the plan's estimated pair bytes per
+    task (``_SCORER_DEFAULT_BYTES``, the measured crossover: the flat
+    Python-boundary cost loses below ~3k pairs/task and wins increasingly
+    above it).  The Arrow scorer runs an Arrow-batched ``mapInArrow``
+    using ``np.add.accumulate`` — a SEQUENTIAL fold, so the doubles are
+    bit-identical to the Catalyst ``aggregate`` fold (and the SQL oracle's
+    ``list_sum``) while running vectorized C instead of interpreted
+    higher-order lambdas (~10× on the |Q|·|C| hot loop — the baseline's
+    cost is genuinely linear in |C|, so the constant IS the scale story).
+    The expression scorer is the pure-expression path (``cosine_safe``,
+    so degenerate vectors score NULL exactly like the Arrow scorer
+    instead of raising under ANSI).  Both share the same plan shape:
+    broadcast queries × corpus, window top-k.
 
     Degenerate rows: null vectors, vectors containing null elements,
     mismatched lengths, empty vectors, and zero-norm vectors all score
@@ -342,7 +339,7 @@ def brute_force_topk(
         .crossJoin(c)
         .where(F.col("query_id") != F.col("neighbor_id"))
     )
-    return _rank_topk(_score_pairs(joined, impl), k)
+    return _rank_topk(_score_pairs(joined), k)
 
 
 def _side_array(side_df: DataFrame, id_col: str, vec_col: str, out: str) -> DataFrame:
@@ -475,21 +472,19 @@ def ivf_ann_topk(
     vec_col: str = "embedding",
     k: int = 5,
     n_probe: int = 2,
-    impl: str = "auto",
 ) -> DataFrame:
     """IVF-style ANN: corpus vectors live in their single nearest cell; each
     query probes its ``n_probe`` nearest cells and exact-ranks only those
     cells' members.  At scale the cell join is an equi-join hash-partitioned
     on cell id — |Q|·|C| becomes |Q|·(corpus/cells)·n_probe.
 
-    ``impl``: pair-scoring engine — ``'expr'`` (interpreted fold),
-    ``'arrow'`` (vectorized, bit-identical after ranking), or ``'auto'``
-    (default: the measured pairs-per-task crossover, see
-    :func:`_auto_pair_impl`).  r12 proved the two sides bit-exact on this
-    exact query shape (incl. zero-norm fuzz) and measured the flat
-    ~0.35 s Python-boundary cost losing below ~3k pairs/task — the r13
-    auto switch keeps the expression fold at bench pair counts and flips
-    to Arrow at production shard sizes."""
+    Pair scoring picks the interpreted expression fold or the vectorized
+    Arrow scorer (bit-identical after ranking) from the measured
+    pairs-per-task crossover, see :func:`_auto_pair_impl`.  r12 proved the
+    two sides bit-exact on this exact query shape (incl. zero-norm fuzz)
+    and measured the flat ~0.35 s Python-boundary cost losing below ~3k
+    pairs/task — the rule keeps the expression fold at bench pair counts
+    and flips to Arrow at production shard sizes."""
     cb = ivf_assign_cells(corpus, centroids, id_col, vec_col, n_probe=1).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"), "cell"
     )
@@ -512,7 +507,7 @@ def ivf_ann_topk(
         # at most once — a distinct() here re-shuffled the largest
         # intermediate for nothing (opt r12, guide §2.4)
     )
-    return _rank_topk(_score_pairs(joined, impl), k)
+    return _rank_topk(_score_pairs(joined), k)
 
 
 def lsh_ann_topk(
@@ -522,13 +517,12 @@ def lsh_ann_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    impl: str = "auto",
 ) -> DataFrame:
     """Approximate top-k: only corpus vectors in the query's LSH bucket are
     scored.  Recall loss is the LSH trade-off; at scale this turns |Q|·|C|
-    into a bucket-partitioned equi-join.  ``impl`` as in
+    into a bucket-partitioned equi-join.  Pair scoring as in
     :func:`ivf_ann_topk` (same r12 bit-exactness proof and crossover
-    measurement; same r13 auto switch)."""
+    measurement; same scorer rule)."""
     qb = hyperplane_buckets(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")),
         planes,
@@ -545,7 +539,7 @@ def lsh_ann_topk(
         F.broadcast(qb).join(cb, on="bucket")
         .where(F.col("query_id") != F.col("neighbor_id"))
     )
-    return _rank_topk(_score_pairs(joined, impl), k)
+    return _rank_topk(_score_pairs(joined), k)
 
 
 def lsh_near_dup_pairs(
@@ -764,11 +758,7 @@ def semantic_dedup(
         & ~F.isnan(F.col("cos_sim"))
         & (F.col("cos_sim") >= F.lit(float(threshold)))
     )
-    # triangle-join pairs are distinct canonical (a < b; "no pair is scored
-    # twice" above) — skip the redundant edge-dedup shuffle (opt r12)
-    labels = dedup_components(
-        pairs, checkpoint_policy=checkpoint_policy, dedup_edges=False
-    )
+    labels = dedup_components(pairs, checkpoint_policy=checkpoint_policy)
     return (
         assigned.join(labels, assigned._sid == labels.node, "left")
         .select(

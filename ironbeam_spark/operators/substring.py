@@ -61,6 +61,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ironbeam_spark.scale import ensure_min_parallelism
+
 __all__ = [
     "positional_token_ngrams",
     "duplicated_ngram_spans",
@@ -114,7 +116,6 @@ def positional_token_ngrams(
     id_col: str,
     text_col: str,
     n: int,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """``(id, pos, gh)``: the int64 rolling hash of the ``n``-token window
     starting at 0-based token position ``pos``, one row per start position.
@@ -125,14 +126,15 @@ def positional_token_ngrams(
     The per-token hash array is let-bound so the md5 pass runs once per row
     even though each of the ~|tokens| windows reads ``n`` elements.
 
-    ``parallelism``: the gram fold is an interpreted higher-order
-    expression (never enters whole-stage codegen), so its parallelism is
-    the SOURCE SPLIT COUNT — serial on a single-file input.  Passing a
-    task count repartitions the narrow (id, text) projection first; both
-    downstream gram branches then hang off ONE exchange (ReusedExchange),
-    so the corpus text shuffles once and the fold runs wide.  Leave None
-    at real scale, where a 100 TB parquet corpus already has thousands of
-    splits and a forced full-text reshuffle would only add cost."""
+    The gram fold is an interpreted higher-order expression (never enters
+    whole-stage codegen), so its parallelism is the SOURCE SPLIT COUNT —
+    serial on a single-file input.  The narrow (id, text) projection
+    therefore goes through :func:`~ironbeam_spark.scale.ensure_min_parallelism`:
+    with fewer partitions than the default parallelism it is round-robin
+    repartitioned up to it, and both downstream gram branches hang off that
+    ONE exchange (ReusedExchange), so the corpus text shuffles once and the
+    fold runs wide.  At real scale a 100 TB parquet corpus already has
+    thousands of splits, and the projection passes through unchanged."""
     from ironbeam_spark.functions.hof import let_
     from ironbeam_spark.functions.text import token_int, tokens
     from ironbeam_spark.operators.dedup import SHINGLE_MOD
@@ -140,9 +142,7 @@ def positional_token_ngrams(
     if n < 2:
         raise ValueError("positional_token_ngrams: n must be >= 2")
 
-    base = docs.select(F.col(id_col), F.col(text_col))
-    if parallelism:
-        base = base.repartition(parallelism)
+    base = ensure_min_parallelism(docs.select(F.col(id_col), F.col(text_col)))
 
     token_hashes = F.transform(tokens(text_col), lambda t: token_int(t))
 
@@ -173,7 +173,6 @@ def duplicated_ngram_spans(
     text_col: str,
     n: int = 8,
     keep_first: bool = True,
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Maximal duplicated token spans per document:
     ``(id, start_tok, end_tok)`` with 0-based token indices, end exclusive.
@@ -188,7 +187,7 @@ def duplicated_ngram_spans(
 
     Requires a NUMERIC non-negative id (packed ordering); positions are
     capped at ``2^POS_PACK_BITS`` tokens per document."""
-    grams = positional_token_ngrams(docs, id_col, text_col, n, parallelism)
+    grams = positional_token_ngrams(docs, id_col, text_col, n)
 
     packed = grams.withColumn("_pk", packed_occurrence(id_col, "pos"))
 
@@ -233,7 +232,6 @@ def scrub_duplicated_spans(
     text_col: str,
     n: int = 8,
     out_col: str = "text_clean",
-    parallelism: int | None = None,
 ) -> DataFrame:
     """Remove every redundant duplicated span (keep-first semantics), return
     ``(id, out_col, n_tokens, n_removed)``.
@@ -244,9 +242,7 @@ def scrub_duplicated_spans(
     extra linear steps on top of :func:`duplicated_ngram_spans`: one per-doc
     span collect (bounded by document length) and one broadcast-free left
     join back to the corpus on the id."""
-    spans = duplicated_ngram_spans(
-        docs, id_col, text_col, n, keep_first=True, parallelism=parallelism
-    )
+    spans = duplicated_ngram_spans(docs, id_col, text_col, n, keep_first=True)
     per_doc = spans.groupBy(id_col).agg(
         F.sort_array(F.collect_list(F.struct("start_tok", "end_tok"))).alias(
             "_spans"

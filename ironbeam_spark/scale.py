@@ -80,7 +80,7 @@ def _build_local_metadata_df(
     return spark.range(1).select(F.inline(arr))
 
 
-def ensure_min_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition up to the cluster's default parallelism iff the
     plan currently has fewer partitions; otherwise return ``df`` unchanged.
 
@@ -88,8 +88,7 @@ def ensure_min_parallelism(df: DataFrame, min_partitions: int | None = None) -> 
     hashing, shingling, vector math).  Never call it on an already-wide plan:
     the partition check makes it free there.
     """
-    sc = df.sparkSession.sparkContext
-    target = min_partitions if min_partitions is not None else sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -25,7 +25,10 @@ identical content, never duplicating rows in the read view.
 
 State on disk is self-describing: ``batch-*/`` directories of parquet +
 ``_manifest`` of committed ids; read the dataset back with
-``spark.read.parquet(f"{path}/batch-*")``.
+``spark.read.parquet(*sink.committed_paths())``.  The manifest lists the
+committed batch directories, so the read needs no glob: a single glob path
+would make Spark probe ``batch-*/_spark_metadata`` for a file-sink log and
+log a ``FileNotFoundException`` warning on every read.
 """
 
 from __future__ import annotations
@@ -69,10 +72,17 @@ class IdempotentParquetSink:
         except FileNotFoundError:
             return set()
 
+    def _batch_dir(self, batch_id: int) -> str:
+        return os.path.join(self.path, f"batch-{batch_id:08d}")
+
+    def committed_paths(self) -> list[str]:
+        """The committed batch directories, in batch-id order."""
+        return [self._batch_dir(i) for i in sorted(self.committed_ids())]
+
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id in self.committed_ids():
             return  # replayed batch: the side effect already happened
-        final = os.path.join(self.path, f"batch-{batch_id:08d}")
+        final = self._batch_dir(batch_id)
         tmp = os.path.join(self.path, f".inflight-{uuid.uuid4().hex}")
         batch_df.write.mode("overwrite").parquet(tmp)
         if os.path.exists(final):

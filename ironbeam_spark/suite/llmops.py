@@ -990,7 +990,7 @@ def q_pretrain_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_band_bucket=RECOMMENDED_MAX_BAND_BUCKET,
     )
     losers = (
-        dedup_components(pairs, dedup_edges=False)  # minhash pairs: distinct a<b
+        dedup_components(pairs)
         .where(F.col("node") != F.col("component"))
         .select(F.col("node").alias("doc_id"))
     )
@@ -1140,13 +1140,9 @@ def q_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ironbeam_spark.operators.substring import duplicated_ngram_spans
 
     docs = read_table(spark, sf_dir, "documents")
-    # parallelism: the test parquet is one split; the interpreted gram fold
-    # would otherwise run serially in the scan task (SCALE.md pushdown/HOF
-    # note).  At real scale the corpus has thousands of splits — omit it.
-    return duplicated_ngram_spans(
-        docs, "doc_id", "text", n=8,
-        parallelism=spark.sparkContext.defaultParallelism,
-    ).orderBy("doc_id", "start_tok")
+    return duplicated_ngram_spans(docs, "doc_id", "text", n=8).orderBy(
+        "doc_id", "start_tok"
+    )
 
 
 @query(
@@ -1180,10 +1176,7 @@ def q_substring_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ironbeam_spark.operators.substring import scrub_duplicated_spans
 
     docs = read_table(spark, sf_dir, "documents")
-    out = scrub_duplicated_spans(
-        docs, "doc_id", "text", n=8,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
+    out = scrub_duplicated_spans(docs, "doc_id", "text", n=8)
     return out.select(
         "doc_id",
         "n_tokens",

@@ -1016,7 +1016,7 @@ def q_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = IdempotentParquetSink(out)
     # the read-back below is lazy over ``out``, which therefore stays
     run_foreach_batch(sdf, sink)
-    back = spark.read.parquet(f"{out}/batch-*")
+    back = spark.read.parquet(*sink.committed_paths())
     return (
         back.groupBy((F.col("user_id") % 7).alias("shard"))
         .agg(

@@ -327,7 +327,7 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "doc_id", "text", shingle_words=3, k=8, bands=4, threshold=0.5,
         max_band_bucket=RECOMMENDED_MAX_BAND_BUCKET,
     )
-    labels = dedup_components(pairs, dedup_edges=False)  # minhash pairs: distinct a<b
+    labels = dedup_components(pairs)
     return (
         labels.groupBy("component")
         .agg(
@@ -891,7 +891,7 @@ def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "doc_id", "text", shingle_words=3, k=8, bands=4, threshold=0.5,
         max_band_bucket=RECOMMENDED_MAX_BAND_BUCKET,
     )
-    labels = dedup_components(pairs, dedup_edges=False)  # minhash pairs: distinct a<b
+    labels = dedup_components(pairs)
     losers = labels.where(F.col("node") != F.col("component")).select(
         F.col("node").alias("doc_id"), F.lit(1).alias("_loser")
     )

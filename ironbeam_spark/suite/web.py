@@ -1227,14 +1227,13 @@ def q_crawl_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     # 5. MinHash-LSH near-dup components over the checkpointed shingles,
-    # drop group losers (pairs are distinct canonical a<b, so the edge
-    # dedup shuffle is skipped)
+    # drop group losers
     pairs = minhash_pairs_from_shingles(
         cleaned, "doc_id", "shingles", k=8, bands=4, threshold=0.5,
         max_band_bucket=RECOMMENDED_MAX_BAND_BUCKET,
     )
     losers = (
-        dedup_components(pairs, dedup_edges=False)
+        dedup_components(pairs)
         .where(F.col("node") != F.col("component"))
         .select(F.col("node").alias("doc_id"))
     )

@@ -48,9 +48,10 @@ def test_policy_truncates_lineage(spark):
     assert sorted(map(tuple, cut.collect())) == sorted(map(tuple, joined.collect()))
 
 
-def test_dedup_components_policy_equivalence(spark):
+def test_dedup_components_policy_equivalence(spark, monkeypatch):
     """dedup_components under EveryN(3) — fewer checkpoints, longer lineage —
     must produce exactly the components of the default AfterEveryBarrier."""
+    from ironbeam_spark.operators import dedup
     from ironbeam_spark.operators.dedup import dedup_components
 
     # two chains and a triangle: {1..4}, {10,11}, {20,21,22}
@@ -58,20 +59,16 @@ def test_dedup_components_policy_equivalence(spark):
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)],
         "id_a long, id_b long",
     )
-    # local_solve_max_edges=0 forces the iterative loop both times — the
+    # a local-solve bound of 0 forces the iterative loop both times — the
     # policy only governs the loop; the r13 local-solve short circuit
     # (which this toy graph would otherwise take) has its own identity
     # tests in test_r13_optimizations.py
-    base = {
-        (r.node, r.component)
-        for r in dedup_components(pairs, local_solve_max_edges=0).collect()
-    }
+    monkeypatch.setattr(dedup, "_LOCAL_SOLVE_MAX_EDGES", 0)
+    base = {(r.node, r.component) for r in dedup_components(pairs).collect()}
     sparse_policy = CheckpointPolicy.every_n(3)
     sparse = {
         (r.node, r.component)
-        for r in dedup_components(
-            pairs, checkpoint_policy=sparse_policy, local_solve_max_edges=0
-        ).collect()
+        for r in dedup_components(pairs, checkpoint_policy=sparse_policy).collect()
     }
     assert sparse == base
     assert base == {

@@ -90,13 +90,16 @@ def _final_plan(df) -> str:
     return s.split("== Initial Plan ==")[0]
 
 
-def test_combinefn_globally_tree_merge_stages(spark):
+def test_combinefn_globally_tree_merge_stages(spark, monkeypatch):
     """The global combine is a two-level tree: partial -> intermediate merge
-    (repartition(merge_fanout)) -> final merge.  The executed plan must show
+    (repartition(_MERGE_FANOUT)) -> final merge.  The executed plan must show
     three MapInArrow stages and two exchanges, so no single merge task ever
     sees all P partial accumulators."""
+    from ironbeam_spark.operators import combinefn
+
+    monkeypatch.setattr(combinefn, "_MERGE_FANOUT", 4)
     df = spark.createDataFrame([(i,) for i in range(100)], "v long").repartition(8)
-    out = combine_globally(df, _sum_count(), "total long, n long", merge_fanout=4)
+    out = combine_globally(df, _sum_count(), "total long, n long")
     row = out.collect()[0]
     assert (row.total, row.n) == (sum(range(100)), 100)
     plan = _final_plan(out)
@@ -106,15 +109,17 @@ def test_combinefn_globally_tree_merge_stages(spark):
     assert plan.count("Exchange SinglePartition") == 1, plan  # final
 
 
-def test_heavy_hitters_tree_merge_stages(spark):
+def test_heavy_hitters_tree_merge_stages(spark, monkeypatch):
     """approx_heavy_hitters merges summaries in a two-level tree: partial
-    summaries -> repartition(merge_fanout) intermediate merge -> final
+    summaries -> repartition(_MERGE_FANOUT) intermediate merge -> final
     single-partition merge.  Guarantee must survive the extra level."""
+    from ironbeam_spark.operators import combinefn
     from ironbeam_spark.operators.frequency import approx_heavy_hitters
 
+    monkeypatch.setattr(combinefn, "_MERGE_FANOUT", 4)
     rows = [("hot",)] * 60 + [(f"cold{i}",) for i in range(40)]
     df = spark.createDataFrame(rows, "item string").repartition(8)
-    out = approx_heavy_hitters(df, "item", m=8, merge_fanout=4)
+    out = approx_heavy_hitters(df, "item", m=8)
     got = {r.item: (r.est, r.err) for r in out.collect()}
     assert "hot" in got
     est, err = got["hot"]
@@ -1009,33 +1014,37 @@ def test_p3_out_of_range_sample_is_dead_lettered(spark):
     assert row.error and "outside" in row.error and row.width is None
 
 
-def test_brute_force_arrow_handles_null_vectors(spark):
+def test_brute_force_arrow_handles_null_vectors(spark, monkeypatch):
     """Null embeddings in the corpus must not crash or corrupt the Arrow
     scoring path (flatten() drops null lists - a blind reshape would shift
     every later row)."""
+    from ironbeam_spark.operators import similarity
     from ironbeam_spark.operators.similarity import brute_force_topk
 
     rows = [(i, [float(i + j) for j in range(4)]) for i in range(20)]
     rows.append((99, None))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = emb.where(F.col("vec_id") < 2)
-    arrow = {
-        (r.query_id, r.neighbor_id, r.cos_sim)
-        for r in brute_force_topk(emb, q, k=3, impl="arrow").collect()
-    }
-    expr = {
-        (r.query_id, r.neighbor_id, r.cos_sim)
-        for r in brute_force_topk(emb, q, k=3, impl="expr").collect()
-    }
+
+    def scored(crossover_bytes):
+        # 1 byte always picks the Arrow scorer, 2**60 the expression fold
+        monkeypatch.setattr(similarity, "_SCORER_DEFAULT_BYTES", crossover_bytes)
+        return {
+            (r.query_id, r.neighbor_id, r.cos_sim)
+            for r in brute_force_topk(emb, q, k=3).collect()
+        }
+
+    arrow, expr = scored(1), scored(1 << 60)
     assert arrow == expr and len(arrow) == 6
 
 
-def test_brute_force_degenerate_vectors_never_outrank_real(spark):
+def test_brute_force_degenerate_vectors_never_outrank_real(spark, monkeypatch):
     """Zero-norm, empty, and null-element corpus vectors score NULL (not
     IEEE NaN, which Spark sorts ABOVE every double under desc) and are
     dropped before ranking — they must never appear in any top-k list.
     Regression: an all-zero vector used to rank #1 for EVERY query with
     cos_sim=NaN on the arrow path."""
+    from ironbeam_spark.operators import similarity
     from ironbeam_spark.operators.similarity import brute_force_topk
 
     rows = [(i, [float(i + j + 1) for j in range(4)]) for i in range(10)]
@@ -1047,7 +1056,8 @@ def test_brute_force_degenerate_vectors_never_outrank_real(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = emb.where(F.col("vec_id") < 2)
-    out = brute_force_topk(emb, q, k=3, impl="arrow").collect()
+    monkeypatch.setattr(similarity, "_SCORER_DEFAULT_BYTES", 1)  # Arrow scorer
+    out = brute_force_topk(emb, q, k=3).collect()
     assert len(out) == 6  # 2 queries x k=3, fully populated by real rows
     for r in out:
         assert r.neighbor_id < 90, r

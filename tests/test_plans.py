@@ -368,3 +368,35 @@ def test_web_pipeline_corpus_never_shuffles_before_rollup(spark):
             corpus_exchanges += 1
     assert corpus_exchanges == 1, plan[:3000]
     assert "CartesianProduct" not in plan
+
+
+def test_substring_spans_text_shuffles_once(spark):
+    """q_substring_spans widens its single-split input once: the narrow
+    (doc_id, text) projection sits under ONE round-robin exchange to the
+    default parallelism, and the second gram branch reads that exchange's
+    output through a ReusedExchange instead of shuffling the text again."""
+    import re
+
+    from ironbeam_spark.sources.io import read_table
+
+    n = spark.sparkContext.defaultParallelism
+    docs = read_table(spark, SF_SMOKE, "documents")
+    assert docs.rdd.getNumPartitions() < n  # the rule widens this input
+    df = QUERIES["q_substring_spans"].fn(spark, SF_SMOKE)
+    df.collect()
+    lines = (
+        df._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+        .split("== Initial Plan ==")[0]
+        .splitlines()
+    )
+    rr = f"Exchange RoundRobinPartitioning({n})"
+    exchanges = [i for i, line in enumerate(lines) if f"+- {rr}" in line]
+    assert len(exchanges) == 1, "\n".join(lines)
+    below = "\n".join(lines[exchanges[0] : exchanges[0] + 3])
+    assert "ReadSchema: struct<doc_id:bigint,text:string>" in below, below
+    reused = [line for line in lines if "ReusedExchange" in line]
+    assert len(reused) == 1 and rr in reused[0], reused
+    plan_id = re.search(r"plan_id=\d+", lines[exchanges[0]]).group(0)
+    assert plan_id in reused[0], (plan_id, reused[0])

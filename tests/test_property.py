@@ -184,6 +184,9 @@ def test_set_similarity_join_model(spark, texts, t):
     """Exactness of the prefix-filter set-similarity join against a pure-
     Python Jaccard model on adversarially tiny alphabets (maximal gram
     collisions), through BOTH routing paths."""
+    from unittest.mock import patch
+
+    from ironbeam_spark.operators import dedup
     from ironbeam_spark.operators.dedup import char_ngrams, set_similarity_join
 
     def grams(s):
@@ -203,12 +206,11 @@ def test_set_similarity_join_model(spark, texts, t):
         [(i, s) for i, s in enumerate(texts)], "doc_id long, text string"
     ).select("doc_id", char_ngrams("text", 3).alias("grams"))
     for cap in (0, 512):
-        got = {
-            (r.id_a, r.id_b): r.jaccard_sim
-            for r in set_similarity_join(
-                df, "doc_id", "grams", t, small_block_cap=cap
-            ).collect()
-        }
+        with patch.object(dedup, "_SMALL_BLOCK_CAP", cap):
+            got = {
+                (r.id_a, r.id_b): r.jaccard_sim
+                for r in set_similarity_join(df, "doc_id", "grams", t).collect()
+            }
         assert got.keys() == model.keys(), (cap, t, texts)
         for k in got:
             assert abs(got[k] - model[k]) < 1e-12

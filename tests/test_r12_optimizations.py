@@ -117,22 +117,6 @@ def test_triangle_count_and_clustering_input_canonical_identity(spark):
     ) == _rows(node_clustering(df, "item1", "item2"), *cols)
 
 
-# -- dedup_components: dedup_edges=False is value-identical -----------------
-
-
-def test_dedup_components_dedup_edges_identity_even_with_dup_pairs(spark):
-    """min-label propagation is a min over a multiset, so duplicate edges
-    cannot change any label: dedup_edges=False must equal =True even on
-    input that violates the distinct-pairs precondition."""
-    from ironbeam_spark.operators.dedup import dedup_components
-
-    rows = [(1, 2), (2, 3), (1, 2), (7, 9), (4, 5), (4, 5), (5, 6)]
-    pairs = spark.createDataFrame(rows, "id_a long, id_b long")
-    a = _rows(dedup_components(pairs, dedup_edges=True), "node", "component")
-    b = _rows(dedup_components(pairs, dedup_edges=False), "node", "component")
-    assert a == b
-
-
 # -- ANN: the cell equi-join emits unique pairs (distinct was a no-op) ------
 
 

@@ -70,24 +70,27 @@ def test_set_similarity_join_survives_cache_release(spark):
     release_all_caches()
 
 
-def test_set_similarity_search_survives_cache_release(spark):
+def test_set_similarity_search_survives_cache_release(spark, monkeypatch):
+    from ironbeam_spark.operators import dedup
+
     g = _docs(spark).select("doc_id", char_ngrams("body", 4).alias("grams"))
     q = g.where(F.col("doc_id") < 6)
-    for strategy in ("broadcast", "prefix"):
+    # the query-token cap routes the search: any query side fits under
+    # 2**62 (broadcast plan), none fits under -1 (prefix plan)
+    for route, cap in (("broadcast", 1 << 62), ("prefix", -1)):
+        monkeypatch.setattr(dedup, "_BROADCAST_TOKEN_CAP", cap)
         ref = sorted(
             (r.query_id, r.corpus_id, round(r.jaccard_sim, 12))
-            for r in set_similarity_search(
-                q, g, 0.3, "doc_id", "grams", strategy=strategy
-            ).collect()
+            for r in set_similarity_search(q, g, 0.3, "doc_id", "grams").collect()
         )
         release_all_caches()
-        out = set_similarity_search(q, g, 0.3, "doc_id", "grams", strategy=strategy)
+        out = set_similarity_search(q, g, 0.3, "doc_id", "grams")
         release_all_caches()
         got = sorted(
             (r.query_id, r.corpus_id, round(r.jaccard_sim, 12))
             for r in out.collect()
         )
-        assert got == ref and len(ref) > 0, strategy
+        assert got == ref and len(ref) > 0, route
         release_all_caches()
 
 

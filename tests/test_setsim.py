@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from ironbeam_spark.operators import dedup
 from ironbeam_spark.operators.dedup import (
     char_ngrams,
     jaccard,
@@ -36,7 +37,7 @@ def _all_pairs(g, threshold):
     )
 
 
-def test_prefix_filter_equals_all_pairs(spark):
+def test_prefix_filter_equals_all_pairs(spark, monkeypatch):
     """The zero-false-negative guarantee, empirically: set_similarity_join
     output == the quadratic all-pairs formulation, pair for pair, at several
     thresholds (including ones that don't divide set sizes evenly)."""
@@ -49,11 +50,11 @@ def test_prefix_filter_equals_all_pairs(spark):
         # the default cap routes these small blocks down the direct path —
         # both must equal the all-pairs reference
         for cap in (0, 512):
+            monkeypatch.setattr(dedup, "_SMALL_BLOCK_CAP", cap)
             fast = {
                 (r.id_a, r.id_b): r.jaccard_sim
                 for r in set_similarity_join(
-                    g, "doc_id", "grams", t, block_cols=("lang", "source"),
-                    small_block_cap=cap,
+                    g, "doc_id", "grams", t, block_cols=("lang", "source")
                 ).collect()
             }
             assert fast.keys() == slow.keys(), (
@@ -88,7 +89,7 @@ def test_prefix_filter_prunes_skewed_block(spark):
     assert expected <= found, expected - found
 
 
-def test_setsim_ids_unique_only_within_block(spark):
+def test_setsim_ids_unique_only_within_block(spark, monkeypatch):
     """ids repeating across blocks must not cross-match in the verify stage:
     the verify join carries the block columns (ADVICE r3).  Fixture: the
     SAME ids (1, 2) in two blocks, with cross-block set combinations that
@@ -104,10 +105,11 @@ def test_setsim_ids_unique_only_within_block(spark):
     df = spark.createDataFrame(rows, "blk string, id long, s array<long>")
     want = sorted([(1, 2, 0.5), (1, 2, 1.0)])
     for cap in (0, 512):  # both the prefix-filter and the direct path
+        monkeypatch.setattr(dedup, "_SMALL_BLOCK_CAP", cap)
         got = sorted(
             (r.id_a, r.id_b, round(r.jaccard_sim, 9))
             for r in set_similarity_join(
-                df, "id", "s", 0.5, block_cols=("blk",), small_block_cap=cap
+                df, "id", "s", 0.5, block_cols=("blk",)
             ).collect()
         )
         assert got == want, (cap, got)
@@ -420,7 +422,7 @@ def test_global_running_sum_payload_requires_unique_order(spark):
     assert got_max == want_max
 
 
-def test_setsim_search_equals_rs_join(spark):
+def test_setsim_search_equals_rs_join(spark, monkeypatch):
     """set_similarity_search == the quadratic queries×corpus join, pair for
     pair (two-sided prefix guarantee), including with no blocking."""
     g = _docs_with_grams(spark)
@@ -443,16 +445,18 @@ def test_setsim_search_equals_rs_join(spark):
             .where(F.col("jaccard_sim") >= 0.3)
             .collect()
         }
-        for strategy in ("broadcast", "prefix"):
+        # the query-token cap routes the search: any query side fits under
+        # 2**62 (broadcast plan), none fits under -1 (prefix plan)
+        for route, cap in (("broadcast", 1 << 62), ("prefix", -1)):
+            monkeypatch.setattr(dedup, "_BROADCAST_TOKEN_CAP", cap)
             fast = {
                 (r.query_id, r.corpus_id): r.jaccard_sim
                 for r in set_similarity_search(
-                    q, c, 0.3, "doc_id", "grams", block_cols=blocks,
-                    strategy=strategy,
+                    q, c, 0.3, "doc_id", "grams", block_cols=blocks
                 ).collect()
             }
             assert fast.keys() == slow.keys(), (
-                strategy, blocks, slow.keys() ^ fast.keys())
+                route, blocks, slow.keys() ^ fast.keys())
             for k in fast:
                 assert abs(fast[k] - slow[k]) < 1e-12
 
