@@ -952,9 +952,9 @@ def set_similarity_join(
 
     Strategy is size-routed, the AQE-skew-handling idea applied to
     similarity: a tiny (broadcast) per-block row count splits blocks at
-    ``_SMALL_BLOCK_CAP`` rows.  Small blocks take the direct within-block join —
-    bounded quadratic (≤ cap²/2 pairs per block), cheapest when blocks are
-    modest because it needs no posting-list shuffles.  Large blocks — the
+    ``_SMALL_BLOCK_CAP`` rows.  Small blocks take the direct within-block
+    join — bounded quadratic (≤ cap²/2 pairs per block), cheapest when
+    blocks are modest because it needs no posting-list shuffles.  Large blocks — the
     ones where quadratic explodes at 100 TB — go through
     :func:`prefix_filter_candidates` (exact, zero false negatives, linear
     shuffles) plus a verify join.  Either path alone is correct; the router

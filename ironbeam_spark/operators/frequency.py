@@ -90,8 +90,9 @@ def approx_heavy_hitters(df: DataFrame, item_col: str, m: int = 256) -> DataFram
     The merge is ``combine_globally``'s two-level tree (the reference's
     O(log n) Rayon reduction, ``src/runner.rs:802-810``): an intermediate
     32-task merge round so no single task ever sees more than ~P/32
-    summaries, then the final single-partition merge.  MG summaries are mergeable at any fan-in (sum + trim, offsets
-    accumulate into ``err``), so the guarantee survives every level."""
+    summaries, then the final single-partition merge.  MG summaries are
+    mergeable at any fan-in (sum + trim, offsets accumulate into ``err``),
+    so the guarantee survives every level."""
     item_type = df.schema[item_col].dataType.simpleString()
     summary = combine_globally(
         df.select(item_col),
